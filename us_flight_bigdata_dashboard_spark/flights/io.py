@@ -1,11 +1,10 @@
-"""Flight pipeline sources & sinks (S1-S7).
+"""Flight pipeline sources (S1, S2, S7).
 
-The reference's per-file glob loop + chunked JDBC writes
-(src/data_cleaning.py:89-116) collapse into single declarative reads/writes:
-Spark expands the glob into one distributed scan (S1), the schema whitelist
-prunes CSV parsing (S2), and partitioned parquet writers replace 10k-row
-chunking (S3). Append mode reproduces the first-file-replace /
-rest-append protocol in one call.
+The reference's per-file glob loop (src/data_cleaning.py:89-116) collapses
+into one declarative read: Spark expands the glob into one distributed scan
+(S1) and the schema whitelist prunes CSV parsing (S2). The sinks are
+``star.write_star`` (partitioned parquet in place of 10k-row chunked JDBC
+writes, S3) and ``agg.write_cache`` (S6).
 """
 
 from __future__ import annotations
@@ -27,14 +26,6 @@ def read_raw_flights(spark: SparkSession, path_or_glob: str, has_cancelled: bool
 
         schema = T.StructType([f for f in RAW_FLIGHTS_SCHEMA.fields if f.name != "Cancelled"])
     return spark.read.option("header", True).schema(schema).csv(path_or_glob)
-
-
-def write_table(df: DataFrame, path: str, mode: str = "overwrite", partition_by: list[str] | None = None) -> None:
-    """S3: distributed parquet sink (replace/append semantics preserved)."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
 
 
 def read_cache_csv(spark: SparkSession, path: str, schema) -> DataFrame:

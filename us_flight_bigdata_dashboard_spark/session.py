@@ -20,7 +20,6 @@ from pyspark.sql import SparkSession
 def get_spark(
     app_name: str = "us_flight_bigdata_dashboard_spark",
     shuffle_partitions: int | None = None,
-    extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
 
@@ -67,9 +66,9 @@ def get_spark(
         # a JVM already exists (e.g. the driver passes us its session).
         # On a real cluster this is superseded by spark-submit's
         # --driver-memory/--executor-memory sizing. Env-overridable so a
-        # smaller host can lower it without editing code (extra_conf can't:
-        # the builder applies configs in insertion order and the JVM heap
-        # is fixed at launch).
+        # smaller host can lower it without editing code; it must be set
+        # before the first session is built, because the JVM heap is fixed
+        # at launch.
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
     )
     # Stateful-streaming state store provider. The default (HDFS-backed)
@@ -110,8 +109,6 @@ def get_spark(
                 "spark.sql.streaming.stateStore.rocksdb.maxMemoryUsageMB",
                 mem_mb,
             )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -383,7 +383,7 @@ _stage_events_bounded_dedup.__doc__ = _stage_events_bounded_dedup.__doc__ and _s
 # SINGLE-THREADED-SESSION ASSUMPTION (r11 ADVICE): _replay sets
 # spark.sql.shuffle.partitions SESSION-WIDE for the duration of the drain
 # (restored in finally). Every consumer of this module — the driver gate,
-# tools/check_oracle.py, bench.py, the pytest suite — runs queries
+# tools/check_oracle.py, the pytest suite — runs queries
 # sequentially on the session, so nothing else can observe the override.
 # If a THREADED harness ever shares the session, a concurrent batch query
 # would silently inherit the replay-sized partitioning: move the override
