@@ -366,16 +366,16 @@ def flights_csv_dir(tmp_path_factory):
 
 
 @pytest.fixture(scope="session")
-def golden_airline_cache(spark):
+def golden_airline_cache():
     from us_flight_bigdata_dashboard_spark.flights.io import read_cache_csv
     from us_flight_bigdata_dashboard_spark.flights.schemas import AIRLINE_MONTHLY_SCHEMA
 
-    return read_cache_csv(spark, os.path.join(FIXTURES_DIR, "airline_monthly_performance.csv"), AIRLINE_MONTHLY_SCHEMA)
+    return read_cache_csv(None, os.path.join(FIXTURES_DIR, "airline_monthly_performance.csv"), AIRLINE_MONTHLY_SCHEMA)
 
 
 @pytest.fixture(scope="session")
-def golden_airport_cache(spark):
+def golden_airport_cache():
     from us_flight_bigdata_dashboard_spark.flights.io import read_cache_csv
     from us_flight_bigdata_dashboard_spark.flights.schemas import AIRPORT_PERFORMANCE_SCHEMA
 
-    return read_cache_csv(spark, os.path.join(FIXTURES_DIR, "airport_performance.csv"), AIRPORT_PERFORMANCE_SCHEMA)
+    return read_cache_csv(None, os.path.join(FIXTURES_DIR, "airport_performance.csv"), AIRPORT_PERFORMANCE_SCHEMA)

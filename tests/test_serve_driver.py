@@ -1,0 +1,187 @@
+"""The serving path in the driver: the cache reader against Spark's own CSV
+reader, the ``serve`` command without a JVM, Spark's null and rounding
+semantics, and a long run of distinct filters that submits no Spark job and
+keeps no per-filter state."""
+
+from __future__ import annotations
+
+import csv
+import gc
+import json
+import os
+import shutil
+import tracemalloc
+
+import pytest
+
+from us_flight_bigdata_dashboard_spark import session
+from us_flight_bigdata_dashboard_spark.__main__ import main
+from us_flight_bigdata_dashboard_spark.flights.agg import write_cache
+from us_flight_bigdata_dashboard_spark.flights.io import read_cache_csv
+from us_flight_bigdata_dashboard_spark.flights.schemas import (
+    AIRLINE_MONTHLY_SCHEMA,
+    AIRPORT_PERFORMANCE_SCHEMA,
+)
+from us_flight_bigdata_dashboard_spark.flights.serve import (
+    _round_half_up,
+    airline_rank,
+    apply_shared_filter,
+    delay_attribution,
+    filter_options,
+    geo_rollup,
+    kpis,
+    monthly_trend,
+)
+
+from conftest import FIXTURES_DIR
+
+DEFAULT_AIRLINES = ["Alaska Airlines", "Allegiant Air", "American Airlines"]
+AIRLINE_FIXTURE = os.path.join(FIXTURES_DIR, "airline_monthly_performance.csv")
+
+
+def _write_csv(path, header, rows) -> str:
+    with open(path, "w", newline="") as f:
+        w = csv.writer(f)
+        w.writerow(header)
+        w.writerows(rows)
+    return str(path)
+
+
+def _fixture_rows():
+    with open(AIRLINE_FIXTURE, newline="") as f:
+        header, *rows = list(csv.reader(f))
+    return header, rows
+
+
+def test_cli_serve_runs_without_a_jvm(tmp_path, monkeypatch, capsys):
+    for name in ("airline_monthly_performance", "airport_performance"):
+        os.makedirs(tmp_path / name)
+        shutil.copy(os.path.join(FIXTURES_DIR, f"{name}.csv"), tmp_path / name / "part-00000.csv")
+        (tmp_path / name / "_SUCCESS").touch()
+
+    def no_jvm(*args, **kwargs):
+        raise AssertionError("serve must not start Spark")
+
+    monkeypatch.setattr(session, "get_spark", no_jvm)
+    argv = ["serve", "--cache-dir", str(tmp_path), "--months", "1", "2", "3", "--airlines", *DEFAULT_AIRLINES]
+    code = main(argv)
+    assert code == 0
+    out = json.loads(capsys.readouterr().out)
+    k = out["kpis"]
+    assert k["total_flights"] == 312974 and isinstance(k["total_flights"], int)
+    assert k["on_time_pct"] == pytest.approx(80.48943362707446, abs=5e-6)
+    assert k["cancelled_flights"] == 5986 and isinstance(k["cancelled_flights"], int)
+    ranked = [r["airline_name"] for r in out["airline_rank"]]
+    assert ranked == ["Alaska Airlines", "American Airlines", "Allegiant Air"]
+    assert [r["month"] for r in out["monthly_trend"]] == [1, 2, 3]
+    assert len(out["geo_rollup"]) == 12
+    assert all(isinstance(r["total_flights"], int) for r in out["geo_rollup"])
+
+
+def test_cache_reader_matches_spark_reader(spark, tmp_path):
+    """Output of the pipeline's cache writer: a quoted city with a comma, a
+    double Java writes in E notation, empty fields (null, also for a
+    string), next to Spark's ``_SUCCESS`` and ``.crc`` files."""
+    rows = [
+        ("Alaska Airlines", 1, "Dallas/Fort Worth, TX", 12, 12345678.5, 32.8998, -97.0403),
+        (None, 2, "Boise, ID", None, None, 43.5644, -116.2228),
+        ("Spirit Airlines", None, "", 3, 1e-9, 27.9755, -82.5332),
+    ]
+    out = str(tmp_path / "airport_performance")
+    write_cache(spark.createDataFrame(rows, AIRPORT_PERFORMANCE_SCHEMA), out)
+    names = os.listdir(out)
+    assert "_SUCCESS" in names and any(n.endswith(".crc") for n in names)
+
+    want = spark.read.option("header", True).schema(AIRPORT_PERFORMANCE_SCHEMA).csv(out).collect()
+    got = read_cache_csv(None, out, AIRPORT_PERFORMANCE_SCHEMA).collect()
+    assert got == want
+    assert got[0]["delayed_flights"] == 12345678.5 and got[2]["origin_city"] is None
+
+
+def test_cache_reader_picks_columns_by_header_name(tmp_path, golden_airline_cache):
+    header, rows = _fixture_rows()
+    order = list(reversed(range(len(header))))
+    path = _write_csv(tmp_path / "reordered.csv", [header[i] for i in order], [[r[i] for i in order] for r in rows])
+    assert read_cache_csv(None, path, AIRLINE_MONTHLY_SCHEMA).collect() == golden_airline_cache.collect()
+
+
+def test_cache_reader_names_what_is_missing(tmp_path):
+    header, rows = _fixture_rows()
+    keep = [i for i, name in enumerate(header) if name != "on_time_rate"]
+    path = _write_csv(tmp_path / "short.csv", [header[i] for i in keep], [[r[i] for i in keep] for r in rows])
+    with pytest.raises(ValueError, match="on_time_rate"):
+        read_cache_csv(None, path, AIRLINE_MONTHLY_SCHEMA)
+
+    empty = tmp_path / "airline_monthly_performance"
+    empty.mkdir()
+    (empty / "_SUCCESS").touch()
+    with pytest.raises(FileNotFoundError, match="airline_monthly_performance"):
+        read_cache_csv(None, str(empty), AIRLINE_MONTHLY_SCHEMA)
+
+
+def test_null_keys_and_empty_aggregates_follow_spark(tmp_path):
+    """Null group keys form their own group, sorted first; an aggregate over
+    no value is null; a zero flight count gives a null weighted mean."""
+    header, _ = _fixture_rows()
+    rows = [
+        ["A", 1, 10, 2.0, 5.0, 0, 1.0, 1.0, 1.0, 1.0, 0.8],
+        ["", 1, 10, 5.0, 5.0, 1, 1.0, 1.0, 1.0, 1.0, 0.5],
+        ["B", "", 10, 1.0, 5.0, 0, 1.0, "", 1.0, 1.0, 0.9],
+        ["C", 2, 0, 0.0, 0.0, 0, 0.0, 0.0, 0.0, 0.0, ""],
+    ]
+    cache = read_cache_csv(None, _write_csv(tmp_path / "nulls.csv", header, rows), AIRLINE_MONTHLY_SCHEMA)
+
+    assert filter_options(cache) == ([None, 1, 2], [None, "A", "B", "C"])
+    assert [tuple(r) for r in airline_rank(cache).collect()] == [("C", 0.0), (None, 5.0), ("A", 5.0), ("B", 5.0)]
+    assert [tuple(r) for r in airline_rank(cache, weighted=True).collect()] == [
+        ("C", None), (None, 5.0), ("A", 5.0), ("B", 5.0)
+    ]
+    trend = [tuple(r) for r in monthly_trend(cache).collect()]
+    assert trend == [(None, None, 0.9), (1, "1月", 0.65), (2, "2月", None)]
+
+    fa, _ = apply_shared_filter(cache, cache, months=[1, 2], airlines=["A", "B", "C"])
+    assert [r["airline_name"] for r in airline_rank(fa).collect()] == ["C", "A"]
+    nothing, _ = apply_shared_filter(cache, cache, months=[])
+    assert [r["minutes"] for r in delay_attribution(nothing).collect()] == [None] * 4
+    assert kpis(nothing) == {"total_flights": 0, "on_time_pct": 0.0, "delayed_flights": 0.0, "cancelled_flights": 0}
+
+
+def test_delay_rate_rounds_as_spark(spark):
+    values = [12.345, 2.675, 1.005, -2.675, 0.125, 80.48943362707446, 17.304999999, 100.0]
+    want = spark.sql("SELECT " + ", ".join(f"round({v!r}D, 2)" for v in values)).first()
+    assert [_round_half_up(v, 2) for v in values] == list(want)
+
+
+def test_many_distinct_filters_submit_no_job_and_hold_no_state(spark, golden_airline_cache, golden_airport_cache):
+    months_all, airlines_all = filter_options(golden_airline_cache)
+
+    def request(i):
+        m_mask, a_mask = i % 7 + 1, i // 7 + 1
+        months = [m for b, m in enumerate(months_all) if m_mask >> b & 1]
+        airlines = [a for b, a in enumerate(airlines_all) if a_mask >> b & 1]
+        fa, fp = apply_shared_filter(golden_airline_cache, golden_airport_cache, months=months, airlines=airlines)
+        kpis(fa)
+        for chart in (airline_rank(fa), monthly_trend(fa), delay_attribution(fa), geo_rollup(fp)):
+            chart.collect()
+
+    sc = spark.sparkContext
+    sc.setJobGroup("serve-distinct-filters", "dashboard requests")
+    try:
+        for i in range(100):
+            request(i)
+        # what the remaining requests allocate and leave alive
+        tracemalloc.start()
+        try:
+            for i in range(100, 2000):
+                request(i)
+            gc.collect()
+            growth = tracemalloc.get_traced_memory()[0]
+        finally:
+            tracemalloc.stop()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("serve-distinct-filters")) == []
+    # pandas keeps some bookkeeping (copy-on-write reference lists, pruned
+    # every few hundred entries: about 90 KB here); keeping the filtered
+    # caches of each filter would pass the bound after a few dozen filters
+    assert growth < 1024 * 1024, f"{growth} bytes retained over 1,900 distinct filters"

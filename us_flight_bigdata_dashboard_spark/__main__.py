@@ -49,11 +49,9 @@ def _cmd_serve(args) -> int:
         AIRLINE_MONTHLY_SCHEMA,
         AIRPORT_PERFORMANCE_SCHEMA,
     )
-    from us_flight_bigdata_dashboard_spark.session import get_spark
 
-    spark = get_spark("flights-serve")
-    airline = read_cache_csv(spark, f"{args.cache_dir}/airline_monthly_performance", AIRLINE_MONTHLY_SCHEMA)
-    airport = read_cache_csv(spark, f"{args.cache_dir}/airport_performance", AIRPORT_PERFORMANCE_SCHEMA)
+    airline = read_cache_csv(None, f"{args.cache_dir}/airline_monthly_performance", AIRLINE_MONTHLY_SCHEMA)
+    airport = read_cache_csv(None, f"{args.cache_dir}/airport_performance", AIRPORT_PERFORMANCE_SCHEMA)
     fa, fp = serve.apply_shared_filter(airline, airport, months=args.months, airlines=args.airlines)
     result = {
         "kpis": serve.kpis(fa),
@@ -62,7 +60,7 @@ def _cmd_serve(args) -> int:
         "delay_attribution": [r.asDict() for r in serve.delay_attribution(fa).collect()],
         "geo_rollup": [r.asDict() for r in serve.geo_rollup(fp).collect()],
     }
-    print(json.dumps(result, ensure_ascii=False, default=str))
+    print(json.dumps(result, ensure_ascii=False))
     return 0
 
 
@@ -173,7 +171,7 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--no-cancelled-column", action="store_true", help="raw data lacks the Cancelled column (use fallback)")
     p.set_defaults(fn=_cmd_pipeline)
 
-    s = sub.add_parser("serve", help="dashboard queries over the caches → JSON")
+    s = sub.add_parser("serve", help="dashboard queries over the caches → JSON (no JVM)")
     s.add_argument("--cache-dir", required=True)
     s.add_argument("--months", nargs="*", type=int, default=None)
     s.add_argument("--airlines", nargs="*", default=None)
