@@ -533,3 +533,30 @@ def test_qoi_decode_no_shuffle_between_stages(spark):
     assert p.count("MapInPandas") in (2, 4), p
     # the only exchange is the up-front repartition for worker balance
     assert count_exchanges(df) <= 1, p
+
+
+def test_star_first_refresh_builds_caches_from_the_star(spark, flights_csv_dir, tmp_path):
+    """With ``--write-star`` the caches are built from the star parquet
+    just written: no SQL execution that writes a cache scans the raw CSV.
+    Read from the final plan graphs in Spark's SQL status store."""
+    from us_flight_bigdata_dashboard_spark.__main__ import main
+
+    store = spark._jsparkSession.sharedState().statusStore()
+    first = int(store.executionsCount())
+    out = str(tmp_path / "out")
+    assert main(["pipeline", "--raw", f"{flights_csv_dir}/2025_0[1-3].csv", "--out", out, "--write-star"]) == 0
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    execs = store.executionsList(first, int(store.executionsCount()) - first)
+    cache_writes = 0
+    for i in range(execs.size()):
+        ex = execs.apply(i)
+        plan = ex.physicalPlanDescription()
+        if "InsertIntoHadoopFsRelationCommand" not in plan or not any(
+            f"{out}/{name}" in plan for name in ("airline_monthly_performance", "airport_performance")
+        ):
+            continue
+        cache_writes += 1
+        nodes = store.planGraph(ex.executionId()).allNodes()
+        names = [nodes.apply(j).name() for j in range(nodes.size())]
+        assert not any(n.startswith("Scan csv") for n in names), names
+    assert cache_writes == 2

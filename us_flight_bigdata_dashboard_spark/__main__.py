@@ -18,27 +18,18 @@ import sys
 
 
 def _cmd_pipeline(args) -> int:
-    from us_flight_bigdata_dashboard_spark.flights.agg import write_cache
-    from us_flight_bigdata_dashboard_spark.flights.pipeline import run_pipeline
-    from us_flight_bigdata_dashboard_spark.flights.star import write_star
+    from us_flight_bigdata_dashboard_spark.flights.pipeline import refresh
     from us_flight_bigdata_dashboard_spark.session import get_spark
 
-    spark = get_spark("flights-pipeline")
-    out = run_pipeline(spark, args.raw, has_cancelled=not args.no_cancelled_column)
-    if args.write_star:
-        write_star(out.star, f"{args.out}/star")
-    write_cache(out.airline_monthly, f"{args.out}/airline_monthly_performance")
-    write_cache(out.airport_perf, f"{args.out}/airport_performance")
-    print(
-        json.dumps(
-            {
-                "rows_cleaned": out.clean.count(),
-                "airline_monthly_rows": out.airline_monthly.count(),
-                "airport_perf_rows": out.airport_perf.count(),
-                "out": args.out,
-            }
-        )
+    summary = refresh(
+        get_spark("flights-pipeline"),
+        args.raw,
+        args.out,
+        has_cancelled=not args.no_cancelled_column,
+        with_star=args.write_star,
     )
+    summary["out"] = args.out
+    print(json.dumps(summary))
     return 0
 
 
@@ -167,7 +158,7 @@ def main(argv: list[str] | None = None) -> int:
     p = sub.add_parser("pipeline", help="raw CSVs → clean → star → caches")
     p.add_argument("--raw", required=True, help="CSV path/glob (e.g. data/2025_0[1-3].csv)")
     p.add_argument("--out", required=True, help="output directory for caches")
-    p.add_argument("--write-star", action="store_true", help="also materialize the star schema as parquet")
+    p.add_argument("--write-star", action="store_true", help="also materialize the star schema as parquet, and build the caches from it")
     p.add_argument("--no-cancelled-column", action="store_true", help="raw data lacks the Cancelled column (use fallback)")
     p.set_defaults(fn=_cmd_pipeline)
 

@@ -2,9 +2,11 @@
 
 Spark rendering of sql/data_modeling.sql: each CTAS becomes a DataFrame
 (or a ``saveAsTable``); MySQL B-tree indexes (sql/data_modeling.sql:78-80)
-become physical layout — the fact is partitioned by month on write, giving
-partition pruning on the reference's hottest filter; airline/origin benefit
-from parquet min-max row-group stats automatically.
+become physical layout — the fact carries the flight ``month`` and is
+partitioned by it on write, so a month filter on the wide view (which takes
+``month`` from the fact) reads only that month's files: partition pruning on
+the reference's hottest filter. Airline/origin benefit from parquet min-max
+row-group stats automatically.
 """
 
 from __future__ import annotations
@@ -66,9 +68,12 @@ def build_dim_calendar(clean: DataFrame) -> DataFrame:
 
 
 def build_fact_flights(clean: DataFrame) -> DataFrame:
-    """Fact projection with renames (P2, sql/data_modeling.sql:52-74)."""
+    """Fact projection with renames (P2, sql/data_modeling.sql:52-74), plus
+    the flight month from the same source column ``dim_calendar`` takes it
+    from: the fact's partition column, which the wide view exposes."""
     return clean.select(
         F.col("FlightDate").alias("date_key"),
+        F.col("Month").alias("month"),
         F.col("Reporting_Airline").alias("airline_code"),
         F.col("Tail_Number"),
         F.col("Flight_Number_Reporting_Airline").alias("flight_number"),
@@ -102,14 +107,12 @@ def build_star(clean: DataFrame) -> dict[str, DataFrame]:
 
 
 def write_star(star: dict[str, DataFrame], root: str) -> None:
-    """Materialize the star as parquet; fact partitioned by flight month
-    (replaces idx_flight_date with partition pruning — SURVEY.md §4)."""
+    """Materialize the star as parquet, one directory per table under
+    ``root``; the fact is partitioned by its ``month`` column
+    (``fact_flights/month=N``), replacing idx_flight_date with partition
+    pruning (SURVEY.md §4)."""
     for name, df in star.items():
         writer = df.write.mode("overwrite")
         if name == "fact_flights":
-            writer = (
-                df.withColumn("month_part", F.month("date_key"))
-                .write.mode("overwrite")
-                .partitionBy("month_part")
-            )
+            writer = writer.partitionBy("month")
         writer.parquet(f"{root}/{name}")

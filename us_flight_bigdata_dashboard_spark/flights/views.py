@@ -5,6 +5,11 @@ Fact LEFT JOINed to every dim — dim_airports twice under origin/dest aliases
 topology where no fact row ever shuffles for a join. The MySQL COLLATE
 workarounds (sql/wide_table.sql:30,32,34) are unnecessary — Spark string
 equality is binary (SURVEY.md §2.3).
+
+``month`` comes from the fact, not from dim_calendar (J4 joins the calendar
+without it): over the written star it is the fact's partition column, so a
+month filter on the view prunes fact partitions instead of reaching them
+only through the date join.
 """
 
 from __future__ import annotations
@@ -34,7 +39,7 @@ def wide_view(
         fact.join(F.broadcast(dim_airline_names), "airline_code", "left")
         .join(F.broadcast(origin), fact.origin_airport == F.col("o_code"), "left")
         .join(F.broadcast(dest), fact.dest_airport == F.col("d_code"), "left")
-        .join(F.broadcast(dim_calendar), "date_key", "left")
+        .join(F.broadcast(dim_calendar.drop("month")), "date_key", "left")
         .select(
             "date_key",
             "month",
