@@ -347,21 +347,25 @@ def gen_flights_month(rng: np.random.Generator, month: int, n: int, with_cancell
     return rows
 
 
+def write_flights_csv(path, rows) -> None:
+    """``rows`` as a CSV with a header, in the rows' key order; null is an
+    empty field."""
+    import csv
+
+    with open(path, "w", newline="") as f:
+        w = csv.DictWriter(f, fieldnames=list(rows[0].keys()))
+        w.writeheader()
+        for r in rows:
+            w.writerow({k: ("" if v is None else v) for k, v in r.items()})
+
+
 @pytest.fixture(scope="session")
 def flights_csv_dir(tmp_path_factory):
     """Three monthly CSVs (glob-able), seeded & deterministic."""
-    import csv
-
     root = tmp_path_factory.mktemp("flights_raw")
     rng = np.random.default_rng(42)
     for month in (1, 2, 3):
-        rows = gen_flights_month(rng, month, 2000)
-        path = root / f"2025_{month:02d}.csv"
-        with open(path, "w", newline="") as f:
-            w = csv.DictWriter(f, fieldnames=list(rows[0].keys()))
-            w.writeheader()
-            for r in rows:
-                w.writerow({k: ("" if v is None else v) for k, v in r.items()})
+        write_flights_csv(root / f"2025_{month:02d}.csv", gen_flights_month(rng, month, 2000))
     return str(root)
 
 

@@ -21,13 +21,7 @@ def _cmd_pipeline(args) -> int:
     from us_flight_bigdata_dashboard_spark.flights.pipeline import refresh
     from us_flight_bigdata_dashboard_spark.session import get_spark
 
-    summary = refresh(
-        get_spark("flights-pipeline"),
-        args.raw,
-        args.out,
-        has_cancelled=not args.no_cancelled_column,
-        with_star=args.write_star,
-    )
+    summary = refresh(get_spark("flights-pipeline"), args.raw, args.out, with_star=args.write_star)
     summary["out"] = args.out
     print(json.dumps(summary))
     return 0
@@ -156,10 +150,9 @@ def main(argv: list[str] | None = None) -> int:
     sub = parser.add_subparsers(dest="command", required=True)
 
     p = sub.add_parser("pipeline", help="raw CSVs → clean → star → caches")
-    p.add_argument("--raw", required=True, help="CSV path/glob (e.g. data/2025_0[1-3].csv)")
+    p.add_argument("--raw", required=True, help="CSV file or glob (e.g. data/2025_0[1-3].csv); columns are read by header name")
     p.add_argument("--out", required=True, help="output directory for caches")
     p.add_argument("--write-star", action="store_true", help="also materialize the star schema as parquet, and build the caches from it")
-    p.add_argument("--no-cancelled-column", action="store_true", help="raw data lacks the Cancelled column (use fallback)")
     p.set_defaults(fn=_cmd_pipeline)
 
     s = sub.add_parser("serve", help="dashboard queries over the caches → JSON (no JVM)")

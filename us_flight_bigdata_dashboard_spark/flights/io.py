@@ -1,8 +1,11 @@
 """Flight pipeline sources (S1, S2, S7).
 
 The reference's per-file glob loop (src/data_cleaning.py:89-116) collapses
-into one declarative read: Spark expands the glob into one distributed scan
-(S1) and the schema whitelist prunes CSV parsing (S2). The sinks are
+into one read: the glob is expanded in the driver, as the reference's loop
+does, and the matching files become one distributed scan (S1). Columns are
+picked by header name, as the reference's ``usecols`` whitelist does
+(src/data_cleaning.py:15-25), so CSV parsing is pruned to the whitelist
+whatever the file's column order or width (S2). The sinks are
 ``star.write_star`` (partitioned parquet in place of 10k-row chunked JDBC
 writes, S3) and ``agg.write_cache`` (S6).
 
@@ -15,6 +18,7 @@ without a JVM — the place ``st.cache_data`` holds them in the reference
 
 from __future__ import annotations
 
+import csv
 import glob
 import os
 
@@ -22,22 +26,35 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.csv as pacsv
 from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import types as T
 
 from us_flight_bigdata_dashboard_spark.flights.schemas import RAW_FLIGHTS_SCHEMA
 
 
-def read_raw_flights(spark: SparkSession, path_or_glob: str, has_cancelled: bool = True) -> DataFrame:
-    """S1/S2: multi-file CSV scan with explicit schema + column whitelist.
+def read_raw_flights(spark: SparkSession, path_or_glob: str) -> DataFrame:
+    """S1/S2: the raw CSVs as one scan, whitelisted columns picked by name.
 
-    ``path_or_glob`` may be a single file, a directory, or a glob like
-    ``data/2025_0[1-3].csv`` — one job either way, no per-file loop.
+    ``path_or_glob`` is a file or a glob like ``data/2025_0[1-3].csv``; it
+    is expanded here, to the matching regular files. The first file's
+    header fixes the column order and every file must repeat it (Spark
+    checks each header). Whitelisted columns get their
+    ``RAW_FLIGHTS_SCHEMA`` type, any other column is read as a string and
+    pruned from the scan. ``Cancelled`` may be absent (``clean_flights``
+    then falls back, P6). Raises ``ValueError`` naming any other column
+    the header lacks, and ``FileNotFoundError`` when no file matches.
     """
-    schema = RAW_FLIGHTS_SCHEMA
-    if not has_cancelled:
-        from pyspark.sql import types as T
-
-        schema = T.StructType([f for f in RAW_FLIGHTS_SCHEMA.fields if f.name != "Cancelled"])
-    return spark.read.option("header", True).schema(schema).csv(path_or_glob)
+    files = sorted(f for f in glob.glob(path_or_glob) if os.path.isfile(f))
+    if not files:
+        raise FileNotFoundError(f"no raw CSV file matches {path_or_glob!r}")
+    with open(files[0], newline="", encoding="utf-8") as f:
+        header = next(csv.reader(f), [])
+    types = {f.name: f.dataType for f in RAW_FLIGHTS_SCHEMA.fields}
+    missing = [n for n in types if n not in header and n != "Cancelled"]
+    if missing:
+        raise ValueError(f"raw CSV {files[0]} has no column {', '.join(map(repr, missing))} (header: {header})")
+    schema = T.StructType([T.StructField(n, types.get(n, T.StringType())) for n in header])
+    df = spark.read.option("header", True).option("enforceSchema", False).schema(schema).csv(files)
+    return df.select(*[n for n in types if n in header])
 
 
 class Table:

@@ -51,8 +51,8 @@ def _downstream(spark: SparkSession, star: dict[str, DataFrame]) -> tuple[DataFr
     return wide, airline_monthly_performance(wide), airport_performance(wide, seeds.dim_airport_coords(spark))
 
 
-def run_pipeline(spark: SparkSession, raw_csv: str, has_cancelled: bool = True) -> PipelineOutputs:
-    clean = clean_flights(read_raw_flights(spark, raw_csv, has_cancelled=has_cancelled))
+def run_pipeline(spark: SparkSession, raw_csv: str) -> PipelineOutputs:
+    clean = clean_flights(read_raw_flights(spark, raw_csv))
     star = build_star(clean)
     return PipelineOutputs(clean, star, *_downstream(spark, star))
 
@@ -74,10 +74,10 @@ def _publish(spark: SparkSession, star: dict[str, DataFrame], rows: DataFrame, o
     }
 
 
-def refresh(spark: SparkSession, raw_csv: str, out: str, has_cancelled: bool = True, with_star: bool = False) -> dict:
+def refresh(spark: SparkSession, raw_csv: str, out: str, with_star: bool = False) -> dict:
     """One full refresh into ``out``: both caches, and with ``with_star``
     the star parquet under ``out/star``. Returns the summary counts."""
-    clean = clean_flights(read_raw_flights(spark, raw_csv, has_cancelled=has_cancelled))
+    clean = clean_flights(read_raw_flights(spark, raw_csv))
     if with_star:
         root, built = f"{out}/star", build_star(clean)
         write_star(built, root)

@@ -92,19 +92,6 @@ def _step_encode(x: int, pred: int, idx: int) -> tuple[int, int, int]:
     return sign | delta, pred, idx
 
 
-def _step_decode(nib: int, pred: int, idx: int) -> tuple[int, int]:
-    """One IMA decode step: returns (new_pred, new_idx)."""
-    step = STEP_TABLE[idx]
-    delta = nib & 7
-    vpdiff = (step >> 3) + (step if delta & 4 else 0) + (
-        (step >> 1) if delta & 2 else 0
-    ) + ((step >> 2) if delta & 1 else 0)
-    pred = pred - vpdiff if nib & 8 else pred + vpdiff
-    pred = max(-32768, min(32767, pred))
-    idx = max(0, min(88, idx + INDEX_TABLE[delta]))
-    return pred, idx
-
-
 ADPCM_WRITE_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),

@@ -410,15 +410,6 @@ GROUP BY doc_id
 """
 
 
-def _sql_hex4_to_int(expr: str, start: int) -> str:
-    """Portable hex→int for the oracle: positional digit arithmetic."""
-    terms = []
-    for i in range(4):
-        digit = f"(strpos('0123456789abcdef', substr({expr}, {start + i}, 1)) - 1)"
-        terms.append(f"{digit} * {16 ** (3 - i)}")
-    return "(" + " + ".join(terms) + ")"
-
-
 def q_multimodal_meta_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-modality metadata rollup over the REAL decoders' outputs (no
     stub-derived numbers): each modality's byte-level decode is normalized

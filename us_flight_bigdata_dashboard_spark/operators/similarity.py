@@ -295,10 +295,6 @@ def _py_dot(a: list[float], b: list[float]) -> float:
     return acc
 
 
-def _py_cosine(a: list[float], b: list[float]) -> float:
-    return _py_dot(a, b) / (math.sqrt(_py_dot(a, a)) * math.sqrt(_py_dot(b, b)))
-
-
 def train_ivf_centroids(spark: SparkSession, sf_dir: str) -> list[list[float]]:
     """Seeded mini k-means for the IVF coarse quantizer: ``N_LLOYD_ITERS``
     Lloyd iterations over the deterministic sample ``vec_id <

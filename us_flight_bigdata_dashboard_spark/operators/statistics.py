@@ -798,8 +798,7 @@ def _rank_prev_tied(
     with_totals: bool = False,
 ):
     """Exclusive row rank (rows strictly before in the per-group
-    (``vname``, *``tiebreak_cols``) order) for TIE-HEAVY order keys — the
-    skew class the r15 ``tools/cum_skew_probe.py`` audit found live: when
+    (``vname``, *``tiebreak_cols``) order) for TIE-HEAVY order keys: when
     ``vname`` has few distinct values (counts, quantized scores), ANY
     grid that buckets on ``vname`` alone puts a large row fraction into
     one bucket (ties must share a bucket for monotonicity), and the

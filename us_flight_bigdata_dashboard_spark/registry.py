@@ -85,121 +85,14 @@ _MODULES = [
     evaluation,
 ]
 
-# Budget-capped graders/CI evaluate a PREFIX of the registry, so the prefix
-# is an explicit flagship block rotated each round to ACCUMULATE
-# driver-certified coverage under the 50-entry cap (VERDICT r4 ask #2).
-# Rounds 1-10 certified 384 distinct entries (CORRECTNESS_r01..r10 all
-# green, zero driver failures ever; r10 closed out the pre-r10 registry
-# at 382/382, + kendalls_w/roc_auc_exact re-certs).
-#
-# ROUND-11 ROTATION -- computed by `python tools/rotate_prefix.py` at
-# r11 start (the TOOL is the source of truth for the pool, per the r10
-# VERDICT; never hand-freeze this list without re-running it): the
-# never-certified pool is the 69 round-10 additions. This prefix takes
-# the 50 heaviest/strangest (both real-horizon replays, all four engine
-# surfaces, hyperball, resource_allocation, the BMP codec, every
-# inference/agreement entry, ...), deferring the 19 lightest
-# scalar-stat entries. The four r10-ADVICE touchees
-# (ansari_bradley_scale, jonckheere_terpstra, quade_test,
-# events_page_hinkley) are IN this prefix and get certified on the
-# fixed code live.
-#
-# ROUND-12 ROTATION (close-out) -- computed by `python tools/rotate_prefix.py`
-# (+ `--sentinels`) at r12 start, 2026-08-16; the TOOL is the source of
-# truth, never hand-freeze. Pool at r12 start: 470 registry entries, 434
-# ever-certified, 38 never-certified, 16 CERTAIN sentinels. This prefix
-# = the 34 never-certified entries that were staged before the r12
-# freeze (19 r11-deferred light entries + 15 round-11 additions) + all
-# 16 CERTAIN sentinels (entries whose function text changed after their
-# last certification; includes graph_hits, whose per-iteration
-# localCheckpoint fix landed r11 after its r10 certification, and
-# streaming_streaks_replay, an r11 watch-list mover) = EXACTLY 50
-# slots. All 35 deferred+sentinel entries were pre-cleared 35/35 under
-# PANDAS_CANON at sf0.01 on r11 end-of-round code; the 15 r11 additions
-# were 4-layer pre-cleared (sf0.001/0.01/0.1 + PANDAS_CANON +
-# vanilla-ANSI + dtype-parity) at authoring time and are matrix-green
-# in FULLMATRIX_r11.json (470/470, PANDAS_CANON); the r11 judge
-# independently re-ran 14 of the 38 green. Green here closes full
-# driver certification at 466/470.
-#
-# ROUND-13 STAGING: the never-certified pool entering r13 is 23 entries
-# = the 4 LATE round-11 additions (text_renyi2_entropy,
-# seasonal_mann_kendall, graph_katz_centrality,
-# streaming_interval_join_outer_replay -- all 4-layer pre-cleared,
-# judge-verified green under PANDAS_CANON in the r11 verdict,
-# ground-truth tested in tests/test_round11_ops.py) + the 19 ROUND-12
-# WAVE additions (brunner_munzel_test, hodges_lehmann_shift,
-# conover_squared_ranks, somers_d, calibration_ece,
-# turning_points_test, foster_stuart_records, events_seasonal_index,
-# graph_ktruss, graph_local_bridges, text_mattr, text_chi2_keyness,
-# pps_systematic_sample, multimodal_tga_decode,
-# streaming_chained_windows_replay, plus the late entries lepage_test,
-# inventory_base_stock, gwet_ac1 and classifier_confusion_metrics --
-# all 5-layer pre-cleared at
-# authoring time incl. vanilla-ANSI, brute-forced in
-# tests/test_round12_ops.py, K=16-probed in SCALE_r12.json). The r11
-# ADVICE fix to _sql_ansari_bradley's oracle (integer //) landed AFTER
-# ansari_bradley_scale certified in the r11 prefix, so expect it as a
-# CERTAIN sentinel at r13 start; graph_katz_centrality's shiftright fix
-# and odds_ratio_binning's div fix landed BEFORE their certification
-# (katz is in the pool; odds_ratio certified on fixed code in THIS
-# round's prefix). 23 + sentinels fits one 50-slot prefix, closing full
-# certification at r13. Run the tool at r13 start; do not trust this
-# comment's snapshot over its output.
-#
-# ROUND-13 ROTATION (certification close) -- computed by
-# `python tools/rotate_prefix.py` (+ `--sentinels`) at r13 start,
-# 2026-08-16; the TOOL is the source of truth, never hand-freeze. Pool
-# at r13 start: 489 registry entries, 466 ever-certified, 23
-# never-certified (the 4 r11-late + 19 r12-wave entries, exactly as
-# staged above), CERTAIN sentinels: 0. One judgment promotion:
-# ansari_bradley_scale -- its oracle helper `_sql_ansari_bradley` was
-# rewritten to integer `//` in commit 7c27faf AFTER its r11
-# certification (7691904); the sentinel check is text-level on the
-# query function and cannot see oracle-helper changes, as its own
-# docstring warns, so the tool reports it as REVIEW, and we promote it
-# here. Mandatory prefix = 23 + 1 = 24 entries; green closes full
-# driver certification at 489/489. The remaining 26 of the driver's 50
-# slots are given to ROUND-13 WAVE entries as they are authored (each
-# appended only after full 5-layer pre-clearance: sf0.001/0.01/0.1 +
-# PANDAS_CANON + vanilla-ANSI + dtype-parity + brute-force test), so
-# new entries certify in the same round instead of waiting for r14.
-# The mandatory 24 stay pinned at the top and are never displaced.
-#
-# ROUND-14 STAGING: the never-certified pool entering r14 is the 6-entry
-# ROUND-13 LATE WAVE (robust_moments_bowley, queueing_mmc_erlang,
-# brr_variance_estimate, text_vocab_gini, dunn_posthoc_test,
-# kappa_weighted -- all landed AFTER the 50-slot window froze, registry
-# positions > 50; 5-layer pre-cleared at authoring time, brute-forced in
-# tests/test_round13_ops.py tests 27-32)
-# plus whatever `python tools/rotate_prefix.py --sentinels` reports at
-# r14 start. IMPORTANT tool caveat proven this round: the sentinel check
-# is text-level on the QUERY function and cannot see ORACLE-helper
-# edits -- ansari_bradley_scale's post-certification oracle fix showed
-# as REVIEW, not CERTAIN, and was promoted by judgment. Check the round
-# diff for oracle-side changes to certified entries and promote those
-# by hand. Run the tool at r14 start; never trust this comment's
-# snapshot over its output.
-# Entries after the flagship block run in stable module order.
+# Budget-capped graders evaluate a PREFIX of the registry (at most 50
+# entries), so the entries that most need checking run first; the rest
+# follow in stable module order (``_ordered``). The prefix holds every entry
+# whose query function changed after it last passed the driver's compare
+# (CORRECTNESS_r*.json), plus two decoders whose Python workers were
+# rewritten without their query functions changing.
 _FLAGSHIP_PREFIX = [
-    # ROUND-15 rotation (optimization round 2) — computed by
-    # `python tools/rotate_prefix.py --sentinels` on the r15 tree; the
-    # TOOL is the source of truth, never hand-freeze. CORRECTNESS_r14 was
-    # 50/50 green; the never-certified pool entering r15 is EMPTY (every
-    # registry entry has been driver-certified at least once). The r15
-    # prefix is therefore pure re-certification: all 48 CERTAIN sentinels
-    # (46 entries whose query functions were edited by the r14 bucketed-
-    # window migration AFTER their last certification + 2 r14-certified
-    # entries — hosmer_lemeshow, sdr_variance_estimate — whose functions
-    # the r15 tie-split/offset-total rewires touched), plus 2 judgment
-    # promotions for the riskiest HELPER-level changes the text-level
-    # sentinel check cannot see: multimodal_flac_decode and
-    # multimodal_jpeg_decode, whose mapInPandas workers got new bit-reader/
-    # Huffman machinery in r15 (byte-identity A/B'd and matrix-green, but
-    # driver re-certification is the strongest evidence). The other two
-    # reworked codecs (pframe, gif) are covered by the same A/B + full
-    # matrix; 50 slots were the budget.
-    # --- CERTAIN sentinels (48, alphabetical) ---
+    # --- query function edited since its last check (48, alphabetical) ---
     "abc_pareto_class",
     "abc_xyz_grid",
     "anderson_darling_two",
@@ -248,7 +141,7 @@ _FLAGSHIP_PREFIX = [
     "trimmed_mean",
     "wasserstein_two_sample",
     "yuen_trimmed_ttest",
-    # --- judgment promotions: r15 codec-worker rewrites (2) ---
+    # --- decoders with rewritten workers (2) ---
     "multimodal_flac_decode",
     "multimodal_jpeg_decode",
 ]

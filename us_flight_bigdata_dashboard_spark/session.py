@@ -13,8 +13,25 @@ from a high initial value), and maxPartitionBytes keeps scan tasks ~128 MB.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+
+def default_driver_memory(meminfo: str) -> str:
+    """``spark.driver.memory`` for a host whose ``/proc/meminfo`` reads
+    ``meminfo``: half of ``MemTotal``, at most 24g, and 24g when the text
+    gives no ``MemTotal``."""
+    m = re.search(r"^MemTotal:\s+(\d+) kB$", meminfo, re.MULTILINE)
+    return f"{min(int(m.group(1)) // 2048, 24 * 1024)}m" if m else "24g"
+
+
+def _host_meminfo() -> str:
+    try:
+        with open("/proc/meminfo") as f:
+            return f.read()
+    except OSError:
+        return ""
 
 
 def get_spark(
@@ -65,11 +82,14 @@ def get_spark(
         # at JVM launch when the session is built from Python; a no-op if
         # a JVM already exists (e.g. the driver passes us its session).
         # On a real cluster this is superseded by spark-submit's
-        # --driver-memory/--executor-memory sizing. Env-overridable so a
-        # smaller host can lower it without editing code; it must be set
-        # before the first session is built, because the JVM heap is fixed
-        # at launch.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        # --driver-memory/--executor-memory sizing. The default is half of
+        # the host's memory, at most 24g; SPARK_GRAFT_DRIVER_MEM overrides
+        # it, and must be set before the first session is built, because
+        # the JVM heap is fixed at launch.
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(_host_meminfo()),
+        )
     )
     # Stateful-streaming state store provider. The default (HDFS-backed)
     # provider keeps every key's state on the executor HEAP — fine for the
