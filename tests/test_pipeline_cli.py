@@ -8,7 +8,13 @@ over that star reads one month's fact files only.
 The raw reader picks columns by header name: the same rows in BTS column
 order, with extra columns, a quoted header and a trailing empty column,
 publish the same caches; a file with no ``Cancelled`` column takes the
-``ActualElapsedTime`` fallback; and input it cannot read right fails loudly."""
+``ActualElapsedTime`` fallback; and input it cannot read right fails loudly.
+
+The caches are derived in the driver from one aggregation: every double
+equals the lazy Spark aggregates' bit for bit, on delays with up to four
+decimals. Each cache is published atomically: a reader polling during
+refreshes sees the old cache or the new one, and a first publish over
+Spark's writer layout leaves no stale file."""
 
 from __future__ import annotations
 
@@ -19,6 +25,7 @@ import json
 import os
 import re
 import shutil
+import threading
 
 import numpy as np
 import pytest
@@ -28,8 +35,10 @@ from pyspark.sql import functions as F
 
 from us_flight_bigdata_dashboard_spark.__main__ import main
 from us_flight_bigdata_dashboard_spark.flights import seeds
+from us_flight_bigdata_dashboard_spark.flights.agg import write_cache
+from us_flight_bigdata_dashboard_spark.flights.clean import DELAY_CAUSE_COLS
 from us_flight_bigdata_dashboard_spark.flights.io import read_cache_csv
-from us_flight_bigdata_dashboard_spark.flights.pipeline import run_pipeline
+from us_flight_bigdata_dashboard_spark.flights.pipeline import refresh, run_pipeline
 from us_flight_bigdata_dashboard_spark.flights.schemas import AIRLINE_MONTHLY_SCHEMA, AIRPORT_PERFORMANCE_SCHEMA
 from us_flight_bigdata_dashboard_spark.flights.views import wide_view
 
@@ -210,3 +219,104 @@ def test_mixed_header_orders_fail_rather_than_misread(flights_csv_dir, bts_csv_d
     while cause.getCause() is not None:
         cause = cause.getCause()
     assert "CSV header" in cause.getMessage()
+
+
+# doubles whose 4-decimal quantization sits on a .00005 boundary
+BOUNDARY = [0.00005, 2.00015, 12.34565, 99.99995]
+
+
+@pytest.fixture(scope="module")
+def fine_csv_dir(tmp_path_factory):
+    """Two months whose delays and causes carry 1-4 decimals, one in ten on
+    a quantization boundary, and whose carrier ``ZZ`` (about one flight in
+    twenty) has no name in ``seeds.AIRLINE_NAMES``."""
+    root = tmp_path_factory.mktemp("flights_fine")
+    rng = np.random.default_rng(11)
+
+    def fine() -> float:
+        if rng.random() < 0.1:
+            return float(rng.choice(BOUNDARY))
+        return round(float(rng.uniform(0, 90)), int(rng.integers(1, 5)))
+
+    for month in (1, 2):
+        rows = gen_flights_month(rng, month, 600)
+        for r in rows:
+            if rng.random() < 0.05:
+                r["Reporting_Airline"] = "ZZ"
+            if r["DepDelayMinutes"] is not None:
+                r["DepDelayMinutes"] = fine()
+                r.update({c: fine() for c in DELAY_CAUSE_COLS})
+        write_flights_csv(root / f"2025_{month:02d}.csv", rows)
+    return str(root)
+
+
+def _sorted_rows(rows) -> list[tuple]:
+    """``rows`` as tuples, in key order (null first)."""
+    return sorted((tuple(r) for r in rows), key=lambda t: [(v is not None, v) for v in t[:3]])
+
+
+def test_caches_equal_the_spark_aggregates_bit_for_bit(spark, fine_csv_dir, tmp_path):
+    raw = f"{fine_csv_dir}/2025_0[1-2].csv"
+    run_cli(raw, str(tmp_path))
+    lazy = run_pipeline(spark, raw)
+    got = {name: read_cache_csv(None, f"{tmp_path}/{name}", schema) for name, schema in CACHES.items()}
+    for name, df in (("airline_monthly_performance", lazy.airline_monthly), ("airport_performance", lazy.airport_perf)):
+        assert list(got[name].frame.columns) == CACHES[name].fieldNames()
+        # ``==`` on every double: no tolerance
+        assert _sorted_rows(got[name].collect()) == _sorted_rows(df.collect()), name
+    assert got["airline_monthly_performance"].frame["airline_name"].isna().sum() == 2  # ZZ, one group a month
+    assert "Dallas/Fort Worth, TX" in set(got["airport_performance"].frame["origin_city"])
+
+
+def test_first_publish_replaces_the_spark_writer_layout(spark, flights_csv_dir, raw, runs, tmp_path):
+    # Spark's layout, holding other rows: the caches of January alone
+    stale = run_pipeline(spark, f"{flights_csv_dir}/2025_01.csv")
+    write_cache(stale.airline_monthly, f"{tmp_path}/airline_monthly_performance")
+    write_cache(stale.airport_perf, f"{tmp_path}/airport_performance")
+    run_cli(raw, str(tmp_path))
+    for name in CACHES:
+        assert os.listdir(f"{tmp_path}/{name}") == ["part-00000.csv"]
+        assert _cache_rows(str(tmp_path), name).equals(_cache_rows(runs["plain"][0], name))
+
+
+def test_a_reader_during_refreshes_sees_the_old_or_the_new_cache(spark, flights_csv_dir, tmp_path):
+    """Refreshes alternate between two inputs while a thread reads both
+    caches in a loop: every read succeeds and equals one of the two
+    versions."""
+    out = str(tmp_path)
+    raws = [f"{flights_csv_dir}/2025_01.csv", f"{flights_csv_dir}/2025_0[1-3].csv"]
+    versions = {name: [] for name in CACHES}
+    for r in raws:
+        refresh(spark, r, out)
+        for name in CACHES:
+            versions[name].append(_cache_rows(out, name))
+    seen = {name: [0, 0] for name in CACHES}
+    bad: list[str] = []
+    stop = threading.Event()
+
+    def poll():
+        while not stop.is_set():
+            for name in CACHES:
+                try:
+                    rows = _cache_rows(out, name)
+                except (OSError, ValueError) as e:  # a missing or unreadable cache
+                    bad.append(f"{name}: {e!r}")
+                    continue
+                match = [i for i, v in enumerate(versions[name]) if rows.equals(v)]
+                if match:
+                    seen[name][match[0]] += 1
+                else:
+                    bad.append(f"{name}: {len(rows)} rows, neither version")
+
+    reader = threading.Thread(target=poll)
+    reader.start()
+    try:
+        for r in raws * 2:
+            refresh(spark, r, out)
+    finally:
+        stop.set()
+        reader.join(timeout=60)
+    assert not reader.is_alive()
+    assert not bad, bad[:5]
+    # the reader ran across the publishes
+    assert all(n > 0 for counts in seen.values() for n in counts), seen

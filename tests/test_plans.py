@@ -537,8 +537,13 @@ def test_qoi_decode_no_shuffle_between_stages(spark):
 
 def test_star_first_refresh_builds_caches_from_the_star(spark, flights_csv_dir, tmp_path):
     """With ``--write-star`` the caches are built from the star parquet
-    just written: no SQL execution that writes a cache scans the raw CSV.
-    Read from the final plan graphs in Spark's SQL status store."""
+    just written, in one aggregation collected to the driver: exactly one
+    SQL execution aggregates the wide view (the only plan with a join), by
+    (airline_name, month, origin_city); it scans no raw CSV; and no SQL
+    execution writes a cache. Read from the final plan graphs in Spark's
+    SQL status store."""
+    import re
+
     from us_flight_bigdata_dashboard_spark.__main__ import main
 
     store = spark._jsparkSession.sharedState().statusStore()
@@ -547,16 +552,20 @@ def test_star_first_refresh_builds_caches_from_the_star(spark, flights_csv_dir, 
     assert main(["pipeline", "--raw", f"{flights_csv_dir}/2025_0[1-3].csv", "--out", out, "--write-star"]) == 0
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10_000)
     execs = store.executionsList(first, int(store.executionsCount()) - first)
-    cache_writes = 0
+    view_aggs = []
     for i in range(execs.size()):
         ex = execs.apply(i)
         plan = ex.physicalPlanDescription()
-        if "InsertIntoHadoopFsRelationCommand" not in plan or not any(
+        assert "InsertIntoHadoopFsRelationCommand" not in plan or not any(
             f"{out}/{name}" in plan for name in ("airline_monthly_performance", "airport_performance")
-        ):
-            continue
-        cache_writes += 1
+        ), plan
         nodes = store.planGraph(ex.executionId()).allNodes()
-        names = [nodes.apply(j).name() for j in range(nodes.size())]
-        assert not any(n.startswith("Scan csv") for n in names), names
-    assert cache_writes == 2
+        graph = [(nodes.apply(j).name(), nodes.apply(j).desc()) for j in range(nodes.size())]
+        names = [name for name, _ in graph]
+        if "BroadcastHashJoin" in names and "HashAggregate" in names:
+            view_aggs.append((names, [desc for name, desc in graph if name == "HashAggregate"]))
+    assert len(view_aggs) == 1, view_aggs
+    names, aggregates = view_aggs[0]
+    assert not any(n.startswith("Scan csv") for n in names), names
+    keys = re.compile(r"HashAggregate\(keys=\[airline_name#\d+, month#\d+, origin_city#\d+\]")
+    assert aggregates and all(keys.match(desc) for desc in aggregates), aggregates

@@ -1,19 +1,22 @@
-"""Flight pipeline sources (S1, S2, S7).
+"""Flight pipeline sources and sinks (S1, S2, S3, S6, S7).
 
 The reference's per-file glob loop (src/data_cleaning.py:89-116) collapses
 into one read: the glob is expanded in the driver, as the reference's loop
 does, and the matching files become one distributed scan (S1). Columns are
 picked by header name, as the reference's ``usecols`` whitelist does
 (src/data_cleaning.py:15-25), so CSV parsing is pruned to the whitelist
-whatever the file's column order or width (S2). The sinks are
+whatever the file's column order or width (S2). The star's sink is
 ``star.write_star`` (partitioned parquet in place of 10k-row chunked JDBC
-writes, S3) and ``agg.write_cache`` (S6).
+writes, S3).
 
-The dashboard caches (S7) are the exception: they are bounded by airline ×
-month × city, not by base data, so ``read_cache_csv`` loads them into the
-driver with pyarrow and the serving layer answers every request there,
-without a JVM — the place ``st.cache_data`` holds them in the reference
-(src/app.py:29-46).
+The dashboard caches are the exception: they are bounded by airline ×
+month × city, not by base data, so they live in the driver at both ends.
+``write_cache_csv`` (S6) writes each one from the driver as a single CSV
+and publishes it atomically; ``agg.write_cache``, Spark's writer, is left
+only for ``pipeline.run_pipeline`` and the benchmark. ``read_cache_csv``
+(S7) loads a cache into the driver with pyarrow, and the serving layer
+answers every request there, without a JVM — the place ``st.cache_data``
+holds them in the reference (src/app.py:29-46).
 """
 
 from __future__ import annotations
@@ -84,6 +87,39 @@ _ARROW_TYPES = {"int": pa.int32(), "bigint": pa.int64(), "double": pa.float64(),
 _PANDAS_TYPES = {pa.int32(): pd.Int32Dtype(), pa.int64(): pd.Int64Dtype(), pa.float64(): pd.Float64Dtype()}
 
 
+def arrow_schema(schema: T.StructType) -> pa.Schema:
+    """The Arrow schema of a cache's Spark ``schema``."""
+    return pa.schema([(f.name, _ARROW_TYPES[f.dataType.simpleString()]) for f in schema.fields])
+
+
+# the one file a cache directory holds, and the file it is written to first
+# (the leading dot keeps it out of the reader's ``part-*`` glob)
+_CACHE_FILE = "part-00000.csv"
+_CACHE_TMP = f".{_CACHE_FILE}.tmp"
+
+
+def write_cache_csv(table: pa.Table, path: str) -> None:
+    """S6: ``table`` published as the directory ``path``'s one file,
+    ``part-00000.csv``, with a header; null is an empty field.
+
+    The file is written beside it under a dot name, then moved onto it
+    with ``os.replace``, so a concurrent ``read_cache_csv`` sees the old
+    cache or the new, never a missing, partial or mixed one. The files of
+    a Spark writer's layout are removed first, so no stale rows remain;
+    that one-time upgrade is not atomic."""
+    os.makedirs(path, exist_ok=True)
+    tmp = os.path.join(path, _CACHE_TMP)
+    with open(tmp, "w", newline="", encoding="utf-8") as f:
+        w = csv.writer(f)
+        w.writerow(table.column_names)
+        w.writerows(zip(*(column.to_pylist() for column in table.columns)))
+    for name in os.listdir(path):
+        # Spark's layout: its own part files, the _SUCCESS marker, checksums
+        if (name.startswith("part-") and name != _CACHE_FILE) or name == "_SUCCESS" or name.endswith(".crc"):
+            os.remove(os.path.join(path, name))
+    os.replace(tmp, os.path.join(path, _CACHE_FILE))
+
+
 def _cache_files(path: str) -> list[str]:
     """``path`` itself, or the ``part-*`` files of a cache writer's output
     directory (Spark's ``_SUCCESS`` marker and ``.crc`` checksums skipped)."""
@@ -102,7 +138,7 @@ def _read_cache_file(path: str, schema) -> pa.Table:
     table = pacsv.read_csv(
         path,
         convert_options=pacsv.ConvertOptions(
-            column_types={f.name: _ARROW_TYPES[f.dataType.simpleString()] for f in schema.fields},
+            column_types=arrow_schema(schema),
             # as Spark reads a CSV: only an empty field is null
             null_values=[""],
             strings_can_be_null=True,
@@ -117,10 +153,10 @@ def _read_cache_file(path: str, schema) -> pa.Table:
 def read_cache_csv(spark: SparkSession | None, path: str, schema) -> Table:
     """S7: one dashboard cache, read into the driver.
 
-    ``path`` is a single CSV file or a directory as ``agg.write_cache``
-    writes it. Columns are picked by header name, not position, and get
-    the types of ``schema`` (a Spark ``StructType``); an empty field reads
-    as null, as in Spark. Raises ``ValueError`` naming a column the file
+    ``path`` is a single CSV file, or a directory as ``write_cache_csv`` or
+    Spark's writer (``agg.write_cache``) lays it out. Columns are picked by
+    header name, not position, and get the types of ``schema`` (a Spark
+    ``StructType``); an empty field reads as null, as in Spark. Raises ``ValueError`` naming a column the file
     lacks, and ``FileNotFoundError`` for a directory with no part file.
 
     No Spark session is used: ``spark`` is accepted, and ignored, only

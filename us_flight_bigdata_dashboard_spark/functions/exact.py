@@ -39,8 +39,16 @@ def dsum(c: Column | str, scale: int = 4, precision: int = 28) -> Column:
     raise ``precision``/lower ``scale``, and run with
     ``spark.sql.ansi.enabled=true`` so overflow fails loudly instead.
     """
+    return decimal_sum(c, scale, precision).cast("double")
+
+
+def decimal_sum(c: Column | str, scale: int = 4, precision: int = 28) -> Column:
+    """``dsum`` before its cast to double: the exact sum of the quantized
+    addends, typed ``decimal(min(precision + 10, 38), scale)`` as Spark
+    types a decimal sum. Such sums add exactly, so partial sums can be
+    merged later, in any order, before the one cast."""
     col = F.col(c) if isinstance(c, str) else c
-    return F.sum(col.cast(f"decimal({precision},{scale})")).cast("double")
+    return F.sum(col.cast(f"decimal({precision},{scale})"))
 
 
 def davg(c: Column | str, scale: int = 4, precision: int = 28) -> Column:
