@@ -14,7 +14,12 @@ The caches are derived in the driver from one aggregation: every double
 equals the lazy Spark aggregates' bit for bit, on delays with up to four
 decimals. Each cache is published atomically: a reader polling during
 refreshes sees the old cache or the new one, and a first publish over
-Spark's writer layout leaves no stale file."""
+Spark's writer layout leaves no stale file.
+
+The dims are derived in the driver from the same aggregation, and written
+there: each equals ``star.build_star``'s, schema and rows, on input with two
+spellings of one airport, null codes, cities and states, non-ASCII cities
+and an unnamed carrier, and replaces a Spark-written dim cleanly."""
 
 from __future__ import annotations
 
@@ -40,6 +45,7 @@ from us_flight_bigdata_dashboard_spark.flights.clean import DELAY_CAUSE_COLS
 from us_flight_bigdata_dashboard_spark.flights.io import read_cache_csv
 from us_flight_bigdata_dashboard_spark.flights.pipeline import refresh, run_pipeline
 from us_flight_bigdata_dashboard_spark.flights.schemas import AIRLINE_MONTHLY_SCHEMA, AIRPORT_PERFORMANCE_SCHEMA
+from us_flight_bigdata_dashboard_spark.flights.star import write_star
 from us_flight_bigdata_dashboard_spark.flights.views import wide_view
 
 CACHES = {"airline_monthly_performance": AIRLINE_MONTHLY_SCHEMA, "airport_performance": AIRPORT_PERFORMANCE_SCHEMA}
@@ -320,3 +326,90 @@ def test_a_reader_during_refreshes_sees_the_old_or_the_new_cache(spark, flights_
     assert not bad, bad[:5]
     # the reader ran across the publishes
     assert all(n > 0 for counts in seen.values() for n in counts), seen
+
+
+DIMS = ("dim_airports", "dim_airlines", "dim_calendar")
+
+
+@pytest.fixture(scope="module")
+def quirky_csv_dir(tmp_path_factory):
+    """Two months with the input the dims must group as Spark does: ``DFW``
+    spelled two ways (the smaller, non-hub one wins), ``ORD`` with a null
+    dest city (null sorts first, so ``ORD`` flights get a null city),
+    ``SEA`` with a null state, ``TPA`` also spelled ``Ãampa, FL`` (which
+    sorts after ``Tampa, FL`` by code point, not before it as in a locale
+    collation), ``MSY`` only under a non-ASCII name, some null ``Origin``
+    codes, and carriers ``ZZ`` (no name) and null."""
+    root = tmp_path_factory.mktemp("flights_quirky")
+    rng = np.random.default_rng(13)
+    for month in (1, 2):
+        rows = gen_flights_month(rng, month, 800)
+        for i, r in enumerate(rows):
+            for side in ("Origin", "Dest"):
+                code, city, state = side, f"{side}CityName", f"{side}State"
+                if r[code] == "DFW" and i % 3 == 0:
+                    r[city] = "Dallas-Fort Worth, TX"
+                elif r[code] == "SEA" and i % 5 == 0:
+                    r[state] = None
+                elif r[code] == "TPA" and i % 2 == 0:
+                    r[city] = "Ãampa, FL"
+                elif r[code] == "MSY":
+                    r[city] = "Nouvelle-Orléans, LA"
+            if r["Dest"] == "ORD" and i % 50 == 0:
+                r["DestCityName"] = None
+            if i % 97 == 0:
+                r["Origin"] = None
+            if i % 19 == 0:
+                r["Reporting_Airline"] = "ZZ" if i % 2 else None
+        write_flights_csv(root / f"2025_{month:02d}.csv", rows)
+    return str(root)
+
+
+def _null_first(row) -> list:
+    return [(v is not None, v) for v in row]
+
+
+@pytest.mark.parametrize("flags", [(), ("--write-star",)], ids=["plain", "star"])
+def test_driver_dims_and_caches_equal_sparks(spark, quirky_csv_dir, tmp_path, flags):
+    raw = f"{quirky_csv_dir}/2025_0[1-2].csv"
+    summary = run_cli(raw, str(tmp_path), *flags)
+    lazy = run_pipeline(spark, raw)
+    assert summary["rows_cleaned"] == lazy.clean.count() == 1600
+    got = {name: read_cache_csv(None, f"{tmp_path}/{name}", schema) for name, schema in CACHES.items()}
+    for name, df in (("airline_monthly_performance", lazy.airline_monthly), ("airport_performance", lazy.airport_perf)):
+        assert _sorted_rows(got[name].collect()) == _sorted_rows(df.collect()), name
+    cities = set(got["airport_performance"].frame["origin_city"])
+    # ORD's null dest city wins its min, DFW's other spelling is not a hub
+    assert "Chicago, IL" not in cities and "Dallas/Fort Worth, TX" not in cities and "Atlanta, GA" in cities
+    if not flags:
+        assert not os.path.exists(f"{tmp_path}/star")
+        return
+    for name in DIMS:
+        dim, want = spark.read.parquet(f"{tmp_path}/star/{name}"), lazy.star[name]
+        assert [(f.name, f.dataType) for f in dim.schema] == [(f.name, f.dataType) for f in want.schema], name
+        # as Spark reads back a dim it wrote
+        assert all(f.nullable for f in dim.schema), name
+        assert sorted(map(tuple, dim.collect()), key=_null_first) == sorted(map(tuple, want.collect()), key=_null_first)
+    assert spark.read.parquet(f"{tmp_path}/star/dim_calendar").collect() == lazy.star["dim_calendar"].collect()
+    airports = {r.airport_code: (r.city_name, r.state_code) for r in spark.read.parquet(f"{tmp_path}/star/dim_airports").collect()}
+    assert airports["DFW"] == ("Dallas-Fort Worth, TX", "TX") and airports["ORD"] == (None, "IL")
+    assert airports["SEA"] == ("Seattle, WA", None) and airports["TPA"] == ("Tampa, FL", "FL")
+    assert airports["MSY"] == ("Nouvelle-Orléans, LA", "LA") and None in airports
+    airlines = {r.airline_code for r in spark.read.parquet(f"{tmp_path}/star/dim_airlines").collect()}
+    assert {"ZZ", None} <= airlines
+
+
+def test_dims_replace_the_spark_writer_layout(spark, flights_csv_dir, raw, tmp_path):
+    # Spark's layout, holding other rows: the star of January alone
+    write_star(run_pipeline(spark, f"{flights_csv_dir}/2025_01.csv").star, f"{tmp_path}/star")
+    for name in DIMS:
+        files = os.listdir(f"{tmp_path}/star/{name}")
+        assert "_SUCCESS" in files and any(f.endswith(".crc") for f in files)
+        assert any(re.fullmatch(r"part-.*-c000\.snappy\.parquet", f) for f in files)
+    run_cli(raw, str(tmp_path), "--write-star")
+    star = run_pipeline(spark, raw).star
+    for name in DIMS:
+        assert os.listdir(f"{tmp_path}/star/{name}") == ["part-00000.parquet"]
+        got = spark.read.parquet(f"{tmp_path}/star/{name}").collect()
+        assert sorted(map(tuple, got), key=_null_first) == sorted(map(tuple, star[name].collect()), key=_null_first)
+    assert spark.read.parquet(f"{tmp_path}/star/dim_calendar").count() == 90

@@ -535,15 +535,13 @@ def test_qoi_decode_no_shuffle_between_stages(spark):
     assert count_exchanges(df) <= 1, p
 
 
-def test_star_first_refresh_builds_caches_from_the_star(spark, flights_csv_dir, tmp_path):
-    """With ``--write-star`` the caches are built from the star parquet
-    just written, in one aggregation collected to the driver: exactly one
-    SQL execution aggregates the wide view (the only plan with a join), by
-    (airline_name, month, origin_city); it scans no raw CSV; and no SQL
-    execution writes a cache. Read from the final plan graphs in Spark's
-    SQL status store."""
-    import re
-
+def test_refresh_is_one_fact_write_and_one_grouped_aggregation(spark, flights_csv_dir, tmp_path):
+    """A ``--write-star`` refresh reads the raw CSV in two SQL executions,
+    each with one ``Scan csv`` node: the fact write, and one grouping-sets
+    aggregation (an ``Expand`` node) from which the driver derives the dims
+    and both caches. No execution joins, and none writes under a dim or a
+    cache directory. Read from the final plan graphs in Spark's SQL status
+    store."""
     from us_flight_bigdata_dashboard_spark.__main__ import main
 
     store = spark._jsparkSession.sharedState().statusStore()
@@ -552,20 +550,24 @@ def test_star_first_refresh_builds_caches_from_the_star(spark, flights_csv_dir, 
     assert main(["pipeline", "--raw", f"{flights_csv_dir}/2025_0[1-3].csv", "--out", out, "--write-star"]) == 0
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10_000)
     execs = store.executionsList(first, int(store.executionsCount()) - first)
-    view_aggs = []
+    driver_written = [
+        f"{out}/{name}"
+        for name in ("airline_monthly_performance", "airport_performance", "star/dim_airports",
+                     "star/dim_airlines", "star/dim_calendar")
+    ]
+    scanning = []
     for i in range(execs.size()):
         ex = execs.apply(i)
         plan = ex.physicalPlanDescription()
-        assert "InsertIntoHadoopFsRelationCommand" not in plan or not any(
-            f"{out}/{name}" in plan for name in ("airline_monthly_performance", "airport_performance")
-        ), plan
+        assert "InsertIntoHadoopFsRelationCommand" not in plan or not any(d in plan for d in driver_written), plan
         nodes = store.planGraph(ex.executionId()).allNodes()
-        graph = [(nodes.apply(j).name(), nodes.apply(j).desc()) for j in range(nodes.size())]
-        names = [name for name, _ in graph]
-        if "BroadcastHashJoin" in names and "HashAggregate" in names:
-            view_aggs.append((names, [desc for name, desc in graph if name == "HashAggregate"]))
-    assert len(view_aggs) == 1, view_aggs
-    names, aggregates = view_aggs[0]
-    assert not any(n.startswith("Scan csv") for n in names), names
-    keys = re.compile(r"HashAggregate\(keys=\[airline_name#\d+, month#\d+, origin_city#\d+\]")
-    assert aggregates and all(keys.match(desc) for desc in aggregates), aggregates
+        names = [nodes.apply(j).name() for j in range(nodes.size())]
+        assert not any("Join" in n or n == "CartesianProduct" for n in names), names
+        scans = sum(n.startswith("Scan csv") for n in names)
+        if scans:
+            scanning.append((scans, names, plan))
+    assert [scans for scans, _, _ in scanning] == [1, 1], [names for _, names, _ in scanning]
+    (_, _, write_plan), (_, agg_names, agg_plan) = scanning
+    assert "InsertIntoHadoopFsRelationCommand" in write_plan and f"{out}/star/fact_flights" in write_plan
+    assert "InsertIntoHadoopFsRelationCommand" not in agg_plan
+    assert "Expand" in agg_names, agg_names

@@ -1,16 +1,20 @@
-"""Batch aggregation engine (E2 step B): wide view → pre-aggregated caches.
+"""Batch aggregation engine (E2 step B): cleaned flights → pre-aggregated
+caches.
 
 Replaces src/aggregate_flight_data.py wholesale. The reference builds both
 caches from one hand-rolled 200k-row chunked partial/final merge, whose
-mean-merge is broken (SURVEY.md quirk Q1). Here that merge is done exactly:
-``cache_partials`` is one Spark ``groupBy(airline_name, month,
-origin_city)`` over the wide view, carrying counts and the exact decimal
-sums of ``functions/exact.py``'s ``dsum``/``davg``, collected to the
-driver. The result is bounded by airline × month × city, so
-``cache_tables`` derives both caches from it in the driver: the airport
-cache row for row, the airline cache by adding the decimals per (airline,
-month). Each sum is converted to double once, correctly rounded, so every
-value is bit-equal to the one-aggregation-per-cache definitions below, and
+mean-merge is broken (SURVEY.md quirk Q1). Here that merge is done exactly.
+The partials (``partial_aggregates``: counts and the exact decimal sums of
+``functions/exact.py``'s ``dsum``/``davg``) are one grouping set of the
+refresh's single aggregation over the cleaned frame
+(``pipeline.grouped_pass``), per (carrier, month, origin airport, origin
+city, origin state), collected to the driver. That is bounded by the
+domain, not by base data, so ``cache_tables`` finishes in the driver: it
+keys each row as the wide view's joins would (airline name, origin city)
+and adds the decimals per (airline, month, city) for the airport cache,
+then per (airline, month) for the airline cache. Each sum is converted to
+double once, correctly rounded, so every value is bit-equal to the
+one-aggregation-per-cache definitions over the view below, and
 ``DepDelayMinutes_mean`` is the TRUE mean (documented divergence from the
 reference's chunk-sum artifact; golden tests compare that column by
 rank/tolerance only — FIXTURES.md §3).
@@ -27,10 +31,11 @@ interaction millisecond-cheap at any base-data scale.
 
 from __future__ import annotations
 
+from collections.abc import Iterable
 from decimal import Decimal, localcontext
 
 import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from us_flight_bigdata_dashboard_spark.flights import seeds
@@ -81,20 +86,45 @@ def write_cache(df: DataFrame, path: str) -> None:
     df.coalesce(1).write.mode("overwrite").option("header", True).csv(path)
 
 
-def cache_partials(wide: DataFrame) -> pa.Table:
-    """A1/A4 partials: one grouped pass over the view, in the driver.
+# the columns of ``partial_aggregates()``
+_PARTIALS = (
+    "total_flights",
+    "DepDel15_count",
+    "DepDelayMinutes_count",
+    *(f"{c}_sum" for c in _DECIMAL_SUMS),
+    "Is_Cancelled_sum",
+)
 
-    Per (airline_name, month, origin_city): the row count, the non-null
-    counts of ``DepDel15`` and ``DepDelayMinutes``, the exact
-    ``decimal(38,4)`` sum of each ``_DECIMAL_SUMS`` column, and the sum of
-    ``Is_Cancelled``."""
-    return wide.groupBy("airline_name", "month", "origin_city").agg(
+
+def partial_aggregates() -> list[Column]:
+    """A1/A4 partials, the measures of the refresh's grouped pass: the row
+    count, the non-null counts of ``DepDel15`` and ``DepDelayMinutes``, the
+    exact ``decimal(38,4)`` sum of each ``_DECIMAL_SUMS`` column, and the
+    sum of ``Is_Cancelled``."""
+    return [
         F.count(F.lit(1)).alias("total_flights"),
         F.count("DepDel15").alias("DepDel15_count"),
         F.count("DepDelayMinutes").alias("DepDelayMinutes_count"),
         *(decimal_sum(c).alias(f"{c}_sum") for c in _DECIMAL_SUMS),
         F.sum("Is_Cancelled").alias("Is_Cancelled_sum"),
-    ).toArrow()
+    ]
+
+
+def _rollup(rows: Iterable[tuple[tuple, dict]]) -> dict[tuple, dict]:
+    """``_PARTIALS`` added per key of ``(key, partials)`` pairs; a null key
+    part is a group of its own, as in Spark. Python adds, at 40 digits
+    (wider than any ``decimal(38,4)`` value), so the decimals add exactly:
+    pyarrow 16's ``group_by`` on two keys splits a null string key into
+    several groups."""
+    totals: dict[tuple, dict] = {}
+    with localcontext() as ctx:
+        ctx.prec = 40
+        for key, r in rows:
+            t = totals.setdefault(key, dict.fromkeys(_PARTIALS))
+            for c in _PARTIALS:
+                if r[c] is not None:
+                    t[c] = r[c] if t[c] is None else t[c] + r[c]
+    return totals
 
 
 def _double(d: Decimal | None) -> float | None:
@@ -110,40 +140,40 @@ def _divide(s: float | None, n: int) -> float | None:
     return None if s is None else s / n
 
 
-def cache_tables(partials: pa.Table) -> tuple[pa.Table, pa.Table]:
-    """Both caches from ``cache_partials``, in the driver:
-    ``(airline_monthly_performance, airport_performance)``, typed by
-    ``AIRLINE_MONTHLY_SCHEMA`` and ``AIRPORT_PERFORMANCE_SCHEMA``."""
-    rows = partials.to_pylist()
+def cache_tables(origin: pa.Table, dim_airports: pa.Table) -> tuple[pa.Table, pa.Table]:
+    """Both caches in the driver, ``(airline_monthly_performance,
+    airport_performance)``, typed by ``AIRLINE_MONTHLY_SCHEMA`` and
+    ``AIRPORT_PERFORMANCE_SCHEMA``.
+
+    ``origin`` holds ``partial_aggregates()`` per (``Reporting_Airline``,
+    ``Month``, ``Origin``, ...). Each row takes the wide view's keys as the
+    view's left joins give them: the carrier's name in
+    ``seeds.AIRLINE_NAMES`` and the origin code's ``dim_airports`` city,
+    null for a null or unknown code. The partials are added per (airline,
+    month, city) for the airport cache, then per (airline, month) for the
+    airline cache."""
+    names = dict(seeds.AIRLINE_NAMES)
+    cities = dict(zip(dim_airports["airport_code"].to_pylist(), dim_airports["city_name"].to_pylist()))
+    cities.pop(None, None)  # a join never matches a null code
+    by_city = _rollup(
+        ((names.get(r["Reporting_Airline"]), r["Month"], cities.get(r["Origin"])), r) for r in origin.to_pylist()
+    )
     hubs = {city: (lat, lon) for city, lat, lon in seeds.AIRPORT_COORDS}
     airport_perf = [
         {
-            "airline_name": r["airline_name"],
-            "month": r["month"],
-            "origin_city": r["origin_city"],
-            "total_flights": r["total_flights"],
-            "delayed_flights": _double(r["DepDel15_sum"]),
-            "lat": hubs[r["origin_city"]][0],
-            "lon": hubs[r["origin_city"]][1],
+            "airline_name": airline,
+            "month": month,
+            "origin_city": city,
+            "total_flights": t["total_flights"],
+            "delayed_flights": _double(t["DepDel15_sum"]),
+            "lat": hubs[city][0],
+            "lon": hubs[city][1],
         }
         # the inner join on the hub coordinates: a null or non-hub city drops
-        for r in rows if r["origin_city"] in hubs
+        for (airline, month, city), t in by_city.items() if city in hubs
     ]
-
-    # The partials rolled up per (airline_name, month), a null key a group
-    # of its own as in Spark. Python adds here: pyarrow 16's group_by on
-    # two keys splits a null string key into several groups.
-    rolled = ("DepDel15_count", "DepDelayMinutes_count", "Is_Cancelled_sum", *(f"{c}_sum" for c in _DECIMAL_SUMS))
-    totals: dict[tuple, dict] = {}
-    with localcontext() as ctx:
-        ctx.prec = 40  # wider than any decimal(38,4) value: decimals add exactly
-        for r in rows:
-            t = totals.setdefault((r["airline_name"], r["month"]), dict.fromkeys(rolled))
-            for c in rolled:
-                if r[c] is not None:
-                    t[c] = r[c] if t[c] is None else t[c] + r[c]
     airline_monthly = []
-    for (airline, month), t in totals.items():
+    for (airline, month), t in _rollup(((airline, month), t) for (airline, month, _), t in by_city.items()).items():
         sums = {c: _double(t[f"{c}_sum"]) for c in _DECIMAL_SUMS}
         late = _divide(sums["DepDel15"], t["DepDel15_count"])
         airline_monthly.append({

@@ -5,17 +5,18 @@ into one read: the glob is expanded in the driver, as the reference's loop
 does, and the matching files become one distributed scan (S1). Columns are
 picked by header name, as the reference's ``usecols`` whitelist does
 (src/data_cleaning.py:15-25), so CSV parsing is pruned to the whitelist
-whatever the file's column order or width (S2). The star's sink is
-``star.write_star`` (partitioned parquet in place of 10k-row chunked JDBC
-writes, S3).
+whatever the file's column order or width (S2).
 
-The dashboard caches are the exception: they are bounded by airline ×
-month × city, not by base data, so they live in the driver at both ends.
-``write_cache_csv`` (S6) writes each one from the driver as a single CSV
-and publishes it atomically; ``agg.write_cache``, Spark's writer, is left
-only for ``pipeline.run_pipeline`` and the benchmark. ``read_cache_csv``
-(S7) loads a cache into the driver with pyarrow, and the serving layer
-answers every request there, without a JVM — the place ``st.cache_data``
+The star's sink is split by size. The fact scales with base data, so Spark
+writes it (``star.write_star``: month-partitioned parquet in place of
+10k-row chunked JDBC writes, S3). The dims and the dashboard caches are
+bounded by the domain (airports, days, airline × month × city), so they
+live in the driver: ``write_parquet_file`` (S3) writes each dim and
+``write_cache_csv`` (S6) each cache as one file, published atomically
+through one routine, ``_publish_file``. ``agg.write_cache``, Spark's cache
+writer, is left only for ``pipeline.run_pipeline`` and the benchmark.
+``read_cache_csv`` (S7) loads a cache into the driver with pyarrow, and the
+serving layer answers every request there, without a JVM — the place ``st.cache_data``
 holds them in the reference (src/app.py:29-46).
 """
 
@@ -24,10 +25,12 @@ from __future__ import annotations
 import csv
 import glob
 import os
+from collections.abc import Callable
 
 import pandas as pd
 import pyarrow as pa
 import pyarrow.csv as pacsv
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import types as T
 
@@ -92,32 +95,43 @@ def arrow_schema(schema: T.StructType) -> pa.Schema:
     return pa.schema([(f.name, _ARROW_TYPES[f.dataType.simpleString()]) for f in schema.fields])
 
 
-# the one file a cache directory holds, and the file it is written to first
-# (the leading dot keeps it out of the reader's ``part-*`` glob)
-_CACHE_FILE = "part-00000.csv"
-_CACHE_TMP = f".{_CACHE_FILE}.tmp"
+def _publish_file(path: str, name: str, write: Callable[[str], None]) -> None:
+    """Publish the directory ``path``'s one file ``name``: ``write`` it
+    beside it under a dot name (hidden from Spark's readers and from
+    ``read_cache_csv``'s ``part-*`` glob), then move it onto ``name`` with
+    ``os.replace``, so a concurrent reader sees the old file or the new,
+    never a missing, partial or mixed one. The files of a Spark writer's
+    layout are removed first, so no stale rows remain; that one-time
+    upgrade is not atomic."""
+    os.makedirs(path, exist_ok=True)
+    tmp = os.path.join(path, f".{name}.tmp")
+    write(tmp)
+    for entry in os.listdir(path):
+        # Spark's layout: its own part files, the _SUCCESS marker, checksums
+        if (entry.startswith("part-") and entry != name) or entry == "_SUCCESS" or entry.endswith(".crc"):
+            os.remove(os.path.join(path, entry))
+    os.replace(tmp, os.path.join(path, name))
 
 
 def write_cache_csv(table: pa.Table, path: str) -> None:
-    """S6: ``table`` published as the directory ``path``'s one file,
-    ``part-00000.csv``, with a header; null is an empty field.
+    """S6: ``table`` published (``_publish_file``) as the directory
+    ``path``'s one file, ``part-00000.csv``, with a header; null is an
+    empty field."""
 
-    The file is written beside it under a dot name, then moved onto it
-    with ``os.replace``, so a concurrent ``read_cache_csv`` sees the old
-    cache or the new, never a missing, partial or mixed one. The files of
-    a Spark writer's layout are removed first, so no stale rows remain;
-    that one-time upgrade is not atomic."""
-    os.makedirs(path, exist_ok=True)
-    tmp = os.path.join(path, _CACHE_TMP)
-    with open(tmp, "w", newline="", encoding="utf-8") as f:
-        w = csv.writer(f)
-        w.writerow(table.column_names)
-        w.writerows(zip(*(column.to_pylist() for column in table.columns)))
-    for name in os.listdir(path):
-        # Spark's layout: its own part files, the _SUCCESS marker, checksums
-        if (name.startswith("part-") and name != _CACHE_FILE) or name == "_SUCCESS" or name.endswith(".crc"):
-            os.remove(os.path.join(path, name))
-    os.replace(tmp, os.path.join(path, _CACHE_FILE))
+    def write(tmp: str) -> None:
+        with open(tmp, "w", newline="", encoding="utf-8") as f:
+            w = csv.writer(f)
+            w.writerow(table.column_names)
+            w.writerows(zip(*(column.to_pylist() for column in table.columns)))
+
+    _publish_file(path, "part-00000.csv", write)
+
+
+def write_parquet_file(table: pa.Table, path: str) -> None:
+    """S3 for a star dim: ``table`` published (``_publish_file``) as the
+    directory ``path``'s one file, ``part-00000.parquet``, which
+    ``spark.read.parquet(path)`` reads with ``table``'s schema."""
+    _publish_file(path, "part-00000.parquet", lambda tmp: pq.write_table(table, tmp))
 
 
 def _cache_files(path: str) -> list[str]:

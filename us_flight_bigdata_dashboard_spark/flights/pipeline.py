@@ -4,36 +4,53 @@
 lazy DataFrames, one Catalyst plan per output: the reference definition the
 refresh is tested against.
 
-``refresh`` is what the ``pipeline`` command runs, and it is star first, in
-the order of the reference's scripts (the sql/data_modeling.sql CTAS, then
-sql/wide_table.sql on top of it). With the star written, the four star
-tables are the only outputs computed from the raw CSV: the fact and the dims
-are read back from parquet and the wide view is built on them, so a month
-filter on the view prunes the fact's ``month`` partitions. Without the
-star, the cleaned frame is persisted once and everything downstream reads
-it. Either way the caches take one Spark aggregation over the view, collected
-to the driver; both are derived and written there (``agg.cache_tables``,
-``io.write_cache_csv``). The summary counts are taken from what was
-materialised — the fact read back (or the persisted frame) and the caches as
-derived — not by re-running a lineage.
+``refresh`` is what the ``pipeline`` command runs. Everything but the fact
+is bounded by the domain (airports, days, carriers × months × cities), not
+by base data, so the refresh reads the raw CSV at most twice, as the
+reference's cleaning script loads it once and derives the rest from what it
+loaded (src/data_cleaning.py, then the sql/data_modeling.sql CTAS):
+
+1. with the star, Spark writes the fact, partitioned by ``month`` (the only
+   Spark write);
+2. one Spark aggregation over the cleaned frame, ``grouped_pass``, collects
+   the distinct source tuples behind the three dims and the caches'
+   partials to the driver;
+3. the driver derives the dims (``star.dim_tables``) and both caches
+   (``agg.cache_tables``) from it, exactly, and publishes each as one file
+   (``io.write_parquet_file``, ``io.write_cache_csv``).
+
+The wide view is not on this path: ``agg.cache_tables`` keys the partials
+as the view's joins would. The summary counts come from the same pass;
+nothing is read back.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from us_flight_bigdata_dashboard_spark.flights import seeds
 from us_flight_bigdata_dashboard_spark.flights.agg import (
     airline_monthly_performance,
     airport_performance,
-    cache_partials,
     cache_tables,
+    partial_aggregates,
 )
 from us_flight_bigdata_dashboard_spark.flights.clean import clean_flights
-from us_flight_bigdata_dashboard_spark.flights.io import read_raw_flights, write_cache_csv
-from us_flight_bigdata_dashboard_spark.flights.star import build_star, write_star
+from us_flight_bigdata_dashboard_spark.flights.io import read_raw_flights, write_cache_csv, write_parquet_file
+from us_flight_bigdata_dashboard_spark.flights.star import (
+    CALENDAR,
+    DEST_AIRPORT,
+    ORIGIN_AIRPORT,
+    build_fact_flights,
+    build_star,
+    dim_tables,
+    write_star,
+)
 from us_flight_bigdata_dashboard_spark.flights.views import register_wide_view, wide_view
 
 @dataclass
@@ -45,39 +62,46 @@ class PipelineOutputs:
     airport_perf: DataFrame
 
 
-def _downstream(spark: SparkSession, star: dict[str, DataFrame]) -> DataFrame:
-    """The wide view (registered for SQL) over ``star``'s fact and dims,
-    joined with the seed dims."""
-    wide = wide_view(
-        star["fact_flights"],
-        seeds.dim_airline_names(spark),
-        star["dim_airports"],
-        star["dim_calendar"],
-    )
-    register_wide_view(spark, wide)
-    return wide
-
-
 def run_pipeline(spark: SparkSession, raw_csv: str) -> PipelineOutputs:
     clean = clean_flights(read_raw_flights(spark, raw_csv))
     star = build_star(clean)
-    wide = _downstream(spark, star)
+    wide = wide_view(
+        star["fact_flights"], seeds.dim_airline_names(spark), star["dim_airports"], star["dim_calendar"]
+    )
+    register_wide_view(spark, wide)
     return PipelineOutputs(
         clean, star, wide, airline_monthly_performance(wide), airport_performance(wide, seeds.dim_airport_coords(spark))
     )
 
 
-def _publish(spark: SparkSession, star: dict[str, DataFrame], rows: DataFrame, out: str) -> dict:
-    """Build both caches from ``star`` in one aggregation and publish them
-    under ``out``; the row count of ``rows`` and of each cache."""
-    airline_monthly, airport_perf = cache_tables(cache_partials(_downstream(spark, star)))
-    write_cache_csv(airline_monthly, f"{out}/airline_monthly_performance")
-    write_cache_csv(airport_perf, f"{out}/airport_performance")
-    return {
-        "rows_cleaned": rows.count(),
-        "airline_monthly_rows": airline_monthly.num_rows,
-        "airport_perf_rows": airport_perf.num_rows,
-    }
+# The grouping sets of ``grouped_pass``: the origin side with the carrier and
+# month (the caches' partials, dim_airlines, dim_airports' origins), the
+# dest side (dim_airports' dests) and the calendar (dim_calendar).
+GROUPING_SETS = {
+    "origin": ("Reporting_Airline", "Month", *ORIGIN_AIRPORT),
+    "dest": tuple(DEST_AIRPORT),
+    "calendar": tuple(CALENDAR),
+}
+
+
+def grouped_pass(clean: DataFrame) -> dict[str, pa.Table]:
+    """One aggregation of ``clean`` over ``GROUPING_SETS``, collected: per
+    set, a table of its keys and ``partial_aggregates()``. The rows of each
+    set are picked by ``grouping_id()``, never by a null key, since a null
+    key is a group of its own."""
+    keys = list(dict.fromkeys(k for s in GROUPING_SETS.values() for k in s))
+    grouped = (
+        clean.groupingSets([list(s) for s in GROUPING_SETS.values()], *keys)
+        .agg(*partial_aggregates(), F.grouping_id().alias("grouping_id"))
+        .toArrow()
+    )
+    measures = [c for c in grouped.column_names if c not in keys and c != "grouping_id"]
+    tables = {}
+    for name, s in GROUPING_SETS.items():
+        # a bit per key, the first key's highest; set where the key is not grouped
+        gid = sum(1 << (len(keys) - 1 - i) for i, k in enumerate(keys) if k not in s)
+        tables[name] = grouped.filter(pc.equal(grouped["grouping_id"], gid)).select([*s, *measures])
+    return tables
 
 
 def refresh(spark: SparkSession, raw_csv: str, out: str, with_star: bool = False) -> dict:
@@ -85,17 +109,17 @@ def refresh(spark: SparkSession, raw_csv: str, out: str, with_star: bool = False
     the star parquet under ``out/star``. Returns the summary counts."""
     clean = clean_flights(read_raw_flights(spark, raw_csv))
     if with_star:
-        root, built = f"{out}/star", build_star(clean)
-        write_star(built, root)
-        # the tables the wide view reads, with the schemas just written (no
-        # schema-inference job)
-        star = {
-            name: spark.read.schema(built[name].schema).parquet(f"{root}/{name}")
-            for name in ("fact_flights", "dim_airports", "dim_calendar")
-        }
-        return _publish(spark, star, star["fact_flights"], out)
-    clean.persist()
-    try:
-        return _publish(spark, build_star(clean), clean, out)
-    finally:
-        clean.unpersist()
+        write_star({"fact_flights": build_fact_flights(clean)}, f"{out}/star")
+    groups = grouped_pass(clean)
+    dims = dim_tables(groups["origin"], groups["dest"], groups["calendar"])
+    airline_monthly, airport_perf = cache_tables(groups["origin"], dims["dim_airports"])
+    if with_star:
+        for name, table in dims.items():
+            write_parquet_file(table, f"{out}/star/{name}")
+    write_cache_csv(airline_monthly, f"{out}/airline_monthly_performance")
+    write_cache_csv(airport_perf, f"{out}/airport_performance")
+    return {
+        "rows_cleaned": pc.sum(groups["origin"]["total_flights"]).as_py() or 0,
+        "airline_monthly_rows": airline_monthly.num_rows,
+        "airport_perf_rows": airport_perf.num_rows,
+    }

@@ -7,12 +7,43 @@ partitioned by it on write, so a month filter on the wide view (which takes
 ``month`` from the fact) reads only that month's files: partition pruning on
 the reference's hottest filter. Airline/origin benefit from parquet min-max
 row-group stats automatically.
+
+The star's sink is Spark for the fact and the driver for the dims. The
+dims are bounded by the domain (airports, carriers, days), so the refresh
+does not build them with ``build_dim_*``, each a shuffle job over the raw
+scan: ``dim_tables`` derives them in the driver from the distinct source
+tuples the refresh's one grouped pass collects, row for row what
+``build_dim_*`` give and with their types; the refresh hands ``write_star``
+the fact alone. ``build_star`` remains the lazy definition
+(``pipeline.run_pipeline``, the benchmark's layer timings) that the tests
+hold the driver's dims to.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# source column -> dim column, for each side of dim_airports and for
+# dim_calendar
+ORIGIN_AIRPORT = {"Origin": "airport_code", "OriginCityName": "city_name", "OriginState": "state_code"}
+DEST_AIRPORT = {"Dest": "airport_code", "DestCityName": "city_name", "DestState": "state_code"}
+CALENDAR = {
+    "FlightDate": "date_key",
+    "Year": "year",
+    "Quarter": "quarter",
+    "Month": "month",
+    "DayofMonth": "day_of_month",
+    "DayOfWeek": "day_of_week",
+    "Is_Weekend": "is_weekend",
+}
+
+
+def _renamed(df: DataFrame, columns: dict[str, str]) -> DataFrame:
+    return df.select(*(F.col(source).alias(name) for source, name in columns.items()))
 
 
 def build_dim_airports(clean: DataFrame) -> DataFrame:
@@ -25,18 +56,8 @@ def build_dim_airports(clean: DataFrame) -> DataFrame:
     keep the lexicographically-smallest (city, state) pair per code
     (min over a struct — deterministic and row-coherent, never mixing one
     row's city with another's state)."""
-    origin = clean.select(
-        F.col("Origin").alias("airport_code"),
-        F.col("OriginCityName").alias("city_name"),
-        F.col("OriginState").alias("state_code"),
-    )
-    dest = clean.select(
-        F.col("Dest").alias("airport_code"),
-        F.col("DestCityName").alias("city_name"),
-        F.col("DestState").alias("state_code"),
-    )
     return (
-        origin.unionByName(dest)
+        _renamed(clean, ORIGIN_AIRPORT).unionByName(_renamed(clean, DEST_AIRPORT))
         .groupBy("airport_code")
         .agg(F.min(F.struct("city_name", "state_code")).alias("_attrs"))
         .select("airport_code", "_attrs.city_name", "_attrs.state_code")
@@ -52,19 +73,7 @@ def build_dim_calendar(clean: DataFrame) -> DataFrame:
     """Distinct calendar rows keyed by date (sql/data_modeling.sql:30-48);
     attributes come from source columns, not date functions — preserving the
     BTS DayOfWeek convention exactly."""
-    return (
-        clean.select(
-            F.col("FlightDate").alias("date_key"),
-            F.col("Year").alias("year"),
-            F.col("Quarter").alias("quarter"),
-            F.col("Month").alias("month"),
-            F.col("DayofMonth").alias("day_of_month"),
-            F.col("DayOfWeek").alias("day_of_week"),
-            F.col("Is_Weekend").alias("is_weekend"),
-        )
-        .distinct()
-        .orderBy("date_key")
-    )
+    return _renamed(clean, CALENDAR).distinct().orderBy("date_key")
 
 
 def build_fact_flights(clean: DataFrame) -> DataFrame:
@@ -116,3 +125,43 @@ def write_star(star: dict[str, DataFrame], root: str) -> None:
         if name == "fact_flights":
             writer = writer.partitionBy("month")
         writer.parquet(f"{root}/{name}")
+
+
+def _nulls_first(values: tuple) -> tuple:
+    """Sort key ordering tuples as Spark orders structs: field by field,
+    null first, strings by code point."""
+    return tuple((v is not None, v) for v in values)
+
+
+def _rows(table: pa.Table, columns: Iterable[str]) -> Iterable[tuple]:
+    return zip(*(table[c].to_pylist() for c in columns))
+
+
+def _dim(rows: list[tuple], source: pa.Table, columns: dict[str, str]) -> pa.Table:
+    """``rows`` of ``columns``' source values as a dim table, each column
+    renamed and typed as its source column in ``source``."""
+    fields = [pa.field(name, source.schema.field(src).type) for src, name in columns.items()]
+    values = list(zip(*rows)) or [()] * len(fields)
+    return pa.Table.from_arrays([pa.array(v, f.type) for v, f in zip(values, fields)], schema=pa.schema(fields))
+
+
+def dim_tables(origin: pa.Table, dest: pa.Table, calendar: pa.Table) -> dict[str, pa.Table]:
+    """The three dims in the driver, equal row for row to ``build_dim_*``'s
+    and typed as Spark types them, from the distinct source tuples the
+    refresh's grouped pass collects: ``origin`` holds ``Reporting_Airline``
+    and ``ORIGIN_AIRPORT``'s columns, ``dest`` ``DEST_AIRPORT``'s and
+    ``calendar`` ``CALENDAR``'s. A null code is a row of its own, as in a
+    Spark ``groupBy``; rows are in key order, null first."""
+    smallest: dict = {}  # airport code -> its smallest (city, state), as min(struct)
+    for table, side in ((origin, ORIGIN_AIRPORT), (dest, DEST_AIRPORT)):
+        for code, *attrs in _rows(table, side):
+            attrs = tuple(attrs)
+            if code not in smallest or _nulls_first(attrs) < _nulls_first(smallest[code]):
+                smallest[code] = attrs
+    airports = sorted(((code, *attrs) for code, attrs in smallest.items()), key=_nulls_first)
+    airlines = sorted({(code,) for code in origin["Reporting_Airline"].to_pylist()}, key=_nulls_first)
+    return {
+        "dim_airports": _dim(airports, origin, ORIGIN_AIRPORT),
+        "dim_airlines": _dim(airlines, origin, {"Reporting_Airline": "airline_code"}),
+        "dim_calendar": _dim(sorted(_rows(calendar, CALENDAR), key=_nulls_first), calendar, CALENDAR),
+    }
