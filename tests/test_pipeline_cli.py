@@ -85,10 +85,9 @@ def test_summary_matches_lazy_outputs(spark, raw, runs):
 
 def test_both_runs_publish_identical_cache_rows(runs):
     for name, schema in CACHES.items():
-        plain, star = (read_cache_csv(None, f"{runs[k][0]}/{name}", schema).frame for k in ("plain", "star"))
-        keys = list(plain.columns)
+        plain, star = (_cache_rows(runs[k][0], name) for k in ("plain", "star"))
         assert len(plain) > 0
-        assert plain.sort_values(keys).reset_index(drop=True).equals(star.sort_values(keys).reset_index(drop=True))
+        assert plain == star
 
 
 def test_star_layout(runs):
@@ -175,9 +174,9 @@ def bts_csv_dir(tmp_path_factory):
     return str(root)
 
 
-def _cache_rows(out: str, name: str):
-    frame = read_cache_csv(None, f"{out}/{name}", CACHES[name]).frame
-    return frame.sort_values(list(frame.columns)).reset_index(drop=True)
+def _cache_rows(out: str, name: str) -> list[tuple]:
+    """A cache's rows as tuples, sorted (null first)."""
+    return sorted(map(tuple, read_cache_csv(None, f"{out}/{name}", CACHES[name]).collect()), key=_null_first)
 
 
 @pytest.mark.parametrize("flags", [(), ("--write-star",)], ids=["plain", "star"])
@@ -185,7 +184,7 @@ def test_bts_column_order_publishes_the_same_caches(runs, bts_csv_dir, tmp_path,
     summary = run_cli(f"{bts_csv_dir}/2025_0[1-3].csv", str(tmp_path), *flags)
     assert summary == {**runs["plain"][1], "out": str(tmp_path)}
     for name in CACHES:
-        assert _cache_rows(str(tmp_path), name).equals(_cache_rows(runs["plain"][0], name))
+        assert _cache_rows(str(tmp_path), name) == _cache_rows(runs["plain"][0], name)
 
 
 def test_no_cancelled_column_takes_the_fallback(tmp_path):
@@ -196,7 +195,7 @@ def test_no_cancelled_column_takes_the_fallback(tmp_path):
     cancelled = sum(r["ActualElapsedTime"] is None for r in rows)
     assert cancelled > 0
     airline = read_cache_csv(None, f"{tmp_path}/out/airline_monthly_performance", AIRLINE_MONTHLY_SCHEMA)
-    assert int(airline.frame["Is_Cancelled_sum"].sum()) == cancelled
+    assert sum(r["Is_Cancelled_sum"] for r in airline.collect()) == cancelled
 
 
 def test_missing_required_column_is_named(tmp_path):
@@ -267,11 +266,12 @@ def test_caches_equal_the_spark_aggregates_bit_for_bit(spark, fine_csv_dir, tmp_
     lazy = run_pipeline(spark, raw)
     got = {name: read_cache_csv(None, f"{tmp_path}/{name}", schema) for name, schema in CACHES.items()}
     for name, df in (("airline_monthly_performance", lazy.airline_monthly), ("airport_performance", lazy.airport_perf)):
-        assert list(got[name].frame.columns) == CACHES[name].fieldNames()
+        assert list(got[name].collect()[0].asDict()) == CACHES[name].fieldNames()
         # ``==`` on every double: no tolerance
         assert _sorted_rows(got[name].collect()) == _sorted_rows(df.collect()), name
-    assert got["airline_monthly_performance"].frame["airline_name"].isna().sum() == 2  # ZZ, one group a month
-    assert "Dallas/Fort Worth, TX" in set(got["airport_performance"].frame["origin_city"])
+    # ZZ, one group a month
+    assert sum(r["airline_name"] is None for r in got["airline_monthly_performance"].collect()) == 2
+    assert "Dallas/Fort Worth, TX" in {r["origin_city"] for r in got["airport_performance"].collect()}
 
 
 def test_first_publish_replaces_the_spark_writer_layout(spark, flights_csv_dir, raw, runs, tmp_path):
@@ -282,7 +282,7 @@ def test_first_publish_replaces_the_spark_writer_layout(spark, flights_csv_dir, 
     run_cli(raw, str(tmp_path))
     for name in CACHES:
         assert os.listdir(f"{tmp_path}/{name}") == ["part-00000.csv"]
-        assert _cache_rows(str(tmp_path), name).equals(_cache_rows(runs["plain"][0], name))
+        assert _cache_rows(str(tmp_path), name) == _cache_rows(runs["plain"][0], name)
 
 
 def test_a_reader_during_refreshes_sees_the_old_or_the_new_cache(spark, flights_csv_dir, tmp_path):
@@ -308,7 +308,7 @@ def test_a_reader_during_refreshes_sees_the_old_or_the_new_cache(spark, flights_
                 except (OSError, ValueError) as e:  # a missing or unreadable cache
                     bad.append(f"{name}: {e!r}")
                     continue
-                match = [i for i, v in enumerate(versions[name]) if rows.equals(v)]
+                match = [i for i, v in enumerate(versions[name]) if rows == v]
                 if match:
                     seen[name][match[0]] += 1
                 else:
@@ -339,7 +339,8 @@ def quirky_csv_dir(tmp_path_factory):
     ``SEA`` with a null state, ``TPA`` also spelled ``Ãampa, FL`` (which
     sorts after ``Tampa, FL`` by code point, not before it as in a locale
     collation), ``MSY`` only under a non-ASCII name, some null ``Origin``
-    codes, and carriers ``ZZ`` (no name) and null."""
+    codes, carriers ``ZZ`` (no name) and null, and ``2025-01-15`` (a
+    Wednesday) also given ``DayOfWeek`` 7 (the smaller tuple wins)."""
     root = tmp_path_factory.mktemp("flights_quirky")
     rng = np.random.default_rng(13)
     for month in (1, 2):
@@ -361,6 +362,8 @@ def quirky_csv_dir(tmp_path_factory):
                 r["Origin"] = None
             if i % 19 == 0:
                 r["Reporting_Airline"] = "ZZ" if i % 2 else None
+            if r["FlightDate"] == "2025-01-15" and i % 2 == 0:
+                r["DayOfWeek"] = 7
         write_flights_csv(root / f"2025_{month:02d}.csv", rows)
     return str(root)
 
@@ -378,7 +381,7 @@ def test_driver_dims_and_caches_equal_sparks(spark, quirky_csv_dir, tmp_path, fl
     got = {name: read_cache_csv(None, f"{tmp_path}/{name}", schema) for name, schema in CACHES.items()}
     for name, df in (("airline_monthly_performance", lazy.airline_monthly), ("airport_performance", lazy.airport_perf)):
         assert _sorted_rows(got[name].collect()) == _sorted_rows(df.collect()), name
-    cities = set(got["airport_performance"].frame["origin_city"])
+    cities = {r["origin_city"] for r in got["airport_performance"].collect()}
     # ORD's null dest city wins its min, DFW's other spelling is not a hub
     assert "Chicago, IL" not in cities and "Dallas/Fort Worth, TX" not in cities and "Atlanta, GA" in cities
     if not flags:
@@ -390,7 +393,11 @@ def test_driver_dims_and_caches_equal_sparks(spark, quirky_csv_dir, tmp_path, fl
         # as Spark reads back a dim it wrote
         assert all(f.nullable for f in dim.schema), name
         assert sorted(map(tuple, dim.collect()), key=_null_first) == sorted(map(tuple, want.collect()), key=_null_first)
-    assert spark.read.parquet(f"{tmp_path}/star/dim_calendar").collect() == lazy.star["dim_calendar"].collect()
+    calendar = spark.read.parquet(f"{tmp_path}/star/dim_calendar").collect()
+    assert calendar == lazy.star["dim_calendar"].collect()
+    # date_key is the calendar's key: one row per date, the smaller tuple
+    assert len({r.date_key for r in calendar}) == len(calendar)
+    assert {r.date_key.isoformat(): r.day_of_week for r in calendar}["2025-01-15"] == 3
     airports = {r.airport_code: (r.city_name, r.state_code) for r in spark.read.parquet(f"{tmp_path}/star/dim_airports").collect()}
     assert airports["DFW"] == ("Dallas-Fort Worth, TX", "TX") and airports["ORD"] == (None, "IL")
     assert airports["SEA"] == ("Seattle, WA", None) and airports["TPA"] == ("Tampa, FL", "FL")

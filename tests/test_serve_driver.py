@@ -1,7 +1,7 @@
 """The serving path in the driver: the cache reader against Spark's own CSV
-reader, the ``serve`` command without a JVM, Spark's null and rounding
-semantics, and a long run of distinct filters that submits no Spark job and
-keeps no per-filter state."""
+reader, the ``serve`` command without a JVM or pandas, Spark's null,
+rounding and ``avg`` semantics, and a long run of distinct filters that
+submits no Spark job and keeps no per-filter state."""
 
 from __future__ import annotations
 
@@ -9,10 +9,14 @@ import csv
 import gc
 import json
 import os
+import random
 import shutil
+import subprocess
+import sys
 import tracemalloc
 
 import pytest
+from pyspark.sql import functions as F
 
 from us_flight_bigdata_dashboard_spark import session
 from us_flight_bigdata_dashboard_spark.__main__ import main
@@ -76,6 +80,42 @@ def test_cli_serve_runs_without_a_jvm(tmp_path, monkeypatch, capsys):
     assert [r["month"] for r in out["monthly_trend"]] == [1, 2, 3]
     assert len(out["geo_rollup"]) == 12
     assert all(isinstance(r["total_flights"], int) for r in out["geo_rollup"])
+
+
+def test_cli_serve_imports_no_pandas(tmp_path):
+    for name in ("airline_monthly_performance", "airport_performance"):
+        os.makedirs(tmp_path / name)
+        shutil.copy(os.path.join(FIXTURES_DIR, f"{name}.csv"), tmp_path / name / "part-00000.csv")
+    code = (
+        "import sys\n"
+        "from us_flight_bigdata_dashboard_spark.__main__ import main\n"
+        f"assert main(['serve', '--cache-dir', {str(tmp_path)!r}]) == 0\n"
+        "print('pandas' in sys.modules, file=sys.stderr)\n"
+    )
+    root = os.path.dirname(os.path.dirname(FIXTURES_DIR))
+    done = subprocess.run([sys.executable, "-c", code], cwd=root, capture_output=True, text=True, check=True)
+    assert json.loads(done.stdout)["kpis"]["total_flights"] == 1645503
+    assert done.stderr.strip().splitlines()[-1] == "False"
+
+
+def test_unweighted_means_equal_sparks_avg(spark, golden_airline_cache):
+    """Seeded filters over the golden airline cache: the unweighted airline
+    rank and monthly trend equal, with ``==``, Spark's ``avg`` over the same
+    file (one partition, read in file order) filtered the same way."""
+    cache = spark.read.option("header", True).schema(AIRLINE_MONTHLY_SCHEMA).csv(AIRLINE_FIXTURE)
+    months_all, airlines_all = filter_options(golden_airline_cache)
+    rng = random.Random(9)
+    for _ in range(40):
+        months = rng.sample(months_all, rng.randint(1, len(months_all)))
+        airlines = rng.sample(airlines_all, rng.randint(1, len(airlines_all)))
+        fa, _ = apply_shared_filter(golden_airline_cache, golden_airline_cache, months=months, airlines=airlines)
+        want = cache.filter(F.col("month").isin(months) & F.col("airline_name").isin(airlines))
+        for got, key, value in (
+            (airline_rank(fa), "airline_name", "DepDelayMinutes_mean"),
+            (monthly_trend(fa), "month", "on_time_rate"),
+        ):
+            spark_avg = dict(want.groupBy(key).agg(F.avg(value)).collect())
+            assert {r[0]: r[-1] for r in got.collect()} == spark_avg, (months, airlines, key)
 
 
 def test_cache_reader_matches_spark_reader(spark, tmp_path):
@@ -181,7 +221,6 @@ def test_many_distinct_filters_submit_no_job_and_hold_no_state(spark, golden_air
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert list(sc.statusTracker().getJobIdsForGroup("serve-distinct-filters")) == []
-    # pandas keeps some bookkeeping (copy-on-write reference lists, pruned
-    # every few hundred entries: about 90 KB here); keeping the filtered
-    # caches of each filter would pass the bound after a few dozen filters
+    # keeping the filtered caches of each filter would pass the bound after
+    # a few dozen filters
     assert growth < 1024 * 1024, f"{growth} bytes retained over 1,900 distinct filters"

@@ -3,10 +3,11 @@
 The HDFS-backed default keeps keyed state on the executor heap — the right
 sandbox choice, but at production scale (billions of session/dedup/EWMA
 keys) the deployment answer is the RocksDB provider + changelog
-checkpointing (see session.get_spark's SPARK_GRAFT_STATESTORE knob). This
-test proves the knob's config is valid in THIS Spark build and that a
-stateful replay returns identical results under it — provider choice must
-never change query semantics."""
+checkpointing, set on the session
+(``spark.sql.streaming.stateStore.providerClass``). This test proves that
+config is valid in THIS Spark build and that a stateful replay returns
+identical results under it — provider choice must never change query
+semantics."""
 
 from __future__ import annotations
 

@@ -152,7 +152,7 @@ def main(argv: list[str] | None = None) -> int:
     p = sub.add_parser("pipeline", help="raw CSVs → clean → star → caches")
     p.add_argument("--raw", required=True, help="CSV file or glob (e.g. data/2025_0[1-3].csv); columns are read by header name")
     p.add_argument("--out", required=True, help="output directory for caches")
-    p.add_argument("--write-star", action="store_true", help="also materialize the star schema as parquet, and build the caches from it")
+    p.add_argument("--write-star", action="store_true", help="also materialize the star schema as parquet under OUT/star")
     p.set_defaults(fn=_cmd_pipeline)
 
     s = sub.add_parser("serve", help="dashboard queries over the caches → JSON (no JVM)")

@@ -20,9 +20,10 @@ reference's chunk-sum artifact; golden tests compare that column by
 rank/tolerance only — FIXTURES.md §3).
 
 ``airline_monthly_performance`` and ``airport_performance`` are those
-definitions, as lazy Spark aggregations, and ``write_cache`` is Spark's
-writer for them. Only ``pipeline.run_pipeline`` and the benchmark's layer
-timings use them; the tests hold the driver path to them bit for bit.
+definitions, as lazy Spark aggregations that ``pipeline.run_pipeline``
+builds, and ``write_cache`` is Spark's writer for them, which only the
+tests and the benchmark's layer timings call. The refresh runs none of
+them; the tests hold the driver path to them bit for bit.
 
 The caches keep full (airline, month[, city]) dims so the serving layer can
 re-aggregate additively (A10) — the two-tier design that makes dashboard
@@ -39,7 +40,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from us_flight_bigdata_dashboard_spark.flights import seeds
-from us_flight_bigdata_dashboard_spark.flights.io import arrow_schema
+from us_flight_bigdata_dashboard_spark.flights.io import arrow_schema, grouped, spark_sum
 from us_flight_bigdata_dashboard_spark.flights.schemas import AIRLINE_MONTHLY_SCHEMA, AIRPORT_PERFORMANCE_SCHEMA
 from us_flight_bigdata_dashboard_spark.functions.exact import davg, decimal_sum, dsum
 
@@ -110,21 +111,17 @@ def partial_aggregates() -> list[Column]:
     ]
 
 
-def _rollup(rows: Iterable[tuple[tuple, dict]]) -> dict[tuple, dict]:
-    """``_PARTIALS`` added per key of ``(key, partials)`` pairs; a null key
-    part is a group of its own, as in Spark. Python adds, at 40 digits
-    (wider than any ``decimal(38,4)`` value), so the decimals add exactly:
-    pyarrow 16's ``group_by`` on two keys splits a null string key into
-    several groups."""
-    totals: dict[tuple, dict] = {}
+def _added(rows: Iterable[dict], keys: tuple[str, ...]) -> list[dict]:
+    """``_PARTIALS`` added per ``keys`` of ``rows`` with ``io.spark_sum``,
+    one dict of the keys and sums per group, in key order (``io.grouped``:
+    a null key part is a group of its own). Python adds at 40 digits, wider
+    than any ``decimal(38,4)`` value, so the decimals add exactly."""
     with localcontext() as ctx:
         ctx.prec = 40
-        for key, r in rows:
-            t = totals.setdefault(key, dict.fromkeys(_PARTIALS))
-            for c in _PARTIALS:
-                if r[c] is not None:
-                    t[c] = r[c] if t[c] is None else t[c] + r[c]
-    return totals
+        return [
+            dict(zip(keys, key)) | {c: spark_sum(r[c] for r in group) for c in _PARTIALS}
+            for key, group in grouped(rows, lambda r: tuple(r[k] for k in keys))
+        ]
 
 
 def _double(d: Decimal | None) -> float | None:
@@ -151,40 +148,36 @@ def cache_tables(origin: pa.Table, dim_airports: pa.Table) -> tuple[pa.Table, pa
     ``seeds.AIRLINE_NAMES`` and the origin code's ``dim_airports`` city,
     null for a null or unknown code. The partials are added per (airline,
     month, city) for the airport cache, then per (airline, month) for the
-    airline cache."""
+    airline cache; rows come in key order, nulls first."""
     names = dict(seeds.AIRLINE_NAMES)
     cities = dict(zip(dim_airports["airport_code"].to_pylist(), dim_airports["city_name"].to_pylist()))
     cities.pop(None, None)  # a join never matches a null code
-    by_city = _rollup(
-        ((names.get(r["Reporting_Airline"]), r["Month"], cities.get(r["Origin"])), r) for r in origin.to_pylist()
+    by_city = _added(
+        (
+            r | {
+                "airline_name": names.get(r["Reporting_Airline"]),
+                "month": r["Month"],
+                "origin_city": cities.get(r["Origin"]),
+            }
+            for r in origin.to_pylist()
+        ),
+        ("airline_name", "month", "origin_city"),
     )
-    hubs = {city: (lat, lon) for city, lat, lon in seeds.AIRPORT_COORDS}
+    hubs = {city: {"lat": lat, "lon": lon} for city, lat, lon in seeds.AIRPORT_COORDS}
     airport_perf = [
-        {
-            "airline_name": airline,
-            "month": month,
-            "origin_city": city,
-            "total_flights": t["total_flights"],
-            "delayed_flights": _double(t["DepDel15_sum"]),
-            "lat": hubs[city][0],
-            "lon": hubs[city][1],
-        }
+        t | hubs[t["origin_city"]] | {"delayed_flights": _double(t["DepDel15_sum"])}
         # the inner join on the hub coordinates: a null or non-hub city drops
-        for (airline, month, city), t in by_city.items() if city in hubs
+        for t in by_city if t["origin_city"] in hubs
     ]
     airline_monthly = []
-    for (airline, month), t in _rollup(((airline, month), t) for (airline, month, _), t in by_city.items()).items():
-        sums = {c: _double(t[f"{c}_sum"]) for c in _DECIMAL_SUMS}
-        late = _divide(sums["DepDel15"], t["DepDel15_count"])
-        airline_monthly.append({
-            "airline_name": airline,
-            "month": month,
-            "DepDel15_count": t["DepDel15_count"],
-            "DepDel15_sum": sums["DepDel15"],
-            "DepDelayMinutes_mean": _divide(sums["DepDelayMinutes"], t["DepDelayMinutes_count"]),
-            "Is_Cancelled_sum": t["Is_Cancelled_sum"],
+    for t in _added(by_city, ("airline_name", "month")):
+        sums = {f"{c}_sum": _double(t[f"{c}_sum"]) for c in _DECIMAL_SUMS}
+        late = _divide(sums["DepDel15_sum"], t["DepDel15_count"])
+        airline_monthly.append(t | sums | {
+            "DepDelayMinutes_mean": _divide(sums["DepDelayMinutes_sum"], t["DepDelayMinutes_count"]),
             "on_time_rate": None if late is None else 1.0 - late,
-        } | {f"{c}_sum": sums[c] for c in _DECIMAL_SUMS[2:]})
+        })
+    # from_pylist takes each schema's columns and leaves the other keys
     return (
         pa.Table.from_pylist(airline_monthly, schema=arrow_schema(AIRLINE_MONTHLY_SCHEMA)),
         pa.Table.from_pylist(airport_perf, schema=arrow_schema(AIRPORT_PERFORMANCE_SCHEMA)),

@@ -14,10 +14,16 @@ bounded by the domain (airports, days, airline × month × city), so they
 live in the driver: ``write_parquet_file`` (S3) writes each dim and
 ``write_cache_csv`` (S6) each cache as one file, published atomically
 through one routine, ``_publish_file``. ``agg.write_cache``, Spark's cache
-writer, is left only for ``pipeline.run_pipeline`` and the benchmark.
-``read_cache_csv`` (S7) loads a cache into the driver with pyarrow, and the
-serving layer answers every request there, without a JVM — the place ``st.cache_data``
-holds them in the reference (src/app.py:29-46).
+writer, is kept as the reference the tests and the benchmark's layer timings
+hold the driver's writer to; the refresh does not call it.
+``read_cache_csv`` (S7) loads a cache into the driver with pyarrow, as a
+``Table`` of rows, and the serving layer answers every request there, without
+a JVM — the place ``st.cache_data`` holds them in the reference
+(src/app.py:29-46).
+
+Spark's grouping rules, which the refresh and the serving layer both follow
+in the driver, live here once: ``nulls_first`` orders keys, ``grouped``
+groups rows and ``spark_sum`` adds a group's values.
 """
 
 from __future__ import annotations
@@ -25,9 +31,8 @@ from __future__ import annotations
 import csv
 import glob
 import os
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 
-import pandas as pd
 import pyarrow as pa
 import pyarrow.csv as pacsv
 import pyarrow.parquet as pq
@@ -65,29 +70,52 @@ def read_raw_flights(spark: SparkSession, path_or_glob: str) -> DataFrame:
 
 class Table:
     """A small table held in the driver: the serving layer's caches and
-    chart results. ``frame`` is a pandas frame with nullable numeric
-    dtypes, so a null stays distinct from NaN as it is in Spark;
-    ``count()`` and ``collect()`` keep the call shapes of a Spark
-    DataFrame's, with Python values and ``None`` for null."""
+    chart results. ``rows`` is a list of ``Row``, with Python values and
+    ``None`` for null; ``count()`` and ``collect()`` keep the call shapes of
+    a Spark DataFrame's."""
 
-    __slots__ = ("frame",)
+    __slots__ = ("rows",)
 
-    def __init__(self, frame: pd.DataFrame):
-        self.frame = frame
+    def __init__(self, rows: list[Row]):
+        self.rows = rows
 
     def count(self) -> int:
-        return len(self.frame)
+        return len(self.rows)
 
     def collect(self) -> list[Row]:
-        row = Row(*self.frame.columns)
-        columns = [self.frame[c].to_numpy(dtype=object, na_value=None) for c in self.frame.columns]
-        return [row(*values) for values in zip(*columns)]
+        return list(self.rows)
 
 
-# Spark's CSV types → Arrow's, and Arrow's numeric types → pandas' nullable
-# dtypes (strings stay ``object`` with ``None`` for null).
+def nulls_first(values: tuple) -> tuple:
+    """Sort key ordering tuples as Spark orders structs and grouping keys:
+    field by field, null first, strings by code point."""
+    return tuple((v is not None, v) for v in values)
+
+
+def grouped(rows: Iterable, key: Callable[..., tuple]) -> list[tuple[tuple, list]]:
+    """``rows`` grouped by the tuple ``key(row)`` as a Spark ``groupBy``
+    groups them: a null key part is a group of its own. Groups come back
+    as ``(key, rows)`` in key order, nulls first, each group's rows in
+    input order."""
+    groups: dict[tuple, list] = {}
+    for r in rows:
+        groups.setdefault(key(r), []).append(r)
+    return sorted(groups.items(), key=lambda g: nulls_first(g[0]))
+
+
+def spark_sum(values: Iterable):
+    """Spark's ``sum``: the non-null ``values`` added left to right onto 0,
+    null when there are none. A fold, not ``sum()``, which compensates
+    float sums from Python 3.12 on."""
+    total = None
+    for v in values:
+        if v is not None:
+            total = (0 if total is None else total) + v
+    return total
+
+
+# Spark's CSV types → Arrow's
 _ARROW_TYPES = {"int": pa.int32(), "bigint": pa.int64(), "double": pa.float64(), "string": pa.string()}
-_PANDAS_TYPES = {pa.int32(): pd.Int32Dtype(), pa.int64(): pd.Int64Dtype(), pa.float64(): pd.Float64Dtype()}
 
 
 def arrow_schema(schema: T.StructType) -> pa.Schema:
@@ -177,4 +205,5 @@ def read_cache_csv(spark: SparkSession | None, path: str, schema) -> Table:
     because the benchmark's serve workload passes one; pass ``None``.
     """
     table = pa.concat_tables([_read_cache_file(f, schema) for f in _cache_files(path)])
-    return Table(table.to_pandas(types_mapper=_PANDAS_TYPES.get))
+    row = Row(*table.column_names)
+    return Table([row(*values) for values in zip(*(column.to_pylist() for column in table.columns))])

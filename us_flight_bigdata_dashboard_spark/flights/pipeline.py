@@ -51,7 +51,7 @@ from us_flight_bigdata_dashboard_spark.flights.star import (
     dim_tables,
     write_star,
 )
-from us_flight_bigdata_dashboard_spark.flights.views import register_wide_view, wide_view
+from us_flight_bigdata_dashboard_spark.flights.views import wide_view
 
 @dataclass
 class PipelineOutputs:
@@ -68,7 +68,6 @@ def run_pipeline(spark: SparkSession, raw_csv: str) -> PipelineOutputs:
     wide = wide_view(
         star["fact_flights"], seeds.dim_airline_names(spark), star["dim_airports"], star["dim_calendar"]
     )
-    register_wide_view(spark, wide)
     return PipelineOutputs(
         clean, star, wide, airline_monthly_performance(wide), airport_performance(wide, seeds.dim_airport_coords(spark))
     )

@@ -27,6 +27,8 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from us_flight_bigdata_dashboard_spark.flights.io import grouped, nulls_first
+
 # source column -> dim column, for each side of dim_airports and for
 # dim_calendar
 ORIGIN_AIRPORT = {"Origin": "airport_code", "OriginCityName": "city_name", "OriginState": "state_code"}
@@ -46,22 +48,22 @@ def _renamed(df: DataFrame, columns: dict[str, str]) -> DataFrame:
     return df.select(*(F.col(source).alias(name) for source, name in columns.items()))
 
 
+def _smallest_per_key(df: DataFrame, key: str) -> DataFrame:
+    """One row per ``key``, the Spark analog of a PRIMARY KEY: the
+    smallest of the key's rows, compared field by field as a struct (nulls
+    first, strings by code point) — deterministic and row-coherent, never
+    mixing one row's values with another's."""
+    attrs = [c for c in df.columns if c != key]
+    return df.groupBy(key).agg(F.min(F.struct(*attrs)).alias("_attrs")).select(key, *(f"_attrs.{c}" for c in attrs))
+
+
 def build_dim_airports(clean: DataFrame) -> DataFrame:
     """Origin ∪ dest airport universe, deduplicating UNION (U1/U3,
-    sql/data_modeling.sql:3-16).
-
-    Uniqueness contract: exactly one row per airport_code — the Spark
-    analog of the reference's PRIMARY KEY. A code that appears with two
-    city-name spellings must not fan out fact rows in the wide view, so we
-    keep the lexicographically-smallest (city, state) pair per code
-    (min over a struct — deterministic and row-coherent, never mixing one
-    row's city with another's state)."""
-    return (
-        _renamed(clean, ORIGIN_AIRPORT).unionByName(_renamed(clean, DEST_AIRPORT))
-        .groupBy("airport_code")
-        .agg(F.min(F.struct("city_name", "state_code")).alias("_attrs"))
-        .select("airport_code", "_attrs.city_name", "_attrs.state_code")
-    )
+    sql/data_modeling.sql:3-16), one row per airport_code: a code that
+    appears with two city-name spellings must not fan out fact rows in the
+    wide view, so it keeps its smallest (city, state) pair
+    (``_smallest_per_key``)."""
+    return _smallest_per_key(_renamed(clean, ORIGIN_AIRPORT).unionByName(_renamed(clean, DEST_AIRPORT)), "airport_code")
 
 
 def build_dim_airlines(clean: DataFrame) -> DataFrame:
@@ -70,10 +72,12 @@ def build_dim_airlines(clean: DataFrame) -> DataFrame:
 
 
 def build_dim_calendar(clean: DataFrame) -> DataFrame:
-    """Distinct calendar rows keyed by date (sql/data_modeling.sql:30-48);
+    """Calendar rows keyed by date, ``date_key PK`` (sql/data_modeling.sql:30-48);
     attributes come from source columns, not date functions — preserving the
-    BTS DayOfWeek convention exactly."""
-    return _renamed(clean, CALENDAR).distinct().orderBy("date_key")
+    BTS DayOfWeek convention exactly. A date that appears with two calendar
+    tuples keeps the smallest (``_smallest_per_key``), so the wide view's
+    join on ``date_key`` never fans a flight out."""
+    return _smallest_per_key(_renamed(clean, CALENDAR), "date_key").orderBy("date_key")
 
 
 def build_fact_flights(clean: DataFrame) -> DataFrame:
@@ -127,12 +131,6 @@ def write_star(star: dict[str, DataFrame], root: str) -> None:
         writer.parquet(f"{root}/{name}")
 
 
-def _nulls_first(values: tuple) -> tuple:
-    """Sort key ordering tuples as Spark orders structs: field by field,
-    null first, strings by code point."""
-    return tuple((v is not None, v) for v in values)
-
-
 def _rows(table: pa.Table, columns: Iterable[str]) -> Iterable[tuple]:
     return zip(*(table[c].to_pylist() for c in columns))
 
@@ -145,6 +143,12 @@ def _dim(rows: list[tuple], source: pa.Table, columns: dict[str, str]) -> pa.Tab
     return pa.Table.from_arrays([pa.array(v, f.type) for v, f in zip(values, fields)], schema=pa.schema(fields))
 
 
+def _smallest_per_first(rows: Iterable[tuple]) -> list[tuple]:
+    """``_smallest_per_key`` in the driver, keyed on each tuple's first
+    value: one tuple per key, in key order, nulls first."""
+    return [min(group, key=nulls_first) for _, group in grouped(rows, lambda r: r[:1])]
+
+
 def dim_tables(origin: pa.Table, dest: pa.Table, calendar: pa.Table) -> dict[str, pa.Table]:
     """The three dims in the driver, equal row for row to ``build_dim_*``'s
     and typed as Spark types them, from the distinct source tuples the
@@ -152,16 +156,10 @@ def dim_tables(origin: pa.Table, dest: pa.Table, calendar: pa.Table) -> dict[str
     and ``ORIGIN_AIRPORT``'s columns, ``dest`` ``DEST_AIRPORT``'s and
     ``calendar`` ``CALENDAR``'s. A null code is a row of its own, as in a
     Spark ``groupBy``; rows are in key order, null first."""
-    smallest: dict = {}  # airport code -> its smallest (city, state), as min(struct)
-    for table, side in ((origin, ORIGIN_AIRPORT), (dest, DEST_AIRPORT)):
-        for code, *attrs in _rows(table, side):
-            attrs = tuple(attrs)
-            if code not in smallest or _nulls_first(attrs) < _nulls_first(smallest[code]):
-                smallest[code] = attrs
-    airports = sorted(((code, *attrs) for code, attrs in smallest.items()), key=_nulls_first)
-    airlines = sorted({(code,) for code in origin["Reporting_Airline"].to_pylist()}, key=_nulls_first)
+    airports = _smallest_per_first([*_rows(origin, ORIGIN_AIRPORT), *_rows(dest, DEST_AIRPORT)])
+    airlines = [key for key, _ in grouped(_rows(origin, ["Reporting_Airline"]), lambda r: r)]
     return {
         "dim_airports": _dim(airports, origin, ORIGIN_AIRPORT),
         "dim_airlines": _dim(airlines, origin, {"Reporting_Airline": "airline_code"}),
-        "dim_calendar": _dim(sorted(_rows(calendar, CALENDAR), key=_nulls_first), calendar, CALENDAR),
+        "dim_calendar": _dim(_smallest_per_first(_rows(calendar, CALENDAR)), calendar, CALENDAR),
     }

@@ -60,8 +60,3 @@ def wide_view(
             "LateAircraftDelay",
         )
     )
-
-
-def register_wide_view(spark, df: DataFrame) -> None:
-    """Expose as the SQL surface the reference's compute layer queries."""
-    df.createOrReplaceTempView("v_flight_performance_analysis")

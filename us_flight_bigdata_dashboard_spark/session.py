@@ -91,44 +91,6 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(_host_meminfo()),
         )
     )
-    # Stateful-streaming state store provider. The default (HDFS-backed)
-    # provider keeps every key's state on the executor HEAP — fine for the
-    # replay harness's bounded test state, but at 100 TB of keyed state
-    # (sessionization / dedup / EWMA over billions of keys) heap state
-    # causes GC stalls and OOM; the deployment answer is the RocksDB
-    # provider (off-heap, spills to local SSD) plus changelog
-    # checkpointing (uploads per-batch deltas instead of full snapshots).
-    # Env-gated rather than default because the provider is chosen at
-    # STREAMING QUERY start from session conf — flip it without code edits:
-    #   SPARK_GRAFT_STATESTORE=rocksdb
-    if os.environ.get("SPARK_GRAFT_STATESTORE", "").lower() == "rocksdb":
-        builder = builder.config(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        ).config(
-            "spark.sql.streaming.stateStore.rocksdb."
-            "changelogCheckpointing.enabled",
-            "true",
-        )
-        # Production memory discipline (r15, guide §5): by default every
-        # RocksDB instance on an executor grows its own memtables/block
-        # cache unbounded — at hundreds of state partitions per executor
-        # that is the classic streaming OOM. One env knob caps the TOTAL
-        # RocksDB memory per executor (bounded mode shares one budget
-        # across all instances). Local A/B at sf0.1 state sizes measured
-        # provider choice and cache size inside host noise (parity), so
-        # this stays deployment-only plumbing, off by default:
-        #   SPARK_GRAFT_ROCKSDB_MEM_MB=4096
-        mem_mb = os.environ.get("SPARK_GRAFT_ROCKSDB_MEM_MB")
-        if mem_mb:
-            builder = builder.config(
-                "spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage",
-                "true",
-            ).config(
-                "spark.sql.streaming.stateStore.rocksdb.maxMemoryUsageMB",
-                mem_mb,
-            )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
