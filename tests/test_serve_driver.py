@@ -1,7 +1,8 @@
 """The serving path in the driver: the cache reader against Spark's own CSV
 reader, the ``serve`` command without a JVM or pandas, Spark's null,
-rounding and ``avg`` semantics, and a long run of distinct filters that
-submits no Spark job and keeps no per-filter state."""
+rounding, ``avg`` and ``sum`` semantics, columnar charts that look no
+``Row`` field up by name, an empty cache, and a long run of distinct
+filters that submits no Spark job and keeps no per-filter state."""
 
 from __future__ import annotations
 
@@ -16,6 +17,7 @@ import sys
 import tracemalloc
 
 import pytest
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from us_flight_bigdata_dashboard_spark import session
@@ -27,6 +29,7 @@ from us_flight_bigdata_dashboard_spark.flights.schemas import (
     AIRPORT_PERFORMANCE_SCHEMA,
 )
 from us_flight_bigdata_dashboard_spark.flights.serve import (
+    CAUSES,
     _round_half_up,
     airline_rank,
     apply_shared_filter,
@@ -41,6 +44,7 @@ from conftest import FIXTURES_DIR
 
 DEFAULT_AIRLINES = ["Alaska Airlines", "Allegiant Air", "American Airlines"]
 AIRLINE_FIXTURE = os.path.join(FIXTURES_DIR, "airline_monthly_performance.csv")
+AIRPORT_FIXTURE = os.path.join(FIXTURES_DIR, "airport_performance.csv")
 
 
 def _write_csv(path, header, rows) -> str:
@@ -116,6 +120,112 @@ def test_unweighted_means_equal_sparks_avg(spark, golden_airline_cache):
         ):
             spark_avg = dict(want.groupBy(key).agg(F.avg(value)).collect())
             assert {r[0]: r[-1] for r in got.collect()} == spark_avg, (months, airlines, key)
+
+
+def _with_fractions(path, fixture, columns, rng) -> str:
+    """A copy of ``fixture`` at ``path`` whose ``columns`` carry a random
+    fraction, so that their sums depend on the order of addition."""
+    with open(fixture, newline="") as f:
+        header, *rows = list(csv.reader(f))
+    at = [header.index(c) for c in columns]
+    for r in rows:
+        for i in at:
+            r[i] = repr(float(r[i]) + rng.random()) if r[i] else r[i]
+    return _write_csv(path, header, rows)
+
+
+@pytest.mark.parametrize("fractional", [False, True], ids=["golden", "fractional"])
+def test_sums_equal_spark_sql_sum(spark, tmp_path, fractional):
+    """Seeded filters over both caches: the attribution minutes, the KPI
+    counts and the map's totals and rounded delay rate equal, with ``==``,
+    Spark SQL's ``sum`` and ``round`` over the same files (one partition
+    each, read in file order) filtered the same way. The golden caches'
+    summed columns hold whole numbers; the fractional copies make every
+    sum depend on its order of addition."""
+    airline_path, airport_path = AIRLINE_FIXTURE, AIRPORT_FIXTURE
+    if fractional:
+        rng = random.Random(3)
+        airline_sums = ("DepDel15_sum", *(col for _, col in CAUSES))
+        airline_path = _with_fractions(tmp_path / "airline.csv", AIRLINE_FIXTURE, airline_sums, rng)
+        airport_path = _with_fractions(tmp_path / "airport.csv", AIRPORT_FIXTURE, ("delayed_flights",), rng)
+
+    def read(path, schema):
+        df = spark.read.option("header", True).schema(schema).csv(path)
+        assert df.rdd.getNumPartitions() == 1
+        return df, read_cache_csv(None, path, schema)
+
+    airline, airline_cache = read(airline_path, AIRLINE_MONTHLY_SCHEMA)
+    airport, airport_cache = read(airport_path, AIRPORT_PERFORMANCE_SCHEMA)
+    sums = ["DepDel15_count", "DepDel15_sum", "Is_Cancelled_sum", *(col for _, col in CAUSES)]
+    rate = F.expr(
+        "CASE WHEN sum(total_flights) IS NULL OR sum(total_flights) = 0 OR sum(delayed_flights) IS NULL THEN 0.0D"
+        " ELSE round(sum(delayed_flights) / sum(total_flights) * 100, 2) END"
+    )
+    months_all, airlines_all = filter_options(airline_cache)
+    rng = random.Random(11)
+    for _ in range(40):
+        months = rng.sample(months_all, rng.randint(1, len(months_all)))
+        airlines = rng.sample(airlines_all, rng.randint(1, len(airlines_all)))
+        fa, fp = apply_shared_filter(airline_cache, airport_cache, months=months, airlines=airlines)
+        keep = F.col("month").isin(months) & F.col("airline_name").isin(airlines)
+        want = airline.filter(keep).agg(*(F.sum(c).alias(c) for c in sums)).first()
+        assert [r["minutes"] for r in delay_attribution(fa).collect()] == [want[col] for _, col in CAUSES]
+        got = kpis(fa)
+        assert got["total_flights"] == want["DepDel15_count"], (months, airlines)
+        assert got["delayed_flights"] == want["DepDel15_sum"], (months, airlines)
+        assert got["cancelled_flights"] == want["Is_Cancelled_sum"], (months, airlines)
+        want_geo = (
+            airport.filter(keep)
+            .groupBy("origin_city", "lat", "lon")
+            .agg(F.sum("total_flights"), F.sum("delayed_flights"), rate)
+            .collect()
+        )
+        assert sorted(map(tuple, geo_rollup(fp).collect())) == sorted(map(tuple, want_geo)), (months, airlines)
+
+
+def test_serving_looks_up_no_row_field_by_name(monkeypatch, golden_airline_cache, golden_airport_cache):
+    """The serving functions compute over the caches' columns: none of them
+    looks a value up on a ``Row`` by column name (a search of the row's
+    field names per access). ``collect()``, which hands rows to a caller,
+    is not called."""
+    by_position = Row.__getitem__
+
+    def no_name(row, item):
+        if isinstance(item, str):
+            raise AssertionError(f"Row field {item!r} looked up by name")
+        return by_position(row, item)
+
+    monkeypatch.setattr(Row, "__getitem__", no_name)
+    for months, airlines in ((None, None), ([1, 2, 3], DEFAULT_AIRLINES), ([2], ["Delta Air Lines"])):
+        fa, fp = apply_shared_filter(golden_airline_cache, golden_airport_cache, months=months, airlines=airlines)
+        assert kpis(fa)["total_flights"] > 0
+        for chart in (airline_rank(fa), airline_rank(fa, weighted=True), monthly_trend(fa),
+                      monthly_trend(fa, weighted=True), delay_attribution(fa), geo_rollup(fp)):
+            assert chart.count() > 0
+
+
+def test_a_header_only_cache_serves_empty_charts(tmp_path):
+    """A cache with a header and no row reads as an empty table that keeps
+    its column names, so the filter and every chart still run on it."""
+    caches = {}
+    for fixture, schema in ((AIRLINE_FIXTURE, AIRLINE_MONTHLY_SCHEMA), (AIRPORT_FIXTURE, AIRPORT_PERFORMANCE_SCHEMA)):
+        with open(fixture, newline="") as f:
+            header = next(csv.reader(f))
+        cache = read_cache_csv(None, _write_csv(tmp_path / os.path.basename(fixture), header, []), schema)
+        assert cache.count() == 0 and cache.collect() == []
+        assert list(cache.columns) == schema.fieldNames()
+        caches[fixture] = cache
+    airline, airport = caches[AIRLINE_FIXTURE], caches[AIRPORT_FIXTURE]
+
+    assert filter_options(airline) == ([], [])
+    for months, airlines in ((None, None), ([1], ["Alaska Airlines"])):
+        fa, fp = apply_shared_filter(airline, airport, months=months, airlines=airlines)
+        assert list(fa.columns) == AIRLINE_MONTHLY_SCHEMA.fieldNames()
+        assert list(fp.columns) == AIRPORT_PERFORMANCE_SCHEMA.fieldNames()
+        assert kpis(fa) == {"total_flights": 0, "on_time_pct": 0.0, "delayed_flights": 0.0, "cancelled_flights": 0}
+        assert [tuple(r) for r in delay_attribution(fa).collect()] == [(cause, None) for cause, _ in CAUSES]
+        for chart in (airline_rank(fa), monthly_trend(fa), geo_rollup(fp)):
+            assert chart.count() == 0 and chart.collect() == []
 
 
 def test_cache_reader_matches_spark_reader(spark, tmp_path):

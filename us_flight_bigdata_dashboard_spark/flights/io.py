@@ -17,8 +17,8 @@ through one routine, ``_publish_file``. ``agg.write_cache``, Spark's cache
 writer, is kept as the reference the tests and the benchmark's layer timings
 hold the driver's writer to; the refresh does not call it.
 ``read_cache_csv`` (S7) loads a cache into the driver with pyarrow, as a
-``Table`` of rows, and the serving layer answers every request there, without
-a JVM — the place ``st.cache_data`` holds them in the reference
+``Table`` of Python columns, and the serving layer answers every request
+there, without a JVM — the place ``st.cache_data`` holds them in the reference
 (src/app.py:29-46).
 
 Spark's grouping rules, which the refresh and the serving layer both follow
@@ -70,20 +70,22 @@ def read_raw_flights(spark: SparkSession, path_or_glob: str) -> DataFrame:
 
 class Table:
     """A small table held in the driver: the serving layer's caches and
-    chart results. ``rows`` is a list of ``Row``, with Python values and
-    ``None`` for null; ``count()`` and ``collect()`` keep the call shapes of
-    a Spark DataFrame's."""
+    chart results, by column. ``columns`` maps each column name, in column
+    order, to its values in row order, Python values with ``None`` for
+    null; a table with no row keeps its column names. ``count()`` and
+    ``collect()`` keep the call shapes of a Spark DataFrame's."""
 
-    __slots__ = ("rows",)
+    __slots__ = ("columns",)
 
-    def __init__(self, rows: list[Row]):
-        self.rows = rows
+    def __init__(self, columns: dict[str, list]):
+        self.columns = columns
 
     def count(self) -> int:
-        return len(self.rows)
+        return len(next(iter(self.columns.values()), ()))
 
     def collect(self) -> list[Row]:
-        return list(self.rows)
+        row = Row(*self.columns)
+        return [row(*values) for values in zip(*self.columns.values())]
 
 
 def nulls_first(values: tuple) -> tuple:
@@ -205,5 +207,4 @@ def read_cache_csv(spark: SparkSession | None, path: str, schema) -> Table:
     because the benchmark's serve workload passes one; pass ``None``.
     """
     table = pa.concat_tables([_read_cache_file(f, schema) for f in _cache_files(path)])
-    row = Row(*table.column_names)
-    return Table([row(*values) for values in zip(*(column.to_pylist() for column in table.columns))])
+    return Table({name: table[name].to_pylist() for name in table.column_names})

@@ -6,12 +6,14 @@ small additive caches (never base data), one shared filter predicate feeds
 every chart (the "联动" linkage, P9), and each chart is an independent
 query. The caches live in the driver (``io.read_cache_csv``), bounded by
 airline × month × city, so every function here is a pure function over the
-rows of ``io.Table`` caches: a request submits no Spark job and keeps no
-state. Semantics follow the Spark SQL they replace, through the grouping
-helpers the refresh uses (``io.grouped``, ``io.spark_sum``): null group
-keys form their own group, groups come in key order with nulls first, sums
-add left to right (so a mean is bit-equal to Spark's ``avg``), and an
-aggregate over no non-null value is null.
+columns of ``io.Table`` caches: the filter finds the kept row positions
+once, sums run over whole columns, and groups form over ``zip``s of the
+columns a chart reads, so no value is looked up by name per row. A request
+submits no Spark job and keeps no state. Semantics follow the Spark SQL they
+replace, through the grouping helpers the refresh uses (``io.grouped``,
+``io.spark_sum``): null group keys form their own group, groups come in key
+order with nulls first, sums add left to right (so a mean is bit-equal to
+Spark's ``avg``), and an aggregate over no non-null value is null.
 
 Quirk Q2 preserved deliberately (SURVEY.md §2.4): the OTP KPI is
 flight-WEIGHTED while airline-rank (A7) and monthly-trend (A9) are
@@ -25,8 +27,6 @@ from __future__ import annotations
 
 import math
 from decimal import ROUND_HALF_UP, Decimal
-
-from pyspark.sql import Row
 
 from us_flight_bigdata_dashboard_spark.flights.io import Table, grouped, nulls_first, spark_sum
 
@@ -49,12 +49,14 @@ def apply_shared_filter(
 ) -> tuple[Table, Table]:
     """P9: one conjunctive IN-list predicate applied to both caches
     (src/app.py:83-87). A null month or airline matches no list."""
-
-    def _in(value, allowed) -> bool:
-        return allowed is None or (value is not None and value in allowed)
+    # a set without None: a null key is in no IN-list, even one naming None
+    month_set = None if months is None else set(months) - {None}
+    airline_set = None if airlines is None else set(airlines) - {None}
 
     def _filter(table: Table) -> Table:
-        return Table([r for r in table.rows if _in(r["month"], months) and _in(r["airline_name"], airlines)])
+        keep = [i for i, (m, a) in enumerate(zip(table.columns["month"], table.columns["airline_name"]))
+                if (month_set is None or m in month_set) and (airline_set is None or a in airline_set)]
+        return Table({name: [values[i] for i in keep] for name, values in table.columns.items()})
 
     return _filter(airline_cache), _filter(airport_cache)
 
@@ -63,7 +65,7 @@ def filter_options(airline_cache: Table) -> tuple[list[int], list[str]]:
     """A11/O3: distinct sorted widget options (src/app.py:56,62)."""
 
     def _distinct(column: str) -> list:
-        return [key for (key,), _ in grouped(airline_cache.rows, lambda r: (r[column],))]
+        return [key for (key,), _ in grouped(zip(airline_cache.columns[column]), tuple)]
 
     return _distinct("month"), _distinct("airline_name")
 
@@ -75,38 +77,38 @@ def _product(a, b):
 def kpis(filtered_airline: Table) -> dict[str, float]:
     """A5/A6: total/delayed/cancelled counts + flight-weighted OTP% with
     zero-denominator guard (src/app.py:94-97); a sum over no value is 0."""
-    rows = filtered_airline.rows
-    total = spark_sum(r["DepDel15_count"] for r in rows) or 0
-    wsum = spark_sum(_product(r["on_time_rate"], r["DepDel15_count"]) for r in rows) or 0.0
+    c = filtered_airline.columns
+    total = spark_sum(c["DepDel15_count"]) or 0
+    wsum = spark_sum(map(_product, c["on_time_rate"], c["DepDel15_count"])) or 0.0
     return {
         "total_flights": total,
         "on_time_pct": wsum / total * 100.0 if total > 0 else 0.0,
-        "delayed_flights": float(spark_sum(r["DepDel15_sum"] for r in rows) or 0.0),
-        "cancelled_flights": spark_sum(r["Is_Cancelled_sum"] for r in rows) or 0,
+        "delayed_flights": float(spark_sum(c["DepDel15_sum"]) or 0.0),
+        "cancelled_flights": spark_sum(c["Is_Cancelled_sum"]) or 0,
     }
 
 
-def _group_means(rows: list[Row], key: str, value: str, weighted: bool) -> list[tuple]:
+def _group_means(table: Table, key: str, value: str, weighted: bool) -> list[tuple]:
     """``(key, mean of value)`` per ``key`` group, in key order: Spark's
     ``avg``; with ``weighted``, Σ(value·flights) / Σflights, null where a
     group's flights sum to zero."""
+    c = table.columns
     out = []
-    for (k,), group in grouped(rows, lambda r: (r[key],)):
+    for (k,), group in grouped(zip(c[key], c[value], c["DepDel15_count"]), lambda r: r[:1]):
         if weighted:
-            num = spark_sum(_product(r[value], r["DepDel15_count"]) for r in group)
-            den = spark_sum(r["DepDel15_count"] for r in group)
+            num = spark_sum(_product(v, n) for _, v, n in group)
+            den = spark_sum(n for _, _, n in group)
             mean = None if num is None or not den else num / den
         else:
-            values = [r[value] for r in group if r[value] is not None]
+            values = [v for _, v, _ in group if v is not None]
             mean = spark_sum(values) / len(values) if values else None
         out.append((k, mean))
     return out
 
 
-_RANK = Row("airline_name", "avg_delay_minutes")
-_TREND = Row("month", "month_label", "avg_on_time_rate")
-_CAUSE = Row("cause", "minutes")
-_CITY = Row("origin_city", "lat", "lon", "total_flights", "delayed_flights", "delay_rate")
+def _table(names: tuple[str, ...], rows: list[tuple]) -> Table:
+    """``rows``, tuples of ``names``' values, as a ``Table``."""
+    return Table({name: [r[i] for r in rows] for i, name in enumerate(names)})
 
 
 def airline_rank(filtered_airline: Table, weighted: bool = False) -> Table:
@@ -114,22 +116,22 @@ def airline_rank(filtered_airline: Table, weighted: bool = False) -> Table:
     first), ties by name, nulls first. Default faithfully UNWEIGHTED across
     months (quirk Q2, src/app.py:117-118); ``weighted=True`` weights by
     flight count."""
-    means = _group_means(filtered_airline.rows, "airline_name", "DepDelayMinutes_mean", weighted)
-    return Table([_RANK(*m) for m in sorted(means, key=lambda m: nulls_first(m[::-1]))])
+    means = _group_means(filtered_airline, "airline_name", "DepDelayMinutes_mean", weighted)
+    return _table(("airline_name", "avg_delay_minutes"), sorted(means, key=lambda m: nulls_first(m[::-1])))
 
 
 def delay_attribution(filtered_airline: Table) -> Table:
     """A8: four delay-cause totals unpivoted to (cause, minutes) — the
     attribution pie (src/app.py:133-138)."""
-    rows = filtered_airline.rows
-    return Table([_CAUSE(cause, spark_sum(r[col] for r in rows)) for cause, col in CAUSES])
+    c = filtered_airline.columns
+    return _table(("cause", "minutes"), [(cause, spark_sum(c[col])) for cause, col in CAUSES])
 
 
 def monthly_trend(filtered_airline: Table, weighted: bool = False) -> Table:
     """A9/P11: per-month mean on-time rate (unweighted across selected
     airlines by default — quirk Q2, src/app.py:149-150) + 中文 month label."""
-    means = _group_means(filtered_airline.rows, "month", "on_time_rate", weighted)
-    return Table([_TREND(month, MONTH_LABELS.get(month), mean) for month, mean in means])
+    means = _group_means(filtered_airline, "month", "on_time_rate", weighted)
+    return _table(("month", "month_label", "avg_on_time_rate"), [(m, MONTH_LABELS.get(m), v) for m, v in means])
 
 
 def _round_half_up(value: float, digits: int) -> float:
@@ -145,10 +147,11 @@ def geo_rollup(filtered_airport: Table) -> Table:
     """A10 + P10: city-level rollup of the (airline, month, city) cache —
     the additive re-aggregation that powers the map (src/app.py:161-168);
     delay_rate% guarded and rounded as in the reference."""
+    columns = ("origin_city", "lat", "lon", "total_flights", "delayed_flights")
     out = []
-    for key, group in grouped(filtered_airport.rows, lambda r: (r["origin_city"], r["lat"], r["lon"])):
-        total = spark_sum(r["total_flights"] for r in group)
-        delayed = spark_sum(r["delayed_flights"] for r in group)
+    for key, group in grouped(zip(*(filtered_airport.columns[n] for n in columns)), lambda r: r[:3]):
+        total = spark_sum(r[3] for r in group)
+        delayed = spark_sum(r[4] for r in group)
         rate = 0.0 if not total or delayed is None else _round_half_up(delayed / total * 100.0, 2)
-        out.append(_CITY(*key, total, delayed, rate))
-    return Table(out)
+        out.append((*key, total, delayed, rate))
+    return _table((*columns, "delay_rate"), out)
