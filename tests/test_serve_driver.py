@@ -1,8 +1,9 @@
 """The serving path in the driver: the cache reader against Spark's own CSV
-reader, the ``serve`` command without a JVM or pandas, Spark's null,
-rounding, ``avg`` and ``sum`` semantics, columnar charts that look no
-``Row`` field up by name, an empty cache, and a long run of distinct
-filters that submits no Spark job and keeps no per-filter state."""
+reader, the cache writer's round trip, ``io.rollup`` against Spark SQL's
+``groupBy().agg(sum)``, the ``serve`` command without a JVM or pandas,
+Spark's null, rounding, ``avg`` and ``sum`` semantics, columnar charts that
+look no ``Row`` field up by name, an empty cache, and a long run of
+distinct filters that submits no Spark job and keeps no per-filter state."""
 
 from __future__ import annotations
 
@@ -19,11 +20,12 @@ import tracemalloc
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from us_flight_bigdata_dashboard_spark import session
 from us_flight_bigdata_dashboard_spark.__main__ import main
 from us_flight_bigdata_dashboard_spark.flights.agg import write_cache
-from us_flight_bigdata_dashboard_spark.flights.io import read_cache_csv
+from us_flight_bigdata_dashboard_spark.flights.io import Table, read_cache_csv, rollup, write_cache_csv
 from us_flight_bigdata_dashboard_spark.flights.schemas import (
     AIRLINE_MONTHLY_SCHEMA,
     AIRPORT_PERFORMANCE_SCHEMA,
@@ -246,6 +248,72 @@ def test_cache_reader_matches_spark_reader(spark, tmp_path):
     got = read_cache_csv(None, out, AIRPORT_PERFORMANCE_SCHEMA).collect()
     assert got == want
     assert got[0]["delayed_flights"] == 12345678.5 and got[2]["origin_city"] is None
+
+
+def test_cache_writer_round_trips_through_both_readers(spark, tmp_path):
+    """``write_cache_csv`` of a ``Table`` reads back with ``read_cache_csv``
+    to the same columns, and with Spark's CSV reader and the cache schema
+    to the same rows: nulls, a quoted city with a comma, doubles that need
+    all 17 digits or E notation, a bigint past 2**53, and a header-only
+    table."""
+    names = AIRPORT_PERFORMANCE_SCHEMA.fieldNames()
+    full = Table(dict(zip(names, map(list, zip(
+        ("Alaska Airlines", 1, "Dallas/Fort Worth, TX", 2**62 + 1, 12345678.5, 32.8998, -97.0403),
+        (None, 2, "Boise, ID", None, 0.1 + 0.2, 43.5644, None),
+        ("Spirit Airlines", None, None, 3, 1e-9, 27.9755, -82.5332),
+    )))))
+    empty = Table({name: [] for name in names})
+    for name, table in (("full", full), ("empty", empty)):
+        out = str(tmp_path / name)
+        write_cache_csv(table, out)
+        assert os.listdir(out) == ["part-00000.csv"]
+        got = read_cache_csv(None, out, AIRPORT_PERFORMANCE_SCHEMA)
+        assert got.columns == table.columns, name
+        want = spark.read.option("header", True).schema(AIRPORT_PERFORMANCE_SCHEMA).csv(out).collect()
+        assert want == table.collect(), name
+
+
+def test_rollup_equals_spark_sql_group_by_sum(spark, tmp_path):
+    """``io.rollup`` over a CSV read with ``read_cache_csv`` equals, with
+    ``==``, Spark SQL's ``groupBy(keys).agg(sum(...))`` over the same file
+    (one partition, read in file order), ordered by the keys: a null key
+    part is a group of its own and sorts first, a group whose values are
+    all null sums to null, int sums stay ``int``, and seeded fractional
+    doubles, whose sums depend on the order of addition, are equal. A
+    table with no row rolls up to an empty table that keeps its column
+    names."""
+    schema = T.StructType([
+        T.StructField("city", T.StringType()),
+        T.StructField("month", T.IntegerType()),
+        T.StructField("flights", T.LongType()),
+        T.StructField("minutes", T.DoubleType()),
+        T.StructField("rare", T.DoubleType()),
+    ])
+    rng = random.Random(7)
+    rows = []
+    for _ in range(600):
+        city, month = rng.choice(["Boise, ID", "Atlanta, GA", ""]), rng.choice([1, 2, ""])
+        rare = "" if city != "Atlanta, GA" else repr(rng.random())
+        minutes = "" if rng.random() < 0.1 else repr(rng.random() * rng.choice([1, 1e3, 1e6]))
+        rows.append([city, month, rng.randint(0, 2**40), minutes, rare])
+    path = _write_csv(tmp_path / "partials.csv", schema.fieldNames(), rows)
+    df = spark.read.option("header", True).schema(schema).csv(path)
+    assert df.rdd.getNumPartitions() == 1
+    table = read_cache_csv(None, path, schema)
+    values = ("flights", "minutes", "rare")
+    for keys in (("city", "month"), ("month",), ("city",)):
+        want = df.groupBy(*keys).agg(*(F.sum(v).alias(v) for v in values)).orderBy(*keys).collect()
+        got = rollup(table, keys, values)
+        assert list(got.columns) == [*keys, *values]
+        assert got.collect() == want, keys
+        assert all(isinstance(v, int) for v in got.columns["flights"])
+    by_city = rollup(table, ("city",), values).collect()
+    assert by_city[0]["city"] is None
+    assert [r["rare"] is None for r in by_city] == [True, False, True]  # null, "Atlanta, GA", "Boise, ID"
+    assert rollup(table, ("month",)).columns == {"month": [None, 1, 2]}
+
+    empty = rollup(Table({name: [] for name in schema.fieldNames()}), ("city", "month"), values)
+    assert empty.count() == 0 and empty.columns == {"city": [], "month": [], "flights": [], "minutes": [], "rare": []}
 
 
 def test_cache_reader_picks_columns_by_header_name(tmp_path, golden_airline_cache):

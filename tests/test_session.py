@@ -1,4 +1,5 @@
-"""The default driver heap is sized from the host's ``/proc/meminfo``."""
+"""The default driver heap is sized from the host's ``/proc/meminfo``, and
+the session runs with Spark's adaptive execution and scan-split defaults."""
 
 from __future__ import annotations
 
@@ -27,3 +28,16 @@ def test_capped_at_24g_on_a_large_host():
 def test_24g_when_memtotal_is_unknown():
     assert default_driver_memory("") == "24g"
     assert default_driver_memory("MemFree:  1204880 kB\n") == "24g"
+
+
+def test_session_reports_aqe_and_128mb_scan_splits(spark):
+    """``get_spark`` sets none of these: AQE with partition coalescing and
+    skew-join splitting, and 128 MB scan splits, are Spark's defaults."""
+    for key in (
+        "spark.sql.adaptive.enabled",
+        "spark.sql.adaptive.coalescePartitions.enabled",
+        "spark.sql.adaptive.skewJoin.enabled",
+    ):
+        assert spark.conf.get(key) == "true", key
+    # Spark prints a byte size in bytes, suffixed "b"
+    assert spark.conf.get("spark.sql.files.maxPartitionBytes") == f"{128 * 1024 * 1024}b"

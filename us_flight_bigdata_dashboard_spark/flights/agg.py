@@ -10,10 +10,13 @@ refresh's single aggregation over the cleaned frame
 (``pipeline.grouped_pass``), per (carrier, month, origin airport, origin
 city, origin state), collected to the driver. That is bounded by the
 domain, not by base data, so ``cache_tables`` finishes in the driver: it
-keys each row as the wide view's joins would (airline name, origin city)
-and adds the decimals per (airline, month, city) for the airport cache,
-then per (airline, month) for the airline cache. Each sum is converted to
-double once, correctly rounded, so every value is bit-equal to the
+keys each row as the wide view's joins would (airline name, origin city),
+as columns of an ``io.Table``, and ``io.rollup`` adds the decimals per
+(airline, month, city) for the airport cache, then per (airline, month) for
+the airline cache: the same additive rollup the serving layer re-aggregates
+the caches with. The caches stay ``io.Table`` columns until
+``io.write_cache_csv`` writes them. Each sum is converted to double once,
+correctly rounded, so every value is bit-equal to the
 one-aggregation-per-cache definitions over the view below, and
 ``DepDelayMinutes_mean`` is the TRUE mean (documented divergence from the
 reference's chunk-sum artifact; golden tests compare that column by
@@ -32,7 +35,6 @@ interaction millisecond-cheap at any base-data scale.
 
 from __future__ import annotations
 
-from collections.abc import Iterable
 from decimal import Decimal, localcontext
 
 import pyarrow as pa
@@ -40,7 +42,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from us_flight_bigdata_dashboard_spark.flights import seeds
-from us_flight_bigdata_dashboard_spark.flights.io import arrow_schema, grouped, spark_sum
+from us_flight_bigdata_dashboard_spark.flights.io import Table, rollup
 from us_flight_bigdata_dashboard_spark.flights.schemas import AIRLINE_MONTHLY_SCHEMA, AIRPORT_PERFORMANCE_SCHEMA
 from us_flight_bigdata_dashboard_spark.functions.exact import davg, decimal_sum, dsum
 
@@ -111,19 +113,6 @@ def partial_aggregates() -> list[Column]:
     ]
 
 
-def _added(rows: Iterable[dict], keys: tuple[str, ...]) -> list[dict]:
-    """``_PARTIALS`` added per ``keys`` of ``rows`` with ``io.spark_sum``,
-    one dict of the keys and sums per group, in key order (``io.grouped``:
-    a null key part is a group of its own). Python adds at 40 digits, wider
-    than any ``decimal(38,4)`` value, so the decimals add exactly."""
-    with localcontext() as ctx:
-        ctx.prec = 40
-        return [
-            dict(zip(keys, key)) | {c: spark_sum(r[c] for r in group) for c in _PARTIALS}
-            for key, group in grouped(rows, lambda r: tuple(r[k] for k in keys))
-        ]
-
-
 def _double(d: Decimal | None) -> float | None:
     """A decimal sum as a double, correctly rounded, as Spark's
     ``CAST(decimal AS double)`` is. pyarrow 16's decimal → float64 cast is
@@ -137,48 +126,43 @@ def _divide(s: float | None, n: int) -> float | None:
     return None if s is None else s / n
 
 
-def cache_tables(origin: pa.Table, dim_airports: pa.Table) -> tuple[pa.Table, pa.Table]:
+def cache_tables(origin: pa.Table, dim_airports: pa.Table) -> tuple[Table, Table]:
     """Both caches in the driver, ``(airline_monthly_performance,
-    airport_performance)``, typed by ``AIRLINE_MONTHLY_SCHEMA`` and
-    ``AIRPORT_PERFORMANCE_SCHEMA``.
+    airport_performance)``, with the columns of ``AIRLINE_MONTHLY_SCHEMA``
+    and ``AIRPORT_PERFORMANCE_SCHEMA``, in their order and of their types.
 
     ``origin`` holds ``partial_aggregates()`` per (``Reporting_Airline``,
     ``Month``, ``Origin``, ...). Each row takes the wide view's keys as the
     view's left joins give them: the carrier's name in
     ``seeds.AIRLINE_NAMES`` and the origin code's ``dim_airports`` city,
-    null for a null or unknown code. The partials are added per (airline,
-    month, city) for the airport cache, then per (airline, month) for the
-    airline cache; rows come in key order, nulls first."""
+    null for a null or unknown code. ``io.rollup`` adds the partials per
+    (airline, month, city) for the airport cache, then adds those per
+    (airline, month) for the airline cache; rows come in key order, nulls
+    first. Python adds at 40 digits, wider than any ``decimal(38,4)``
+    value, so the decimals add exactly."""
     names = dict(seeds.AIRLINE_NAMES)
     cities = dict(zip(dim_airports["airport_code"].to_pylist(), dim_airports["city_name"].to_pylist()))
     cities.pop(None, None)  # a join never matches a null code
-    by_city = _added(
-        (
-            r | {
-                "airline_name": names.get(r["Reporting_Airline"]),
-                "month": r["Month"],
-                "origin_city": cities.get(r["Origin"]),
-            }
-            for r in origin.to_pylist()
-        ),
-        ("airline_name", "month", "origin_city"),
-    )
-    hubs = {city: {"lat": lat, "lon": lon} for city, lat, lon in seeds.AIRPORT_COORDS}
-    airport_perf = [
-        t | hubs[t["origin_city"]] | {"delayed_flights": _double(t["DepDel15_sum"])}
-        # the inner join on the hub coordinates: a null or non-hub city drops
-        for t in by_city if t["origin_city"] in hubs
-    ]
-    airline_monthly = []
-    for t in _added(by_city, ("airline_name", "month")):
-        sums = {f"{c}_sum": _double(t[f"{c}_sum"]) for c in _DECIMAL_SUMS}
-        late = _divide(sums["DepDel15_sum"], t["DepDel15_count"])
-        airline_monthly.append(t | sums | {
-            "DepDelayMinutes_mean": _divide(sums["DepDelayMinutes_sum"], t["DepDelayMinutes_count"]),
-            "on_time_rate": None if late is None else 1.0 - late,
-        })
-    # from_pylist takes each schema's columns and leaves the other keys
-    return (
-        pa.Table.from_pylist(airline_monthly, schema=arrow_schema(AIRLINE_MONTHLY_SCHEMA)),
-        pa.Table.from_pylist(airport_perf, schema=arrow_schema(AIRPORT_PERFORMANCE_SCHEMA)),
+    keyed = Table({
+        "airline_name": [names.get(code) for code in origin["Reporting_Airline"].to_pylist()],
+        "month": origin["Month"].to_pylist(),
+        "origin_city": [cities.get(code) for code in origin["Origin"].to_pylist()],
+    } | {c: origin[c].to_pylist() for c in _PARTIALS})
+    with localcontext() as ctx:
+        ctx.prec = 40
+        by_city = rollup(keyed, ("airline_name", "month", "origin_city"), _PARTIALS)
+        by_month = rollup(by_city, ("airline_name", "month"), _PARTIALS).columns
+    hubs = {city: (lat, lon) for city, lat, lon in seeds.AIRPORT_COORDS}
+    # the inner join on the hub coordinates: a null or non-hub city drops
+    airport = by_city.take([i for i, city in enumerate(by_city.columns["origin_city"]) if city in hubs]).columns
+    coords = [hubs[city] for city in airport["origin_city"]]
+    airport["lat"], airport["lon"] = [lat for lat, _ in coords], [lon for _, lon in coords]
+    airport["delayed_flights"] = list(map(_double, airport["DepDel15_sum"]))
+    airline = by_month | {f"{c}_sum": list(map(_double, by_month[f"{c}_sum"])) for c in _DECIMAL_SUMS}
+    mean = map(_divide, airline["DepDelayMinutes_sum"], airline["DepDelayMinutes_count"])
+    late = map(_divide, airline["DepDel15_sum"], airline["DepDel15_count"])
+    airline |= {"DepDelayMinutes_mean": list(mean), "on_time_rate": [None if r is None else 1.0 - r for r in late]}
+    return tuple(
+        Table({name: columns[name] for name in schema.fieldNames()})
+        for columns, schema in ((airline, AIRLINE_MONTHLY_SCHEMA), (airport, AIRPORT_PERFORMANCE_SCHEMA))
     )

@@ -23,7 +23,11 @@ there, without a JVM — the place ``st.cache_data`` holds them in the reference
 
 Spark's grouping rules, which the refresh and the serving layer both follow
 in the driver, live here once: ``nulls_first`` orders keys, ``grouped``
-groups rows and ``spark_sum`` adds a group's values.
+groups rows, ``spark_sum`` adds a group's values, ``rollup`` is a
+``groupBy(...).agg(sum(...))`` over a ``Table``'s columns built from the
+two, and ``Table.take`` picks rows by position. Both tiers add their
+partials through ``rollup``: the refresh per (airline, month[, city]), the
+dashboard per chart.
 """
 
 from __future__ import annotations
@@ -32,6 +36,7 @@ import csv
 import glob
 import os
 from collections.abc import Callable, Iterable
+from operator import itemgetter
 
 import pyarrow as pa
 import pyarrow.csv as pacsv
@@ -69,11 +74,12 @@ def read_raw_flights(spark: SparkSession, path_or_glob: str) -> DataFrame:
 
 
 class Table:
-    """A small table held in the driver: the serving layer's caches and
-    chart results, by column. ``columns`` maps each column name, in column
-    order, to its values in row order, Python values with ``None`` for
-    null; a table with no row keeps its column names. ``count()`` and
-    ``collect()`` keep the call shapes of a Spark DataFrame's."""
+    """A small table held in the driver, by column: the caches from the
+    refresh's rollup to the file, and the dashboard's caches and chart
+    results. ``columns`` maps each column name, in column order, to its
+    values in row order, Python values with ``None`` for null; a table with
+    no row keeps its column names. ``count()`` and ``collect()`` keep the
+    call shapes of a Spark DataFrame's."""
 
     __slots__ = ("columns",)
 
@@ -86,6 +92,10 @@ class Table:
     def collect(self) -> list[Row]:
         row = Row(*self.columns)
         return [row(*values) for values in zip(*self.columns.values())]
+
+    def take(self, positions: list[int]) -> Table:
+        """The rows at ``positions``, in that order."""
+        return Table({name: [values[i] for i in positions] for name, values in self.columns.items()})
 
 
 def nulls_first(values: tuple) -> tuple:
@@ -116,6 +126,19 @@ def spark_sum(values: Iterable):
     return total
 
 
+def rollup(table: Table, keys: tuple[str, ...], values: tuple[str, ...] = ()) -> Table:
+    """Spark's ``groupBy(*keys).agg(*(sum(v) for v in values))`` over
+    ``table``'s columns: one row per group (``grouped``: a null key part is
+    a group of its own, groups in key order, nulls first) with its keys and
+    the ``spark_sum`` of each value column, added in row order. With no
+    ``values``, the distinct keys."""
+    names, n = (*keys, *values), len(keys)
+    groups = grouped(zip(*(table.columns[c] for c in names)), itemgetter(slice(n)))
+    # each group transposed once: its value columns follow its key columns
+    rows = [(*key, *map(spark_sum, list(zip(*group))[n:])) for key, group in groups]
+    return Table({name: [r[i] for r in rows] for i, name in enumerate(names)})
+
+
 # Spark's CSV types → Arrow's
 _ARROW_TYPES = {"int": pa.int32(), "bigint": pa.int64(), "double": pa.float64(), "string": pa.string()}
 
@@ -143,7 +166,7 @@ def _publish_file(path: str, name: str, write: Callable[[str], None]) -> None:
     os.replace(tmp, os.path.join(path, name))
 
 
-def write_cache_csv(table: pa.Table, path: str) -> None:
+def write_cache_csv(table: Table, path: str) -> None:
     """S6: ``table`` published (``_publish_file``) as the directory
     ``path``'s one file, ``part-00000.csv``, with a header; null is an
     empty field."""
@@ -151,8 +174,8 @@ def write_cache_csv(table: pa.Table, path: str) -> None:
     def write(tmp: str) -> None:
         with open(tmp, "w", newline="", encoding="utf-8") as f:
             w = csv.writer(f)
-            w.writerow(table.column_names)
-            w.writerows(zip(*(column.to_pylist() for column in table.columns)))
+            w.writerow(table.columns)
+            w.writerows(zip(*table.columns.values()))
 
     _publish_file(path, "part-00000.csv", write)
 

@@ -119,6 +119,6 @@ def refresh(spark: SparkSession, raw_csv: str, out: str, with_star: bool = False
     write_cache_csv(airport_perf, f"{out}/airport_performance")
     return {
         "rows_cleaned": pc.sum(groups["origin"]["total_flights"]).as_py() or 0,
-        "airline_monthly_rows": airline_monthly.num_rows,
-        "airport_perf_rows": airport_perf.num_rows,
+        "airline_monthly_rows": airline_monthly.count(),
+        "airport_perf_rows": airport_perf.count(),
     }

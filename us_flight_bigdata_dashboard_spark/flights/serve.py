@@ -7,13 +7,15 @@ every chart (the "联动" linkage, P9), and each chart is an independent
 query. The caches live in the driver (``io.read_cache_csv``), bounded by
 airline × month × city, so every function here is a pure function over the
 columns of ``io.Table`` caches: the filter finds the kept row positions
-once, sums run over whole columns, and groups form over ``zip``s of the
-columns a chart reads, so no value is looked up by name per row. A request
-submits no Spark job and keeps no state. Semantics follow the Spark SQL they
-replace, through the grouping helpers the refresh uses (``io.grouped``,
-``io.spark_sum``): null group keys form their own group, groups come in key
-order with nulls first, sums add left to right (so a mean is bit-equal to
-Spark's ``avg``), and an aggregate over no non-null value is null.
+once (``Table.take``), totals run over whole columns, and every per-group
+sum is one ``io.rollup``, the additive rollup the refresh builds the caches
+with: the map sums flights per city, and a mean is the rollup of a
+numerator and a denominator column, then one divide. No value is looked up
+by name per row. A request submits no Spark job and keeps no state.
+Semantics follow the Spark SQL they replace: null group keys form their own
+group, groups come in key order with nulls first, sums add left to right
+(so a mean is bit-equal to Spark's ``avg``), and an aggregate over no
+non-null value is null.
 
 Quirk Q2 preserved deliberately (SURVEY.md §2.4): the OTP KPI is
 flight-WEIGHTED while airline-rank (A7) and monthly-trend (A9) are
@@ -28,7 +30,7 @@ from __future__ import annotations
 import math
 from decimal import ROUND_HALF_UP, Decimal
 
-from us_flight_bigdata_dashboard_spark.flights.io import Table, grouped, nulls_first, spark_sum
+from us_flight_bigdata_dashboard_spark.flights.io import Table, nulls_first, rollup, spark_sum
 
 MONTH_LABELS = {1: "1月", 2: "2月", 3: "3月"}
 # The attribution pie's causes; SecurityDelay is excluded exactly as in the
@@ -56,18 +58,14 @@ def apply_shared_filter(
     def _filter(table: Table) -> Table:
         keep = [i for i, (m, a) in enumerate(zip(table.columns["month"], table.columns["airline_name"]))
                 if (month_set is None or m in month_set) and (airline_set is None or a in airline_set)]
-        return Table({name: [values[i] for i in keep] for name, values in table.columns.items()})
+        return table.take(keep)
 
     return _filter(airline_cache), _filter(airport_cache)
 
 
 def filter_options(airline_cache: Table) -> tuple[list[int], list[str]]:
     """A11/O3: distinct sorted widget options (src/app.py:56,62)."""
-
-    def _distinct(column: str) -> list:
-        return [key for (key,), _ in grouped(zip(airline_cache.columns[column]), tuple)]
-
-    return _distinct("month"), _distinct("airline_name")
+    return tuple(rollup(airline_cache, (key,)).columns[key] for key in ("month", "airline_name"))
 
 
 def _product(a, b):
@@ -89,21 +87,18 @@ def kpis(filtered_airline: Table) -> dict[str, float]:
 
 
 def _group_means(table: Table, key: str, value: str, weighted: bool) -> list[tuple]:
-    """``(key, mean of value)`` per ``key`` group, in key order: Spark's
-    ``avg``; with ``weighted``, Σ(value·flights) / Σflights, null where a
-    group's flights sum to zero."""
+    """``(key, mean of value)`` per ``key`` group, in key order: one
+    ``rollup`` of a numerator and a denominator. Unweighted, the values
+    over a 1 per non-null value: Spark's ``avg``. With ``weighted``,
+    Σ(value·flights) over Σflights, null where a group's flights sum to
+    zero."""
     c = table.columns
-    out = []
-    for (k,), group in grouped(zip(c[key], c[value], c["DepDel15_count"]), lambda r: r[:1]):
-        if weighted:
-            num = spark_sum(_product(v, n) for _, v, n in group)
-            den = spark_sum(n for _, _, n in group)
-            mean = None if num is None or not den else num / den
-        else:
-            values = [v for _, v, _ in group if v is not None]
-            mean = spark_sum(values) / len(values) if values else None
-        out.append((k, mean))
-    return out
+    if weighted:
+        num, den = list(map(_product, c[value], c["DepDel15_count"])), c["DepDel15_count"]
+    else:
+        num, den = c[value], [None if v is None else 1 for v in c[value]]
+    sums = rollup(Table({key: c[key], "num": num, "den": den}), (key,), ("num", "den")).columns
+    return [(k, None if s is None or not n else s / n) for k, s, n in zip(sums[key], sums["num"], sums["den"])]
 
 
 def _table(names: tuple[str, ...], rows: list[tuple]) -> Table:
@@ -147,11 +142,9 @@ def geo_rollup(filtered_airport: Table) -> Table:
     """A10 + P10: city-level rollup of the (airline, month, city) cache —
     the additive re-aggregation that powers the map (src/app.py:161-168);
     delay_rate% guarded and rounded as in the reference."""
-    columns = ("origin_city", "lat", "lon", "total_flights", "delayed_flights")
-    out = []
-    for key, group in grouped(zip(*(filtered_airport.columns[n] for n in columns)), lambda r: r[:3]):
-        total = spark_sum(r[3] for r in group)
-        delayed = spark_sum(r[4] for r in group)
-        rate = 0.0 if not total or delayed is None else _round_half_up(delayed / total * 100.0, 2)
-        out.append((*key, total, delayed, rate))
-    return _table((*columns, "delay_rate"), out)
+    geo = rollup(filtered_airport, ("origin_city", "lat", "lon"), ("total_flights", "delayed_flights"))
+    geo.columns["delay_rate"] = [
+        0.0 if not total or delayed is None else _round_half_up(delayed / total * 100.0, 2)
+        for total, delayed in zip(geo.columns["total_flights"], geo.columns["delayed_flights"])
+    ]
+    return geo

@@ -3,7 +3,11 @@
 Tuned defaults for the test harness (single-JVM local[N]) that remain correct
 on a real cluster: AQE on (runtime re-plan, skew-join splitting, partition
 coalescing), explicit shuffle-partition count, Arrow enabled for the few
-Pandas-UDF paths, UTC session timezone for deterministic date math.
+Pandas-UDF paths, UTC session timezone for deterministic date math. AQE,
+its coalescing and skew-join splitting, and 128 MB scan splits
+(``spark.sql.files.maxPartitionBytes``) are Spark 4.1's own defaults, so
+they are not set here; ``tests/test_session.py`` checks the session
+reports them.
 
 At 100 TB scale the same config holds — shuffle.partitions is overridden per
 deployment (rule of thumb: 2-3× total executor cores, or let AQE coalesce
@@ -61,12 +65,8 @@ def get_spark(
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "33554432")
