@@ -60,9 +60,10 @@ _PYSPARK_TRANSCENDENTALS = re.compile(
 _STAR_STAR = re.compile(r"\*\*")
 _EXACT_INT_POW = re.compile(r"\b\d+\s*\*\*")
 _MARKDOWN_BOLD = re.compile(r"\*\*[^*]+\*\*")
-# `**kwargs` in a signature/call (immediately after `(` or `,`) —
+# `**kwargs` in a signature/call and `**{…}`/`{**a}` dict unpacking (right
+# after `(`, `{` or `,`, or at the start of a line of a multi-line call) —
 # unpacking syntax, not exponentiation.
-_KWARGS_UNPACK = re.compile(r"[(,]\s*\*\*[A-Za-z_]\w*")
+_KWARGS_UNPACK = re.compile(r"(?:^|[({,])\s*\*\*(?=[A-Za-z_{])")
 
 # (relative path, line-substring) pairs that are audited exact arithmetic.
 _ALLOWLIST: dict[tuple[str, str], str] = {
@@ -105,13 +106,36 @@ def test_spark_sources_have_no_transcendental_column_funcs():
     )
 
 
+def _exponentiates(line: str) -> bool:
+    """Whether ``line`` holds a ``**`` that is not exact-int arithmetic,
+    markdown bold or unpacking."""
+    stripped = _KWARGS_UNPACK.sub(
+        "", _EXACT_INT_POW.sub("", _MARKDOWN_BOLD.sub("", line))
+    )
+    return bool(_STAR_STAR.search(stripped))
+
+
+@pytest.mark.parametrize(
+    "line, flagged",
+    [
+        ('rate = F.col("x") ** 2', True),
+        ("c = a**b", True),
+        ("r = (x) ** 0.5", True),
+        ("y = x**2", True),
+        ("f(**kw)", False),
+        ('f(x, **{"k": 1})', False),
+        ('d = {**a, "b": 1}', False),
+        ("        **kwargs,", False),
+    ],
+)
+def test_exponentiation_matcher(line, flagged):
+    assert _exponentiates(line) is flagged
+
+
 def test_no_column_exponentiation():
     violations = []
     for rel, lineno, line in _iter_source_lines():
-        stripped = _KWARGS_UNPACK.sub(
-            "", _EXACT_INT_POW.sub("", _MARKDOWN_BOLD.sub("", line))
-        )
-        if not _STAR_STAR.search(stripped):
+        if not _exponentiates(line):
             continue
         if any(rel == f and frag in line for (f, frag) in _ALLOWLIST):
             continue

@@ -1,6 +1,7 @@
 """The serving path in the driver: the cache reader against Spark's own CSV
-reader, the cache writer's round trip, ``io.rollup`` against Spark SQL's
-``groupBy().agg(sum)``, the ``serve`` command without a JVM or pandas,
+reader, the reader's rejection of malformed rows, the cache writer's round
+trip, ``io.rollup`` against Spark SQL's ``groupBy().agg(sum)``, the
+``serve`` command without a JVM, pandas or pyarrow,
 Spark's null, rounding, ``avg`` and ``sum`` semantics, columnar charts that
 look no ``Row`` field up by name, an empty cache, and a long run of
 distinct filters that submits no Spark job and keeps no per-filter state."""
@@ -96,12 +97,12 @@ def test_cli_serve_imports_no_pandas(tmp_path):
         "import sys\n"
         "from us_flight_bigdata_dashboard_spark.__main__ import main\n"
         f"assert main(['serve', '--cache-dir', {str(tmp_path)!r}]) == 0\n"
-        "print('pandas' in sys.modules, file=sys.stderr)\n"
+        "print(sorted({'pandas', 'pyarrow'} & set(sys.modules)), file=sys.stderr)\n"
     )
     root = os.path.dirname(os.path.dirname(FIXTURES_DIR))
     done = subprocess.run([sys.executable, "-c", code], cwd=root, capture_output=True, text=True, check=True)
     assert json.loads(done.stdout)["kpis"]["total_flights"] == 1645503
-    assert done.stderr.strip().splitlines()[-1] == "False"
+    assert done.stderr.strip().splitlines()[-1] == "[]"
 
 
 def test_unweighted_means_equal_sparks_avg(spark, golden_airline_cache):
@@ -335,6 +336,36 @@ def test_cache_reader_names_what_is_missing(tmp_path):
     (empty / "_SUCCESS").touch()
     with pytest.raises(FileNotFoundError, match="airline_monthly_performance"):
         read_cache_csv(None, str(empty), AIRLINE_MONTHLY_SCHEMA)
+
+
+def test_cache_reader_rejects_malformed_rows(tmp_path):
+    """A short or long row, a field that does not parse as its column's
+    type and an empty file raise ``ValueError``; a blank line between rows
+    is skipped, as Spark's reader skips it."""
+    header, rows = _fixture_rows()
+    count, rate = header.index("DepDel15_count"), header.index("on_time_rate")
+
+    def replaced(i, value):
+        return [[*rows[0][:i], value, *rows[0][i + 1:]], *rows[1:]]
+
+    for name, bad in (
+        ("short", [rows[0][:-1], *rows[1:]]),
+        ("long", [[*rows[0], "1"], *rows[1:]]),
+        ("bigint", replaced(count, "x")),
+        ("double", replaced(rate, "x")),
+    ):
+        with pytest.raises(ValueError):
+            read_cache_csv(None, _write_csv(tmp_path / f"{name}.csv", header, bad), AIRLINE_MONTHLY_SCHEMA)
+    (tmp_path / "empty.csv").write_text("")
+    with pytest.raises(ValueError):
+        read_cache_csv(None, str(tmp_path / "empty.csv"), AIRLINE_MONTHLY_SCHEMA)
+
+    with open(AIRLINE_FIXTURE, newline="") as f:
+        first, second, *rest = f.readlines()
+    blank = tmp_path / "blank.csv"
+    blank.write_text("".join([first, second, "\n", *rest]))
+    want = read_cache_csv(None, AIRLINE_FIXTURE, AIRLINE_MONTHLY_SCHEMA)
+    assert read_cache_csv(None, str(blank), AIRLINE_MONTHLY_SCHEMA).columns == want.columns
 
 
 def test_null_keys_and_empty_aggregates_follow_spark(tmp_path):

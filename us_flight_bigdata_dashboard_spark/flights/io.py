@@ -16,9 +16,10 @@ live in the driver: ``write_parquet_file`` (S3) writes each dim and
 through one routine, ``_publish_file``. ``agg.write_cache``, Spark's cache
 writer, is kept as the reference the tests and the benchmark's layer timings
 hold the driver's writer to; the refresh does not call it.
-``read_cache_csv`` (S7) loads a cache into the driver with pyarrow, as a
-``Table`` of Python columns, and the serving layer answers every request
-there, without a JVM — the place ``st.cache_data`` holds them in the reference
+``read_cache_csv`` (S7) loads a cache into the driver with the ``csv``
+module, the codec ``write_cache_csv`` writes it with, as a ``Table`` of
+Python columns, and the serving layer answers every request there, without
+a JVM — the place ``st.cache_data`` holds them in the reference
 (src/app.py:29-46).
 
 Spark's grouping rules, which the refresh and the serving layer both follow
@@ -38,9 +39,6 @@ import os
 from collections.abc import Callable, Iterable
 from operator import itemgetter
 
-import pyarrow as pa
-import pyarrow.csv as pacsv
-import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import types as T
 
@@ -101,7 +99,7 @@ class Table:
 def nulls_first(values: tuple) -> tuple:
     """Sort key ordering tuples as Spark orders structs and grouping keys:
     field by field, null first, strings by code point."""
-    return tuple((v is not None, v) for v in values)
+    return tuple([(v is not None, v) for v in values])
 
 
 def grouped(rows: Iterable, key: Callable[..., tuple]) -> list[tuple[tuple, list]]:
@@ -139,15 +137,6 @@ def rollup(table: Table, keys: tuple[str, ...], values: tuple[str, ...] = ()) ->
     return Table({name: [r[i] for r in rows] for i, name in enumerate(names)})
 
 
-# Spark's CSV types → Arrow's
-_ARROW_TYPES = {"int": pa.int32(), "bigint": pa.int64(), "double": pa.float64(), "string": pa.string()}
-
-
-def arrow_schema(schema: T.StructType) -> pa.Schema:
-    """The Arrow schema of a cache's Spark ``schema``."""
-    return pa.schema([(f.name, _ARROW_TYPES[f.dataType.simpleString()]) for f in schema.fields])
-
-
 def _publish_file(path: str, name: str, write: Callable[[str], None]) -> None:
     """Publish the directory ``path``'s one file ``name``: ``write`` it
     beside it under a dot name (hidden from Spark's readers and from
@@ -180,10 +169,13 @@ def write_cache_csv(table: Table, path: str) -> None:
     _publish_file(path, "part-00000.csv", write)
 
 
-def write_parquet_file(table: pa.Table, path: str) -> None:
-    """S3 for a star dim: ``table`` published (``_publish_file``) as the
-    directory ``path``'s one file, ``part-00000.parquet``, which
-    ``spark.read.parquet(path)`` reads with ``table``'s schema."""
+def write_parquet_file(table, path: str) -> None:
+    """S3 for a star dim: ``table``, a ``pyarrow.Table``, published
+    (``_publish_file``) as the directory ``path``'s one file,
+    ``part-00000.parquet``, which ``spark.read.parquet(path)`` reads with
+    ``table``'s schema."""
+    import pyarrow.parquet as pq  # here, so that serving, which reads no parquet, loads no pyarrow
+
     _publish_file(path, "part-00000.parquet", lambda tmp: pq.write_table(table, tmp))
 
 
@@ -200,34 +192,41 @@ def _cache_files(path: str) -> list[str]:
     return parts
 
 
-def _read_cache_file(path: str, schema) -> pa.Table:
-    names = schema.fieldNames()
-    table = pacsv.read_csv(
-        path,
-        convert_options=pacsv.ConvertOptions(
-            column_types=arrow_schema(schema),
-            # as Spark reads a CSV: only an empty field is null
-            null_values=[""],
-            strings_can_be_null=True,
-        ),
-    )
-    missing = [n for n in names if n not in table.column_names]
-    if missing:
-        raise ValueError(f"cache file {path} has no column {missing[0]!r} (header: {table.column_names})")
-    return table.select(names)
+# the builtin that parses a field of each of a cache's Spark types
+_PARSERS = {"int": int, "bigint": int, "double": float, "string": str}
 
 
 def read_cache_csv(spark: SparkSession | None, path: str, schema) -> Table:
-    """S7: one dashboard cache, read into the driver.
+    """S7: one dashboard cache, read into the driver: the inverse of
+    ``write_cache_csv``.
 
     ``path`` is a single CSV file, or a directory as ``write_cache_csv`` or
     Spark's writer (``agg.write_cache``) lays it out. Columns are picked by
-    header name, not position, and get the types of ``schema`` (a Spark
-    ``StructType``); an empty field reads as null, as in Spark. Raises ``ValueError`` naming a column the file
-    lacks, and ``FileNotFoundError`` for a directory with no part file.
+    header name, not position, and each field is parsed with the builtin
+    for its type in ``schema`` (a Spark ``StructType``): ``int`` for
+    ``int`` and ``bigint``, ``float`` for ``double``. An empty field reads
+    as null and a blank line is skipped, as in Spark. Raises ``ValueError``
+    for a field that does not parse, and one naming the file when it is
+    empty, lacks a column (named too) or has a row whose field count differs
+    from its header's; ``FileNotFoundError`` for a directory with no part
+    file.
 
     No Spark session is used: ``spark`` is accepted, and ignored, only
     because the benchmark's serve workload passes one; pass ``None``.
     """
-    table = pa.concat_tables([_read_cache_file(f, schema) for f in _cache_files(path)])
-    return Table({name: table[name].to_pylist() for name in table.column_names})
+    columns = {name: [] for name in schema.fieldNames()}
+    for file in _cache_files(path):
+        with open(file, newline="", encoding="utf-8") as f:
+            rows = [r for r in csv.reader(f) if r]
+        if not rows:
+            raise ValueError(f"cache file {file} is empty")
+        header = rows.pop(0)
+        missing = [n for n in columns if n not in header]
+        if missing:
+            raise ValueError(f"cache file {file} has no column {missing[0]!r} (header: {header})")
+        if any(len(r) != len(header) for r in rows):
+            raise ValueError(f"cache file {file} has a row whose field count differs from its header's")
+        for field in schema.fields:
+            parse, i = _PARSERS[field.dataType.simpleString()], header.index(field.name)
+            columns[field.name] += [None if v == "" else parse(v) for v in map(itemgetter(i), rows)]
+    return Table(columns)
