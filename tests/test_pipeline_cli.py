@@ -98,6 +98,24 @@ def test_star_layout(runs):
     assert sorted(d for d in os.listdir(fact) if os.path.isdir(f"{fact}/{d}")) == ["month=1", "month=2", "month=3"]
 
 
+def test_dim_files_keep_their_arrow_types(runs):
+    """Each dim's parquet file holds the Arrow types Spark gives the dim's
+    source columns, and every field is nullable, as in a dim Spark writes."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    calendar = ["year", "quarter", "month", "day_of_month", "day_of_week", "is_weekend"]
+    want = {
+        "dim_airports": [("airport_code", pa.string()), ("city_name", pa.string()), ("state_code", pa.string())],
+        "dim_airlines": [("airline_code", pa.string())],
+        "dim_calendar": [("date_key", pa.date32()), *((name, pa.int32()) for name in calendar)],
+    }
+    for name, fields in want.items():
+        schema = pq.read_schema(f"{runs['star'][0]}/star/{name}/part-00000.parquet")
+        assert [(f.name, f.type) for f in schema] == fields, name
+        assert all(f.nullable for f in schema), name
+
+
 def _fact_files_scanned(plan) -> int:
     """``numFiles`` of the fact-table scans in an executed plan."""
     total, stack = 0, [plan]

@@ -16,6 +16,7 @@ import random
 import shutil
 import subprocess
 import sys
+import threading
 import tracemalloc
 
 import pytest
@@ -272,6 +273,80 @@ def test_cache_writer_round_trips_through_both_readers(spark, tmp_path):
         assert got.columns == table.columns, name
         want = spark.read.option("header", True).schema(AIRPORT_PERFORMANCE_SCHEMA).csv(out).collect()
         assert want == table.collect(), name
+
+
+def test_concurrent_publishes_are_atomic(tmp_path):
+    """Two threads publish two different airport caches into one directory,
+    300 times each, while a third reads it: no publish raises, every read
+    equals one of the two tables, and no temporary file is left behind."""
+    names = AIRPORT_PERFORMANCE_SCHEMA.fieldNames()
+    rng = random.Random(3)
+
+    def table(n: int) -> Table:
+        rows = [
+            (f"Airline {i % 7}", i % 12 + 1, f"City {i}", rng.randint(0, 10**6), rng.random() * 1e3,
+             rng.uniform(25, 49), rng.uniform(-124, -67))
+            for i in range(n)
+        ]
+        return Table(dict(zip(names, map(list, zip(*rows)))))
+
+    tables = [table(1500), table(900)]
+    out = str(tmp_path / "airport_performance")
+    write_cache_csv(tables[0], out)
+    failed, bad, seen = [], [], set()
+    done = threading.Event()
+
+    def publish(t: Table) -> None:
+        try:
+            for _ in range(300):
+                write_cache_csv(t, out)
+        except Exception as e:
+            failed.append(repr(e))
+
+    def poll() -> None:
+        while not done.is_set():
+            try:
+                got = read_cache_csv(None, out, AIRPORT_PERFORMANCE_SCHEMA).columns
+            except (OSError, ValueError) as e:  # a missing or malformed file
+                bad.append(repr(e))
+                continue
+            match = [i for i, t in enumerate(tables) if got == t.columns]
+            seen.update(match)
+            if not match:
+                bad.append(f"{len(got['origin_city'])} rows, neither table")
+
+    writers = [threading.Thread(target=publish, args=(t,)) for t in tables]
+    reader = threading.Thread(target=poll)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # switch threads often, so publishes interleave
+    try:
+        for t in (reader, *writers):
+            t.start()
+        for t in writers:
+            t.join(timeout=120)
+    finally:
+        done.set()
+        reader.join(timeout=60)
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in (reader, *writers))
+    assert not failed, failed[:5]
+    assert not bad, bad[:5]
+    assert seen, "the reader never read the cache"
+    assert os.listdir(out) == ["part-00000.csv"]
+
+
+def test_a_failed_publish_keeps_the_old_file_and_leaves_no_temporary(tmp_path):
+    class Unwritable:
+        def __str__(self) -> str:
+            raise RuntimeError("unwritable value")
+
+    schema = T.StructType([T.StructField("flights", T.LongType())])
+    out = str(tmp_path / "cache")
+    write_cache_csv(Table({"flights": [1, 2]}), out)
+    with pytest.raises(RuntimeError, match="unwritable value"):
+        write_cache_csv(Table({"flights": [3, Unwritable()]}), out)
+    assert os.listdir(out) == ["part-00000.csv"]
+    assert read_cache_csv(None, out, schema).columns == {"flights": [1, 2]}
 
 
 def test_rollup_equals_spark_sql_group_by_sum(spark, tmp_path):

@@ -8,13 +8,14 @@ The partials (``partial_aggregates``: counts and the exact decimal sums of
 ``functions/exact.py``'s ``dsum``/``davg``) are one grouping set of the
 refresh's single aggregation over the cleaned frame
 (``pipeline.grouped_pass``), per (carrier, month, origin airport, origin
-city, origin state), collected to the driver. That is bounded by the
-domain, not by base data, so ``cache_tables`` finishes in the driver: it
+city, origin state), collected to the driver as the columns of an
+``io.Table``. That is bounded by the domain, not by base data, so
+``cache_tables`` finishes in the driver, on those columns as they are: it
 keys each row as the wide view's joins would (airline name, origin city),
-as columns of an ``io.Table``, and ``io.rollup`` adds the decimals per
-(airline, month, city) for the airport cache, then per (airline, month) for
-the airline cache: the same additive rollup the serving layer re-aggregates
-the caches with. The caches stay ``io.Table`` columns until
+and ``io.rollup`` adds the decimals per (airline, month, city) for the
+airport cache, then per (airline, month) for the airline cache: the same
+additive rollup that builds the dims and that the serving layer
+re-aggregates the caches with. The caches stay ``io.Table`` columns until
 ``io.write_cache_csv`` writes them. Each sum is converted to double once,
 correctly rounded, so every value is bit-equal to the
 one-aggregation-per-cache definitions over the view below, and
@@ -37,7 +38,6 @@ from __future__ import annotations
 
 from decimal import Decimal, localcontext
 
-import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -126,28 +126,31 @@ def _divide(s: float | None, n: int) -> float | None:
     return None if s is None else s / n
 
 
-def cache_tables(origin: pa.Table, dim_airports: pa.Table) -> tuple[Table, Table]:
+def cache_tables(origin: Table, dim_airports: Table) -> tuple[Table, Table]:
     """Both caches in the driver, ``(airline_monthly_performance,
     airport_performance)``, with the columns of ``AIRLINE_MONTHLY_SCHEMA``
     and ``AIRPORT_PERFORMANCE_SCHEMA``, in their order and of their types.
 
-    ``origin`` holds ``partial_aggregates()`` per (``Reporting_Airline``,
-    ``Month``, ``Origin``, ...). Each row takes the wide view's keys as the
-    view's left joins give them: the carrier's name in
-    ``seeds.AIRLINE_NAMES`` and the origin code's ``dim_airports`` city,
-    null for a null or unknown code. ``io.rollup`` adds the partials per
-    (airline, month, city) for the airport cache, then adds those per
+    ``origin``, an ``io.Table`` as ``pipeline.grouped_pass`` gives it,
+    holds ``partial_aggregates()`` per (``Reporting_Airline``, ``Month``,
+    ``Origin``, ...); ``dim_airports`` is ``star.dim_tables``' table. Both
+    are read as the columns they are, with no conversion. Each row takes
+    the wide view's keys as the view's left joins give them: the carrier's
+    name in ``seeds.AIRLINE_NAMES`` and the origin code's ``dim_airports``
+    city, null for a null or unknown code. ``io.rollup`` adds the partials
+    per (airline, month, city) for the airport cache, then adds those per
     (airline, month) for the airline cache; rows come in key order, nulls
     first. Python adds at 40 digits, wider than any ``decimal(38,4)``
     value, so the decimals add exactly."""
     names = dict(seeds.AIRLINE_NAMES)
-    cities = dict(zip(dim_airports["airport_code"].to_pylist(), dim_airports["city_name"].to_pylist()))
-    cities.pop(None, None)  # a join never matches a null code
+    partials, airports = origin.columns, dim_airports.columns
+    # a join never matches a null code
+    cities = {code: city for code, city in zip(airports["airport_code"], airports["city_name"]) if code is not None}
     keyed = Table({
-        "airline_name": [names.get(code) for code in origin["Reporting_Airline"].to_pylist()],
-        "month": origin["Month"].to_pylist(),
-        "origin_city": [cities.get(code) for code in origin["Origin"].to_pylist()],
-    } | {c: origin[c].to_pylist() for c in _PARTIALS})
+        "airline_name": [names.get(code) for code in partials["Reporting_Airline"]],
+        "month": partials["Month"],
+        "origin_city": [cities.get(code) for code in partials["Origin"]],
+    } | {c: partials[c] for c in _PARTIALS})
     with localcontext() as ctx:
         ctx.prec = 40
         by_city = rollup(keyed, ("airline_name", "month", "origin_city"), _PARTIALS)

@@ -11,11 +11,14 @@ The star's sink is split by size. The fact scales with base data, so Spark
 writes it (``star.write_star``: month-partitioned parquet in place of
 10k-row chunked JDBC writes, S3). The dims and the dashboard caches are
 bounded by the domain (airports, days, airline × month × city), so they
-live in the driver: ``write_parquet_file`` (S3) writes each dim and
-``write_cache_csv`` (S6) each cache as one file, published atomically
-through one routine, ``_publish_file``. ``agg.write_cache``, Spark's cache
-writer, is kept as the reference the tests and the benchmark's layer timings
-hold the driver's writer to; the refresh does not call it.
+live in the driver, as ``Table`` columns from the refresh's grouped pass to
+the file: ``write_parquet_file`` (S3) writes each dim, the one place the
+driver builds an Arrow table, and ``write_cache_csv`` (S6) each cache, as
+one file, published atomically through one routine, ``_publish_file``,
+under a temporary name of its own, so concurrent publishes stay atomic.
+``agg.write_cache``, Spark's cache writer, is kept as the reference the
+tests and the benchmark's layer timings hold the driver's writer to; the
+refresh does not call it.
 ``read_cache_csv`` (S7) loads a cache into the driver with the ``csv``
 module, the codec ``write_cache_csv`` writes it with, as a ``Table`` of
 Python columns, and the serving layer answers every request there, without
@@ -23,12 +26,12 @@ a JVM — the place ``st.cache_data`` holds them in the reference
 (src/app.py:29-46).
 
 Spark's grouping rules, which the refresh and the serving layer both follow
-in the driver, live here once: ``nulls_first`` orders keys, ``grouped``
-groups rows, ``spark_sum`` adds a group's values, ``rollup`` is a
-``groupBy(...).agg(sum(...))`` over a ``Table``'s columns built from the
-two, and ``Table.take`` picks rows by position. Both tiers add their
-partials through ``rollup``: the refresh per (airline, month[, city]), the
-dashboard per chart.
+in the driver, live here once: ``nulls_first`` orders keys, ``spark_sum``
+adds a group's values, ``rollup`` is a ``groupBy(...).agg(sum(...))`` over
+a ``Table``'s columns built on the two, and ``Table.take`` picks rows by
+position. Both tiers go through ``rollup``: the refresh for the dims'
+distinct rows and to add the caches' partials per (airline, month[,
+city]), the dashboard per chart.
 """
 
 from __future__ import annotations
@@ -38,6 +41,7 @@ import glob
 import os
 from collections.abc import Callable, Iterable
 from operator import itemgetter
+from pathlib import Path
 
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import types as T
@@ -72,12 +76,13 @@ def read_raw_flights(spark: SparkSession, path_or_glob: str) -> DataFrame:
 
 
 class Table:
-    """A small table held in the driver, by column: the caches from the
-    refresh's rollup to the file, and the dashboard's caches and chart
-    results. ``columns`` maps each column name, in column order, to its
-    values in row order, Python values with ``None`` for null; a table with
-    no row keeps its column names. ``count()`` and ``collect()`` keep the
-    call shapes of a Spark DataFrame's."""
+    """A small table held in the driver, by column: the refresh's grouped
+    partials, dims and caches from the collect to the file, and the
+    dashboard's caches and chart results. ``columns`` maps each column
+    name, in column order, to its values in row order, Python values with
+    ``None`` for null; a table with no row keeps its column names.
+    ``count()`` and ``collect()`` keep the call shapes of a Spark
+    DataFrame's."""
 
     __slots__ = ("columns",)
 
@@ -102,17 +107,6 @@ def nulls_first(values: tuple) -> tuple:
     return tuple([(v is not None, v) for v in values])
 
 
-def grouped(rows: Iterable, key: Callable[..., tuple]) -> list[tuple[tuple, list]]:
-    """``rows`` grouped by the tuple ``key(row)`` as a Spark ``groupBy``
-    groups them: a null key part is a group of its own. Groups come back
-    as ``(key, rows)`` in key order, nulls first, each group's rows in
-    input order."""
-    groups: dict[tuple, list] = {}
-    for r in rows:
-        groups.setdefault(key(r), []).append(r)
-    return sorted(groups.items(), key=lambda g: nulls_first(g[0]))
-
-
 def spark_sum(values: Iterable):
     """Spark's ``sum``: the non-null ``values`` added left to right onto 0,
     null when there are none. A fold, not ``sum()``, which compensates
@@ -126,28 +120,36 @@ def spark_sum(values: Iterable):
 
 def rollup(table: Table, keys: tuple[str, ...], values: tuple[str, ...] = ()) -> Table:
     """Spark's ``groupBy(*keys).agg(*(sum(v) for v in values))`` over
-    ``table``'s columns: one row per group (``grouped``: a null key part is
-    a group of its own, groups in key order, nulls first) with its keys and
-    the ``spark_sum`` of each value column, added in row order. With no
+    ``table``'s columns: one row per group (a null key part is a group of
+    its own; groups in key order, nulls first) with its keys and the
+    ``spark_sum`` of each value column, added in row order. With no
     ``values``, the distinct keys."""
     names, n = (*keys, *values), len(keys)
-    groups = grouped(zip(*(table.columns[c] for c in names)), itemgetter(slice(n)))
+    groups: dict[tuple, list] = {}
+    for row in zip(*(table.columns[c] for c in names)):
+        groups.setdefault(row[:n], []).append(row)
     # each group transposed once: its value columns follow its key columns
-    rows = [(*key, *map(spark_sum, list(zip(*group))[n:])) for key, group in groups]
+    rows = [(*key, *map(spark_sum, list(zip(*groups[key]))[n:])) for key in sorted(groups, key=nulls_first)]
     return Table({name: [r[i] for r in rows] for i, name in enumerate(names)})
 
 
 def _publish_file(path: str, name: str, write: Callable[[str], None]) -> None:
     """Publish the directory ``path``'s one file ``name``: ``write`` it
-    beside it under a dot name (hidden from Spark's readers and from
-    ``read_cache_csv``'s ``part-*`` glob), then move it onto ``name`` with
-    ``os.replace``, so a concurrent reader sees the old file or the new,
-    never a missing, partial or mixed one. The files of a Spark writer's
-    layout are removed first, so no stale rows remain; that one-time
-    upgrade is not atomic."""
+    beside it under a dot name of its own (hidden from Spark's readers and
+    from ``read_cache_csv``'s ``part-*`` glob, and unique to this publish,
+    so concurrent publishes never share one), then move it onto ``name``
+    with ``os.replace``, so a concurrent reader sees the old file or a new
+    one, never a missing, partial or mixed one. The temporary file is
+    removed if ``write`` raises. The files of a Spark writer's layout are
+    removed first, so no stale rows remain; that one-time upgrade is not
+    atomic."""
     os.makedirs(path, exist_ok=True)
-    tmp = os.path.join(path, f".{name}.tmp")
-    write(tmp)
+    tmp = os.path.join(path, f".{name}.{os.urandom(8).hex()}.tmp")
+    try:
+        write(tmp)
+    except BaseException:
+        Path(tmp).unlink(missing_ok=True)
+        raise
     for entry in os.listdir(path):
         # Spark's layout: its own part files, the _SUCCESS marker, checksums
         if (entry.startswith("part-") and entry != name) or entry == "_SUCCESS" or entry.endswith(".crc"):
@@ -169,14 +171,19 @@ def write_cache_csv(table: Table, path: str) -> None:
     _publish_file(path, "part-00000.csv", write)
 
 
-def write_parquet_file(table, path: str) -> None:
-    """S3 for a star dim: ``table``, a ``pyarrow.Table``, published
-    (``_publish_file``) as the directory ``path``'s one file,
-    ``part-00000.parquet``, which ``spark.read.parquet(path)`` reads with
-    ``table``'s schema."""
-    import pyarrow.parquet as pq  # here, so that serving, which reads no parquet, loads no pyarrow
+def write_parquet_file(table: Table, path: str, schema: T.StructType) -> None:
+    """S3 for a star dim: ``table`` published (``_publish_file``) as the
+    directory ``path``'s one file, ``part-00000.parquet``, typed as
+    ``schema`` (a Spark ``StructType``, which ``to_arrow_schema`` maps to
+    the Arrow types Spark's own collect uses), which
+    ``spark.read.parquet(path)`` reads back."""
+    # imported here, so that serving, which writes no parquet, loads no
+    # pyarrow; ``import pyarrow.parquet`` binds ``pyarrow`` too
+    import pyarrow.parquet
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    _publish_file(path, "part-00000.parquet", lambda tmp: pq.write_table(table, tmp))
+    arrow = pyarrow.table(table.columns, schema=to_arrow_schema(schema))
+    _publish_file(path, "part-00000.parquet", lambda tmp: pyarrow.parquet.write_table(arrow, tmp))
 
 
 def _cache_files(path: str) -> list[str]:

@@ -14,22 +14,23 @@ loaded (src/data_cleaning.py, then the sql/data_modeling.sql CTAS):
    Spark write);
 2. one Spark aggregation over the cleaned frame, ``grouped_pass``, collects
    the distinct source tuples behind the three dims and the caches'
-   partials to the driver;
+   partials to the driver with ``toArrow()``, and hands each grouping set
+   on as an ``io.Table`` of Python columns;
 3. the driver derives the dims (``star.dim_tables``) and both caches
-   (``agg.cache_tables``) from it, exactly, and publishes each as one file
-   (``io.write_parquet_file``, ``io.write_cache_csv``).
+   (``agg.cache_tables``) from those columns, exactly, with ``io.rollup``,
+   and publishes each as one file (``io.write_parquet_file``,
+   ``io.write_cache_csv``).
 
-The wide view is not on this path: ``agg.cache_tables`` keys the partials
-as the view's joins would. The summary counts come from the same pass;
-nothing is read back.
+Arrow appears only at the two ends of the driver's work: the collect here
+and the parquet writer in ``io``. The wide view is not on this path:
+``agg.cache_tables`` keys the partials as the view's joins would. The
+summary counts come from the same pass; nothing is read back.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-import pyarrow as pa
-import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -41,13 +42,14 @@ from us_flight_bigdata_dashboard_spark.flights.agg import (
     partial_aggregates,
 )
 from us_flight_bigdata_dashboard_spark.flights.clean import clean_flights
-from us_flight_bigdata_dashboard_spark.flights.io import read_raw_flights, write_cache_csv, write_parquet_file
+from us_flight_bigdata_dashboard_spark.flights.io import Table, read_raw_flights, write_cache_csv, write_parquet_file
 from us_flight_bigdata_dashboard_spark.flights.star import (
     CALENDAR,
     DEST_AIRPORT,
     ORIGIN_AIRPORT,
     build_fact_flights,
     build_star,
+    dim_schemas,
     dim_tables,
     write_star,
 )
@@ -83,11 +85,11 @@ GROUPING_SETS = {
 }
 
 
-def grouped_pass(clean: DataFrame) -> dict[str, pa.Table]:
+def grouped_pass(clean: DataFrame) -> dict[str, Table]:
     """One aggregation of ``clean`` over ``GROUPING_SETS``, collected: per
-    set, a table of its keys and ``partial_aggregates()``. The rows of each
-    set are picked by ``grouping_id()``, never by a null key, since a null
-    key is a group of its own."""
+    set, an ``io.Table`` of its keys and ``partial_aggregates()``. The rows
+    of each set are picked by ``grouping_id()``, never by a null key, since
+    a null key is a group of its own."""
     keys = list(dict.fromkeys(k for s in GROUPING_SETS.values() for k in s))
     grouped = (
         clean.groupingSets([list(s) for s in GROUPING_SETS.values()], *keys)
@@ -95,11 +97,13 @@ def grouped_pass(clean: DataFrame) -> dict[str, pa.Table]:
         .toArrow()
     )
     measures = [c for c in grouped.column_names if c not in keys and c != "grouping_id"]
+    ids = grouped["grouping_id"].to_pylist()
     tables = {}
     for name, s in GROUPING_SETS.items():
         # a bit per key, the first key's highest; set where the key is not grouped
         gid = sum(1 << (len(keys) - 1 - i) for i, k in enumerate(keys) if k not in s)
-        tables[name] = grouped.filter(pc.equal(grouped["grouping_id"], gid)).select([*s, *measures])
+        # only this set's rows and columns leave Arrow
+        tables[name] = Table(grouped.select([*s, *measures]).take([i for i, g in enumerate(ids) if g == gid]).to_pydict())
     return tables
 
 
@@ -113,12 +117,12 @@ def refresh(spark: SparkSession, raw_csv: str, out: str, with_star: bool = False
     dims = dim_tables(groups["origin"], groups["dest"], groups["calendar"])
     airline_monthly, airport_perf = cache_tables(groups["origin"], dims["dim_airports"])
     if with_star:
-        for name, table in dims.items():
-            write_parquet_file(table, f"{out}/star/{name}")
+        for name, schema in dim_schemas(clean.schema).items():
+            write_parquet_file(dims[name], f"{out}/star/{name}", schema)
     write_cache_csv(airline_monthly, f"{out}/airline_monthly_performance")
     write_cache_csv(airport_perf, f"{out}/airport_performance")
     return {
-        "rows_cleaned": pc.sum(groups["origin"]["total_flights"]).as_py() or 0,
+        "rows_cleaned": sum(groups["origin"].columns["total_flights"]),
         "airline_monthly_rows": airline_monthly.count(),
         "airport_perf_rows": airport_perf.count(),
     }

@@ -11,23 +11,24 @@ row-group stats automatically.
 The star's sink is Spark for the fact and the driver for the dims. The
 dims are bounded by the domain (airports, carriers, days), so the refresh
 does not build them with ``build_dim_*``, each a shuffle job over the raw
-scan: ``dim_tables`` derives them in the driver from the distinct source
-tuples the refresh's one grouped pass collects, row for row what
-``build_dim_*`` give and with their types; the refresh hands ``write_star``
-the fact alone. ``build_star`` remains the lazy definition
+scan: ``dim_tables`` derives them in the driver, as ``io.Table`` columns,
+from the distinct source tuples the refresh's one grouped pass collects,
+with ``io.rollup`` (the rollup that builds the caches and the dashboard's
+charts), row for row what ``build_dim_*`` give; ``dim_schemas`` types
+them as ``build_dim_*`` do, from the cleaned frame's schema, when
+``io.write_parquet_file`` writes them. The refresh hands ``write_star`` the
+fact alone. ``build_star`` remains the lazy definition
 (``pipeline.run_pipeline``, the benchmark's layer timings) that the tests
 hold the driver's dims to.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterable
-
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from us_flight_bigdata_dashboard_spark.flights.io import grouped, nulls_first
+from us_flight_bigdata_dashboard_spark.flights.io import Table, rollup
 
 # source column -> dim column, for each side of dim_airports and for
 # dim_calendar
@@ -42,6 +43,9 @@ CALENDAR = {
     "DayOfWeek": "day_of_week",
     "Is_Weekend": "is_weekend",
 }
+# source column -> dim column, for each dim; dim_airports' dest side is
+# DEST_AIRPORT, whose columns have the same types
+DIMS = {"dim_airports": ORIGIN_AIRPORT, "dim_airlines": {"Reporting_Airline": "airline_code"}, "dim_calendar": CALENDAR}
 
 
 def _renamed(df: DataFrame, columns: dict[str, str]) -> DataFrame:
@@ -131,35 +135,33 @@ def write_star(star: dict[str, DataFrame], root: str) -> None:
         writer.parquet(f"{root}/{name}")
 
 
-def _rows(table: pa.Table, columns: Iterable[str]) -> Iterable[tuple]:
-    return zip(*(table[c].to_pylist() for c in columns))
+def _smallest_per_first(columns: dict[str, list]) -> Table:
+    """``_smallest_per_key`` in the driver over ``columns``, keyed on the
+    first: one row per key, in key order, nulls first. ``rollup`` over
+    every column gives the distinct rows in that order, so each key's first
+    row is its smallest."""
+    rows = rollup(Table(columns), tuple(columns))
+    key = next(iter(rows.columns.values()))
+    return rows.take([i for i, k in enumerate(key) if i == 0 or k != key[i - 1]])
 
 
-def _dim(rows: list[tuple], source: pa.Table, columns: dict[str, str]) -> pa.Table:
-    """``rows`` of ``columns``' source values as a dim table, each column
-    renamed and typed as its source column in ``source``."""
-    fields = [pa.field(name, source.schema.field(src).type) for src, name in columns.items()]
-    values = list(zip(*rows)) or [()] * len(fields)
-    return pa.Table.from_arrays([pa.array(v, f.type) for v, f in zip(values, fields)], schema=pa.schema(fields))
+def dim_schemas(source: T.StructType) -> dict[str, T.StructType]:
+    """Each dim's schema, as ``build_dim_*`` types it: its ``DIMS`` source
+    columns, renamed, of their types in ``source`` (the cleaned frame's
+    schema); every field is nullable, as in a dim Spark writes."""
+    return {d: T.StructType([T.StructField(n, source[s].dataType) for s, n in c.items()]) for d, c in DIMS.items()}
 
 
-def _smallest_per_first(rows: Iterable[tuple]) -> list[tuple]:
-    """``_smallest_per_key`` in the driver, keyed on each tuple's first
-    value: one tuple per key, in key order, nulls first."""
-    return [min(group, key=nulls_first) for _, group in grouped(rows, lambda r: r[:1])]
-
-
-def dim_tables(origin: pa.Table, dest: pa.Table, calendar: pa.Table) -> dict[str, pa.Table]:
-    """The three dims in the driver, equal row for row to ``build_dim_*``'s
-    and typed as Spark types them, from the distinct source tuples the
-    refresh's grouped pass collects: ``origin`` holds ``Reporting_Airline``
-    and ``ORIGIN_AIRPORT``'s columns, ``dest`` ``DEST_AIRPORT``'s and
-    ``calendar`` ``CALENDAR``'s. A null code is a row of its own, as in a
-    Spark ``groupBy``; rows are in key order, null first."""
-    airports = _smallest_per_first([*_rows(origin, ORIGIN_AIRPORT), *_rows(dest, DEST_AIRPORT)])
-    airlines = [key for key, _ in grouped(_rows(origin, ["Reporting_Airline"]), lambda r: r)]
+def dim_tables(origin: Table, dest: Table, calendar: Table) -> dict[str, Table]:
+    """The three dims in the driver, equal row for row to ``build_dim_*``'s,
+    from the distinct source tuples the refresh's grouped pass collects:
+    ``origin`` holds ``Reporting_Airline`` and ``ORIGIN_AIRPORT``'s columns,
+    ``dest`` ``DEST_AIRPORT``'s and ``calendar`` ``CALENDAR``'s, each an
+    ``io.Table``. A null code is a row of its own, as in a Spark
+    ``groupBy``; rows are in key order, null first."""
+    airports = {name: origin.columns[o] + dest.columns[d] for (o, name), d in zip(ORIGIN_AIRPORT.items(), DEST_AIRPORT)}
     return {
-        "dim_airports": _dim(airports, origin, ORIGIN_AIRPORT),
-        "dim_airlines": _dim(airlines, origin, {"Reporting_Airline": "airline_code"}),
-        "dim_calendar": _dim(_smallest_per_first(_rows(calendar, CALENDAR)), calendar, CALENDAR),
+        "dim_airports": _smallest_per_first(airports),
+        "dim_airlines": Table({"airline_code": rollup(origin, ("Reporting_Airline",)).columns["Reporting_Airline"]}),
+        "dim_calendar": _smallest_per_first({name: calendar.columns[src] for src, name in CALENDAR.items()}),
     }
