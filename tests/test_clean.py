@@ -111,3 +111,29 @@ def test_p4_property_matches_reference_algorithm(spark, values):
     for v, r in zip(values, out):
         assert r["crs"] == _reference_format_time(v)
         assert r["dep"] == (None if v is None else _reference_format_time(v))
+
+
+def test_p4_one_sql_text_for_spark_and_duckdb(spark):
+    """``sql_hhmm_to_clock``'s text, which ``clean_flights`` projects in
+    Spark and the DuckDB oracle queries, gives the same clock strings in
+    both engines, on integer and on double input (``CRSDepTime`` and
+    ``DepTime``'s raw types), and ``hhmm_to_clock`` agrees with them."""
+    import duckdb
+
+    from us_flight_bigdata_dashboard_spark.functions.timenorm import hhmm_to_clock, sql_hhmm_to_clock
+
+    values = [None, 0, 5, 59, 100, 959, 1200, 2359, 2400]
+    con = duckdb.connect()
+    for sql_type, spark_type in (("INT", "int"), ("DOUBLE", "double")):
+        df = spark.createDataFrame(list(enumerate(values)), "i int, v int")
+        df = df.selectExpr("i", f"CAST(v AS {spark_type}) AS hhmm")
+        rows = ", ".join(f"({i}, CAST({'NULL' if v is None else v} AS {sql_type}))" for i, v in enumerate(values))
+        for midnight in (True, False):
+            text = sql_hhmm_to_clock("hhmm", null_as_midnight=midnight)
+            got = df.selectExpr("i", text, "hhmm").orderBy("i").collect()
+            duck = con.execute(f"SELECT {text} FROM (VALUES {rows}) AS t(i, hhmm) ORDER BY i").fetchall()
+            column = df.select("i", hhmm_to_clock("hhmm", null_as_midnight=midnight)).orderBy("i").collect()
+            assert [r[1] for r in got] == [r[0] for r in duck] == [r[1] for r in column], (sql_type, midnight)
+            assert [r[1] for r in got] == [
+                None if v is None and not midnight else _reference_format_time(v) for v in values
+            ], (sql_type, midnight)

@@ -12,9 +12,11 @@ publish the same caches; a file with no ``Cancelled`` column takes the
 
 The caches are derived in the driver from one aggregation: every double
 equals the lazy Spark aggregates' bit for bit, on delays with up to four
-decimals. Each cache is published atomically: a reader polling during
-refreshes sees the old cache or the new one, and a first publish over
-Spark's writer layout leaves no stale file.
+decimals, and a delay past the exact sums' bound fails the refresh rather
+than vanish from a sum. Each cache is published atomically: a reader
+polling during refreshes sees the old cache or the new one, and a first
+publish over Spark's writer layout leaves no stale file. Building a
+refresh's Spark plans takes a few hundred py4j round trips.
 
 The dims are derived in the driver from the same aggregation, and written
 there: each equals ``star.build_star``'s, schema and rows, on input with two
@@ -290,6 +292,49 @@ def test_caches_equal_the_spark_aggregates_bit_for_bit(spark, fine_csv_dir, tmp_
     # ZZ, one group a month
     assert sum(r["airline_name"] is None for r in got["airline_monthly_performance"].collect()) == 2
     assert "Dallas/Fort Worth, TX" in {r["origin_city"] for r in got["airport_performance"].collect()}
+
+
+def test_a_delay_past_the_exact_sums_bound_fails_the_refresh(spark, flights_csv_dir, tmp_path):
+    """One ``DepDelayMinutes`` of 10¹⁴, past the bound of the grouped
+    pass's exact sums (|addend| < 10¹⁴): the refresh raises (ANSI mode)
+    rather than drop the addend or wrap the sum, and neither published
+    cache is replaced."""
+    out = str(tmp_path / "out")
+    refresh(spark, f"{flights_csv_dir}/2025_01.csv", out)
+    published = {name: (os.listdir(f"{out}/{name}"), _cache_bytes(out, name)) for name in CACHES}
+    rows = gen_flights_month(np.random.default_rng(5), 1, 200)
+    next(r for r in rows if r["DepDelayMinutes"] is not None)["DepDelayMinutes"] = 1e14
+    write_flights_csv(tmp_path / "2025_01.csv", rows)
+    with pytest.raises(Exception, match="NUMERIC_VALUE_OUT_OF_RANGE"):
+        refresh(spark, str(tmp_path / "2025_01.csv"), out)
+    assert {name: (os.listdir(f"{out}/{name}"), _cache_bytes(out, name)) for name in CACHES} == published
+
+
+def _cache_bytes(out: str, name: str) -> bytes:
+    with open(f"{out}/{name}/part-00000.csv", "rb") as f:
+        return f.read()
+
+
+def test_a_refresh_builds_its_plans_in_few_py4j_round_trips(spark, raw, tmp_path, monkeypatch):
+    """A warm ``--write-star`` refresh makes at most 500 py4j calls, each a
+    socket round trip to the JVM: its plans are built from SQL text, which
+    Spark parses in one call, not from one call per ``F.*`` function,
+    ``Column`` operator, list element and ``withColumn``."""
+    from py4j.clientserver import ClientServerConnection
+
+    refresh(spark, raw, str(tmp_path / "warm"), with_star=True)
+    calls = 0
+    send = ClientServerConnection.send_command
+
+    def counting(connection, command):
+        nonlocal calls
+        calls += 1
+        return send(connection, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    refresh(spark, raw, str(tmp_path / "out"), with_star=True)
+    monkeypatch.undo()
+    assert 0 < calls <= 500, calls
 
 
 def test_first_publish_replaces_the_spark_writer_layout(spark, flights_csv_dir, raw, runs, tmp_path):

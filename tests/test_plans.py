@@ -571,3 +571,34 @@ def test_refresh_is_one_fact_write_and_one_grouped_aggregation(spark, flights_cs
     assert "InsertIntoHadoopFsRelationCommand" in write_plan and f"{out}/star/fact_flights" in write_plan
     assert "InsertIntoHadoopFsRelationCommand" not in agg_plan
     assert "Expand" in agg_names, agg_names
+
+
+def test_grouped_pass_sums_bigints_not_wide_decimals(spark, flights_csv_dir, monkeypatch):
+    """The grouped pass's exact sums are ``bigint`` counts of 10⁻⁴: no
+    ``HashAggregate`` node of its physical plan carries a ``decimal`` wider
+    than 18 digits (a ``BigInteger`` per value, not a ``long``), in its
+    buffers or its expressions, and every ``*_sum`` column is a
+    ``bigint``. Read from the plan's JSON, where each attribute carries its
+    type."""
+    import json
+    import re
+
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from us_flight_bigdata_dashboard_spark.flights.clean import clean_flights
+    from us_flight_bigdata_dashboard_spark.flights.io import read_raw_flights
+    from us_flight_bigdata_dashboard_spark.flights.pipeline import grouped_pass
+
+    collected = []
+    to_arrow = DataFrame.toArrow
+    monkeypatch.setattr(DataFrame, "toArrow", lambda df: collected.append(df) or to_arrow(df))
+    grouped_pass(clean_flights(read_raw_flights(spark, f"{flights_csv_dir}/2025_01.csv")))
+    (grouped,) = collected
+    sums = {f.name: f.dataType.simpleString() for f in grouped.schema if f.name.endswith("_sum")}
+    measures = ("DepDel15", "DepDelayMinutes", "CarrierDelay", "WeatherDelay", "NASDelay", "LateAircraftDelay")
+    assert sums == {f"{c}_sum": "bigint" for c in (*measures, "Is_Cancelled")}
+    nodes = json.loads(grouped._jdf.queryExecution().sparkPlan().toJSON())
+    aggregates = [json.dumps(n) for n in nodes if n["class"].endswith(".HashAggregateExec")]
+    assert len(aggregates) == 2, [n["class"] for n in nodes]
+    wide = {d for a in aggregates for d in re.findall(r"decimal\((\d+),\d+\)", a) if int(d) > 18}
+    assert not wide, wide

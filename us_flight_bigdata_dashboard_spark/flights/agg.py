@@ -4,16 +4,16 @@ caches.
 Replaces src/aggregate_flight_data.py wholesale. The reference builds both
 caches from one hand-rolled 200k-row chunked partial/final merge, whose
 mean-merge is broken (SURVEY.md quirk Q1). Here that merge is done exactly.
-The partials (``partial_aggregates``: counts and the exact decimal sums of
-``functions/exact.py``'s ``dsum``/``davg``) are one grouping set of the
-refresh's single aggregation over the cleaned frame
-(``pipeline.grouped_pass``), per (carrier, month, origin airport, origin
-city, origin state), collected to the driver as the columns of an
-``io.Table``. That is bounded by the domain, not by base data, so
-``cache_tables`` finishes in the driver, on those columns as they are: it
-keys each row as the wide view's joins would (airline name, origin city),
-and ``io.rollup`` adds the decimals per (airline, month, city) for the
-airport cache, then per (airline, month) for the airline cache: the same
+The partials (``partial_aggregates``, SQL text: counts, and the exact
+sums behind ``functions/exact.py``'s ``dsum``/``davg`` as ``bigint``
+counts of 10⁻⁴) are one grouping set of the refresh's single aggregation
+over the cleaned frame (``pipeline.grouped_pass``), per (carrier, month,
+origin airport, origin city, origin state), collected to the driver as the
+columns of an ``io.Table``. That is bounded by the domain, not by base
+data, so ``cache_tables`` finishes in the driver, on those columns as they
+are: it keys each row as the wide view's joins would (airline name, origin
+city), and ``io.rollup`` adds the integers per (airline, month, city) for
+the airport cache, then per (airline, month) for the airline cache: the same
 additive rollup that builds the dims and that the serving layer
 re-aggregates the caches with. The caches stay ``io.Table`` columns until
 ``io.write_cache_csv`` writes them. Each sum is converted to double once,
@@ -36,18 +36,18 @@ interaction millisecond-cheap at any base-data scale.
 
 from __future__ import annotations
 
-from decimal import Decimal, localcontext
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from us_flight_bigdata_dashboard_spark.flights import seeds
 from us_flight_bigdata_dashboard_spark.flights.io import Table, rollup
 from us_flight_bigdata_dashboard_spark.flights.schemas import AIRLINE_MONTHLY_SCHEMA, AIRPORT_PERFORMANCE_SCHEMA
-from us_flight_bigdata_dashboard_spark.functions.exact import davg, decimal_sum, dsum
+from us_flight_bigdata_dashboard_spark.functions.exact import davg, dsum
 
 # the columns the caches take a dsum or davg of
 _DECIMAL_SUMS = ("DepDel15", "DepDelayMinutes", "CarrierDelay", "WeatherDelay", "NASDelay", "LateAircraftDelay")
+# the unit of the exact sums (``unit_addends``): 10⁻⁴, dsum's scale
+_UNITS = 10_000
 
 
 def airline_monthly_performance(wide: DataFrame) -> DataFrame:
@@ -99,30 +99,44 @@ _PARTIALS = (
 )
 
 
-def partial_aggregates() -> list[Column]:
-    """A1/A4 partials, the measures of the refresh's grouped pass: the row
-    count, the non-null counts of ``DepDel15`` and ``DepDelayMinutes``, the
-    exact ``decimal(38,4)`` sum of each ``_DECIMAL_SUMS`` column, and the
-    sum of ``Is_Cancelled``."""
+def unit_addends() -> list[str]:
+    """SQL text of the addends of ``partial_aggregates``' exact sums: each
+    ``_DECIMAL_SUMS`` column ``c`` as ``c_units``, the value rounded HALF_UP
+    to 4 decimals, as ``dsum``'s decimal cast rounds it, then scaled to a
+    ``bigint`` count of 10⁻⁴. Projected below the grouping sets' ``Expand``,
+    each row converts once, not once per set.
+
+    Spark sums a ``bigint`` in a ``long``; a decimal sum would be typed
+    ``decimal(38,4)`` and held in a ``BigInteger``, an allocation per row
+    and measure. Bounds: |addend| < 10¹⁴, the ``decimal(18,4)`` cast, and
+    |Σ| · 10⁴ < 2⁶³ (about 9.2 · 10¹⁴ minutes). With ANSI mode on, Spark
+    4's default, going past either raises; an addend is never dropped and
+    a sum never wraps."""
+    return [f"CAST(CAST({c} AS decimal(18,4)) * {_UNITS} AS bigint) AS {c}_units" for c in _DECIMAL_SUMS]
+
+
+def partial_aggregates() -> list[str]:
+    """A1/A4 partials, the measures of the refresh's grouped pass, as SQL
+    text: the row count, the non-null counts of ``DepDel15`` and
+    ``DepDelayMinutes``, the exact sum of each ``_DECIMAL_SUMS`` column in
+    units of 10⁻⁴ (of its ``unit_addends()`` column, a ``bigint``), and the
+    sum of ``Is_Cancelled``. The driver adds the partials as Python
+    ``int``s, exactly, and divides each total by 10⁴ once (``_divide``)."""
     return [
-        F.count(F.lit(1)).alias("total_flights"),
-        F.count("DepDel15").alias("DepDel15_count"),
-        F.count("DepDelayMinutes").alias("DepDelayMinutes_count"),
-        *(decimal_sum(c).alias(f"{c}_sum") for c in _DECIMAL_SUMS),
-        F.sum("Is_Cancelled").alias("Is_Cancelled_sum"),
+        "count(1) AS total_flights",
+        "count(DepDel15) AS DepDel15_count",
+        "count(DepDelayMinutes) AS DepDelayMinutes_count",
+        *(f"sum({c}_units) AS {c}_sum" for c in _DECIMAL_SUMS),
+        "sum(Is_Cancelled) AS Is_Cancelled_sum",
     ]
 
 
-def _double(d: Decimal | None) -> float | None:
-    """A decimal sum as a double, correctly rounded, as Spark's
-    ``CAST(decimal AS double)`` is. pyarrow 16's decimal → float64 cast is
-    not: it is one ulp off for about a third of 4-decimal values."""
-    return None if d is None else float(d)
-
-
-def _divide(s: float | None, n: int) -> float | None:
-    """``s / n`` as Spark divides a double by a count; null where the sum
-    is (a sum is null exactly when its count is 0)."""
+def _divide(s: int | float | None, n: int) -> float | None:
+    """``s / n``, null where the sum is (a sum is null exactly when its
+    count is 0): a double sum divided as Spark divides a double by a count,
+    or an exact sum in units of 10⁻⁴ divided by ``_UNITS``, correctly
+    rounded (CPython's ``int / int`` is), as Spark's ``CAST(decimal AS
+    double)`` rounds the same decimal sum."""
     return None if s is None else s / n
 
 
@@ -140,8 +154,7 @@ def cache_tables(origin: Table, dim_airports: Table) -> tuple[Table, Table]:
     city, null for a null or unknown code. ``io.rollup`` adds the partials
     per (airline, month, city) for the airport cache, then adds those per
     (airline, month) for the airline cache; rows come in key order, nulls
-    first. Python adds at 40 digits, wider than any ``decimal(38,4)``
-    value, so the decimals add exactly."""
+    first. The exact sums are Python ``int``s, which add exactly."""
     names = dict(seeds.AIRLINE_NAMES)
     partials, airports = origin.columns, dim_airports.columns
     # a join never matches a null code
@@ -151,17 +164,15 @@ def cache_tables(origin: Table, dim_airports: Table) -> tuple[Table, Table]:
         "month": partials["Month"],
         "origin_city": [cities.get(code) for code in partials["Origin"]],
     } | {c: partials[c] for c in _PARTIALS})
-    with localcontext() as ctx:
-        ctx.prec = 40
-        by_city = rollup(keyed, ("airline_name", "month", "origin_city"), _PARTIALS)
-        by_month = rollup(by_city, ("airline_name", "month"), _PARTIALS).columns
+    by_city = rollup(keyed, ("airline_name", "month", "origin_city"), _PARTIALS)
+    by_month = rollup(by_city, ("airline_name", "month"), _PARTIALS).columns
     hubs = {city: (lat, lon) for city, lat, lon in seeds.AIRPORT_COORDS}
     # the inner join on the hub coordinates: a null or non-hub city drops
     airport = by_city.take([i for i, city in enumerate(by_city.columns["origin_city"]) if city in hubs]).columns
     coords = [hubs[city] for city in airport["origin_city"]]
     airport["lat"], airport["lon"] = [lat for lat, _ in coords], [lon for _, lon in coords]
-    airport["delayed_flights"] = list(map(_double, airport["DepDel15_sum"]))
-    airline = by_month | {f"{c}_sum": list(map(_double, by_month[f"{c}_sum"])) for c in _DECIMAL_SUMS}
+    airport["delayed_flights"] = [_divide(units, _UNITS) for units in airport["DepDel15_sum"]]
+    airline = by_month | {f"{c}_sum": [_divide(units, _UNITS) for units in by_month[f"{c}_sum"]] for c in _DECIMAL_SUMS}
     mean = map(_divide, airline["DepDelayMinutes_sum"], airline["DepDelayMinutes_count"])
     late = map(_divide, airline["DepDel15_sum"], airline["DepDel15_count"])
     airline |= {"DepDelayMinutes_mean": list(mean), "on_time_rate": [None if r is None else 1.0 - r for r in late]}

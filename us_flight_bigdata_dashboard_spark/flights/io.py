@@ -72,7 +72,7 @@ def read_raw_flights(spark: SparkSession, path_or_glob: str) -> DataFrame:
         raise ValueError(f"raw CSV {files[0]} has no column {', '.join(map(repr, missing))} (header: {header})")
     schema = T.StructType([T.StructField(n, types.get(n, T.StringType())) for n in header])
     df = spark.read.option("header", True).option("enforceSchema", False).schema(schema).csv(files)
-    return df.select(*[n for n in types if n in header])
+    return df.selectExpr(*[f"`{n}`" for n in types if n in header])
 
 
 class Table:

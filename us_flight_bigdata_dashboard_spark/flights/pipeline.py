@@ -12,17 +12,22 @@ loaded (src/data_cleaning.py, then the sql/data_modeling.sql CTAS):
 
 1. with the star, Spark writes the fact, partitioned by ``month`` (the only
    Spark write);
-2. one Spark aggregation over the cleaned frame, ``grouped_pass``, collects
-   the distinct source tuples behind the three dims and the caches'
-   partials to the driver with ``toArrow()``, and hands each grouping set
-   on as an ``io.Table`` of Python columns;
+2. one Spark aggregation over the cleaned frame, ``grouped_pass``, one
+   ``GROUP BY ... GROUPING SETS`` statement, collects the distinct source
+   tuples behind the three dims and the caches' partials (exact sums as
+   ``bigint``s) to the driver with ``toArrow()``, and hands each grouping
+   set on as an ``io.Table`` of Python columns;
 3. the driver derives the dims (``star.dim_tables``) and both caches
    (``agg.cache_tables``) from those columns, exactly, with ``io.rollup``,
    and publishes each as one file (``io.write_parquet_file``,
    ``io.write_cache_csv``).
 
-Arrow appears only at the two ends of the driver's work: the collect here
-and the parquet writer in ``io``. The wide view is not on this path:
+The Spark plans (the reader's whitelist, ``clean.clean_flights``,
+``star.build_fact_flights`` and this pass) are SQL text, which Spark
+parses in one py4j call each: building them takes a few hundred round
+trips to the JVM, not one per function, operator and column. Arrow appears
+only at the two ends of the driver's work: the collect here and the
+parquet writer in ``io``. The wide view is not on this path:
 ``agg.cache_tables`` keys the partials as the view's joins would. The
 summary counts come from the same pass; nothing is read back.
 """
@@ -32,7 +37,6 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from us_flight_bigdata_dashboard_spark.flights import seeds
 from us_flight_bigdata_dashboard_spark.flights.agg import (
@@ -40,6 +44,7 @@ from us_flight_bigdata_dashboard_spark.flights.agg import (
     airport_performance,
     cache_tables,
     partial_aggregates,
+    unit_addends,
 )
 from us_flight_bigdata_dashboard_spark.flights.clean import clean_flights
 from us_flight_bigdata_dashboard_spark.flights.io import Table, read_raw_flights, write_cache_csv, write_parquet_file
@@ -89,13 +94,16 @@ def grouped_pass(clean: DataFrame) -> dict[str, Table]:
     """One aggregation of ``clean`` over ``GROUPING_SETS``, collected: per
     set, an ``io.Table`` of its keys and ``partial_aggregates()``. The rows
     of each set are picked by ``grouping_id()``, never by a null key, since
-    a null key is a group of its own."""
+    a null key is a group of its own. The aggregation is one SQL
+    statement, which Spark parses in one call; its exact sums add
+    ``unit_addends()``, projected once per row below the grouping."""
     keys = list(dict.fromkeys(k for s in GROUPING_SETS.values() for k in s))
-    grouped = (
-        clean.groupingSets([list(s) for s in GROUPING_SETS.values()], *keys)
-        .agg(*partial_aggregates(), F.grouping_id().alias("grouping_id"))
-        .toArrow()
-    )
+    by, sets = ", ".join(keys), ", ".join(f"({', '.join(s)})" for s in GROUPING_SETS.values())
+    grouped = clean.sparkSession.sql(
+        f"SELECT {by}, {', '.join(partial_aggregates())}, grouping_id() AS grouping_id"
+        f" FROM (SELECT *, {', '.join(unit_addends())} FROM {{clean}}) GROUP BY {by} GROUPING SETS ({sets})",
+        clean=clean,
+    ).toArrow()
     measures = [c for c in grouped.column_names if c not in keys and c != "grouping_id"]
     ids = grouped["grouping_id"].to_pylist()
     tables = {}

@@ -17,9 +17,9 @@ with ``io.rollup`` (the rollup that builds the caches and the dashboard's
 charts), row for row what ``build_dim_*`` give; ``dim_schemas`` types
 them as ``build_dim_*`` do, from the cleaned frame's schema, when
 ``io.write_parquet_file`` writes them. The refresh hands ``write_star`` the
-fact alone. ``build_star`` remains the lazy definition
-(``pipeline.run_pipeline``, the benchmark's layer timings) that the tests
-hold the driver's dims to.
+fact alone, ``build_fact_flights``: one projection of SQL text.
+``build_star`` remains the lazy definition (``pipeline.run_pipeline``, the
+benchmark's layer timings) that the tests hold the driver's dims to.
 """
 
 from __future__ import annotations
@@ -87,15 +87,16 @@ def build_dim_calendar(clean: DataFrame) -> DataFrame:
 def build_fact_flights(clean: DataFrame) -> DataFrame:
     """Fact projection with renames (P2, sql/data_modeling.sql:52-74), plus
     the flight month from the same source column ``dim_calendar`` takes it
-    from: the fact's partition column, which the wide view exposes."""
-    return clean.select(
-        F.col("FlightDate").alias("date_key"),
-        F.col("Month").alias("month"),
-        F.col("Reporting_Airline").alias("airline_code"),
-        F.col("Tail_Number"),
-        F.col("Flight_Number_Reporting_Airline").alias("flight_number"),
-        F.col("Origin").alias("origin_airport"),
-        F.col("Dest").alias("dest_airport"),
+    from: the fact's partition column, which the wide view exposes. One
+    projection of SQL text, which Spark parses in one call."""
+    return clean.selectExpr(
+        "FlightDate AS date_key",
+        "Month AS month",
+        "Reporting_Airline AS airline_code",
+        "Tail_Number",
+        "Flight_Number_Reporting_Airline AS flight_number",
+        "Origin AS origin_airport",
+        "Dest AS dest_airport",
         "CRSDepTime",
         "DepTime",
         "DepDelay",

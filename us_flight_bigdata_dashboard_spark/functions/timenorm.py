@@ -31,9 +31,15 @@ def hhmm_to_clock(c: Column | str, null_as_midnight: bool = False) -> Column:
 
 
 def sql_hhmm_to_clock(expr: str, null_as_midnight: bool = False) -> str:
-    """DuckDB-oracle rendering of ``hhmm_to_clock`` (same semantics)."""
+    """``hhmm_to_clock`` as SQL text over the SQL expression ``expr``: one
+    text that Spark SQL and DuckDB both parse (``INT`` and ``STRING``, not
+    DuckDB's bare ``VARCHAR``, which Spark rejects), giving the same clock
+    string for any whole HHMM value; a fractional one differs, as Spark's
+    ``CAST(... AS INT)`` truncates and DuckDB's rounds.
+    ``flights/clean.clean_flights`` projects it in Spark, and the DuckDB
+    oracle queries it."""
     base = f"COALESCE({expr}, 0)" if null_as_midnight else expr
-    padded = f"lpad(CAST(CAST({base} AS INTEGER) AS VARCHAR), 4, '0')"
+    padded = f"lpad(CAST(CAST({base} AS INT) AS STRING), 4, '0')"
     rolled = f"(CASE WHEN {padded} = '2400' THEN '0000' ELSE {padded} END)"
     clock = f"(substr({rolled}, 1, 2) || ':' || substr({rolled}, 3, 2))"
     if null_as_midnight:
