@@ -117,15 +117,22 @@ def test_p4_one_sql_text_for_spark_and_duckdb(spark):
     """``sql_hhmm_to_clock``'s text, which ``clean_flights`` projects in
     Spark and the DuckDB oracle queries, gives the same clock strings in
     both engines, on integer and on double input (``CRSDepTime`` and
-    ``DepTime``'s raw types), and ``hhmm_to_clock`` agrees with them."""
+    ``DepTime``'s raw types), and ``hhmm_to_clock`` agrees with them. A
+    fractional double is truncated, as the reference's ``astype(int)``
+    does, in both engines (Spark's ``INT`` cast truncates, DuckDB's
+    rounds)."""
     import duckdb
 
     from us_flight_bigdata_dashboard_spark.functions.timenorm import hhmm_to_clock, sql_hhmm_to_clock
 
-    values = [None, 0, 5, 59, 100, 959, 1200, 2359, 2400]
+    whole = [None, 0, 5, 59, 100, 959, 1200, 2359, 2400]
     con = duckdb.connect()
-    for sql_type, spark_type in (("INT", "int"), ("DOUBLE", "double")):
-        df = spark.createDataFrame(list(enumerate(values)), "i int, v int")
+    for sql_type, spark_type, values in (
+        ("INT", "int", whole),
+        ("DOUBLE", "double", [*whole, 0.4, 131.7, 959.5, 2399.6]),
+    ):
+        doubles = [(i, None if v is None else float(v)) for i, v in enumerate(values)]
+        df = spark.createDataFrame(doubles, "i int, v double")
         df = df.selectExpr("i", f"CAST(v AS {spark_type}) AS hhmm")
         rows = ", ".join(f"({i}, CAST({'NULL' if v is None else v} AS {sql_type}))" for i, v in enumerate(values))
         for midnight in (True, False):

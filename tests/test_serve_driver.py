@@ -1,15 +1,17 @@
 """The serving path in the driver: the cache reader against Spark's own CSV
-reader, the reader's rejection of malformed rows, the cache writer's round
-trip, ``io.rollup`` against Spark SQL's ``groupBy().agg(sum)``, the
-``serve`` command without a JVM, pandas or pyarrow,
-Spark's null, rounding, ``avg`` and ``sum`` semantics, columnar charts that
-look no ``Row`` field up by name, an empty cache, and a long run of
-distinct filters that submits no Spark job and keeps no per-filter state."""
+reader, the reader's rejection of malformed rows, the one file it reads of
+a cache directory, the cache writer's round trip, ``io.rollup`` against
+Spark SQL's ``groupBy().agg(sum)``, the ``serve`` command without a JVM,
+pandas or pyarrow, Spark's null, rounding, ``avg`` and ``sum`` semantics,
+columnar charts that look no ``Row`` field up by name, an empty cache, and
+a long run of distinct filters that submits no Spark job and keeps no
+per-filter state."""
 
 from __future__ import annotations
 
 import csv
 import gc
+import glob
 import json
 import os
 import random
@@ -232,24 +234,60 @@ def test_a_header_only_cache_serves_empty_charts(tmp_path):
             assert chart.count() == 0 and chart.collect() == []
 
 
+# rows that Spark's CSV writer quotes, writes in E notation and leaves empty
+SPARK_WRITTEN_ROWS = [
+    ("Alaska Airlines", 1, "Dallas/Fort Worth, TX", 12, 12345678.5, 32.8998, -97.0403),
+    (None, 2, "Boise, ID", None, None, 43.5644, -116.2228),
+    ("Spirit Airlines", None, "", 3, 1e-9, 27.9755, -82.5332),
+]
+
+
 def test_cache_reader_matches_spark_reader(spark, tmp_path):
-    """Output of the pipeline's cache writer: a quoted city with a comma, a
-    double Java writes in E notation, empty fields (null, also for a
-    string), next to Spark's ``_SUCCESS`` and ``.crc`` files."""
-    rows = [
-        ("Alaska Airlines", 1, "Dallas/Fort Worth, TX", 12, 12345678.5, 32.8998, -97.0403),
-        (None, 2, "Boise, ID", None, None, 43.5644, -116.2228),
-        ("Spirit Airlines", None, "", 3, 1e-9, 27.9755, -82.5332),
-    ]
+    """The part file of Spark's cache writer, read by its path: a quoted
+    city with a comma, a double Java writes in E notation, empty fields
+    (null, also for a string)."""
     out = str(tmp_path / "airport_performance")
-    write_cache(spark.createDataFrame(rows, AIRPORT_PERFORMANCE_SCHEMA), out)
+    write_cache(spark.createDataFrame(SPARK_WRITTEN_ROWS, AIRPORT_PERFORMANCE_SCHEMA), out)
     names = os.listdir(out)
     assert "_SUCCESS" in names and any(n.endswith(".crc") for n in names)
+    (part,) = glob.glob(os.path.join(out, "part-*.csv"))
+    with open(part) as f:
+        assert "1.23456785E7" in f.read()
 
     want = spark.read.option("header", True).schema(AIRPORT_PERFORMANCE_SCHEMA).csv(out).collect()
-    got = read_cache_csv(None, out, AIRPORT_PERFORMANCE_SCHEMA).collect()
+    got = read_cache_csv(None, part, AIRPORT_PERFORMANCE_SCHEMA).collect()
     assert got == want
     assert got[0]["delayed_flights"] == 12345678.5 and got[2]["origin_city"] is None
+
+
+def test_a_stray_part_file_beside_the_cache_is_not_read(tmp_path):
+    """A cache directory holding the published file and a stray part file
+    of Spark's naming with the same rows: only the published file is read,
+    so no row is served twice."""
+    out = tmp_path / "airline_monthly_performance"
+    out.mkdir()
+    shutil.copy(AIRLINE_FIXTURE, out / "part-00000.csv")
+    shutil.copy(AIRLINE_FIXTURE, out / "part-00000-0a1b-c000.csv")
+    cache = read_cache_csv(None, str(out), AIRLINE_MONTHLY_SCHEMA)
+    assert cache.count() == 42
+    assert cache.columns == read_cache_csv(None, AIRLINE_FIXTURE, AIRLINE_MONTHLY_SCHEMA).columns
+    assert kpis(cache)["total_flights"] == 1645503
+
+
+def test_a_spark_writer_layout_is_not_served_until_republished(spark, tmp_path):
+    """A directory in Spark's writer layout only (``agg.write_cache``) has
+    no published file: the reader names the one it looks for. Publishing
+    the cache with ``write_cache_csv`` replaces the layout, and it reads."""
+    out = str(tmp_path / "airport_performance")
+    write_cache(spark.createDataFrame(SPARK_WRITTEN_ROWS, AIRPORT_PERFORMANCE_SCHEMA), out)
+    with pytest.raises(FileNotFoundError, match="part-00000.csv"):
+        read_cache_csv(None, out, AIRPORT_PERFORMANCE_SCHEMA)
+
+    table = Table(dict(zip(AIRPORT_PERFORMANCE_SCHEMA.fieldNames(), map(list, zip(*SPARK_WRITTEN_ROWS)))))
+    write_cache_csv(table, out)
+    assert os.listdir(out) == ["part-00000.csv"]
+    got = read_cache_csv(None, out, AIRPORT_PERFORMANCE_SCHEMA).columns
+    assert got == table.columns | {"origin_city": ["Dallas/Fort Worth, TX", "Boise, ID", None]}
 
 
 def test_cache_writer_round_trips_through_both_readers(spark, tmp_path):

@@ -19,11 +19,11 @@ under a temporary name of its own, so concurrent publishes stay atomic.
 ``agg.write_cache``, Spark's cache writer, is kept as the reference the
 tests and the benchmark's layer timings hold the driver's writer to; the
 refresh does not call it.
-``read_cache_csv`` (S7) loads a cache into the driver with the ``csv``
-module, the codec ``write_cache_csv`` writes it with, as a ``Table`` of
-Python columns, and the serving layer answers every request there, without
-a JVM — the place ``st.cache_data`` holds them in the reference
-(src/app.py:29-46).
+``read_cache_csv`` (S7) loads a cache into the driver, exactly the one file
+``write_cache_csv`` publishes, with the ``csv`` module, the codec that
+writes it, as a ``Table`` of Python columns, and the serving layer answers
+every request there, without a JVM — the place ``st.cache_data`` holds
+them in the reference (src/app.py:29-46).
 
 Spark's grouping rules, which the refresh and the serving layer both follow
 in the driver, live here once: ``nulls_first`` orders keys, ``spark_sum``
@@ -135,14 +135,14 @@ def rollup(table: Table, keys: tuple[str, ...], values: tuple[str, ...] = ()) ->
 
 def _publish_file(path: str, name: str, write: Callable[[str], None]) -> None:
     """Publish the directory ``path``'s one file ``name``: ``write`` it
-    beside it under a dot name of its own (hidden from Spark's readers and
-    from ``read_cache_csv``'s ``part-*`` glob, and unique to this publish,
-    so concurrent publishes never share one), then move it onto ``name``
-    with ``os.replace``, so a concurrent reader sees the old file or a new
-    one, never a missing, partial or mixed one. The temporary file is
-    removed if ``write`` raises. The files of a Spark writer's layout are
-    removed first, so no stale rows remain; that one-time upgrade is not
-    atomic."""
+    beside it under a dot name of its own (hidden from Spark's readers, and
+    unique to this publish, so concurrent publishes never share one), then
+    move it onto ``name`` with ``os.replace``, so a concurrent reader sees
+    the old file or a new one, never a missing, partial or mixed one. The
+    temporary file is removed if ``write`` raises. The files of a Spark
+    writer's layout are removed first, because ``spark.read.parquet``
+    reads a dim's whole directory and would add their stale rows; that
+    one-time upgrade is not atomic."""
     os.makedirs(path, exist_ok=True)
     tmp = os.path.join(path, f".{name}.{os.urandom(8).hex()}.tmp")
     try:
@@ -157,10 +157,15 @@ def _publish_file(path: str, name: str, write: Callable[[str], None]) -> None:
     os.replace(tmp, os.path.join(path, name))
 
 
+# the name of a cache directory's one file: ``write_cache_csv`` publishes
+# it and ``read_cache_csv`` reads it
+CACHE_FILE = "part-00000.csv"
+
+
 def write_cache_csv(table: Table, path: str) -> None:
     """S6: ``table`` published (``_publish_file``) as the directory
-    ``path``'s one file, ``part-00000.csv``, with a header; null is an
-    empty field."""
+    ``path``'s one file, ``CACHE_FILE``, with a header; null is an empty
+    field."""
 
     def write(tmp: str) -> None:
         with open(tmp, "w", newline="", encoding="utf-8") as f:
@@ -168,7 +173,7 @@ def write_cache_csv(table: Table, path: str) -> None:
             w.writerow(table.columns)
             w.writerows(zip(*table.columns.values()))
 
-    _publish_file(path, "part-00000.csv", write)
+    _publish_file(path, CACHE_FILE, write)
 
 
 def write_parquet_file(table: Table, path: str, schema: T.StructType) -> None:
@@ -186,19 +191,6 @@ def write_parquet_file(table: Table, path: str, schema: T.StructType) -> None:
     _publish_file(path, "part-00000.parquet", lambda tmp: pyarrow.parquet.write_table(arrow, tmp))
 
 
-def _cache_files(path: str) -> list[str]:
-    """``path`` itself, or the ``part-*`` files of a cache writer's output
-    directory (Spark's ``_SUCCESS`` marker and ``.crc`` checksums skipped)."""
-    if not os.path.isdir(path):
-        return [path]
-    parts = sorted(
-        f for f in glob.glob(os.path.join(glob.escape(path), "part-*")) if not f.endswith(".crc")
-    )
-    if not parts:
-        raise FileNotFoundError(f"cache directory {path} has no part-* file")
-    return parts
-
-
 # the builtin that parses a field of each of a cache's Spark types
 _PARSERS = {"int": int, "bigint": int, "double": float, "string": str}
 
@@ -207,33 +199,33 @@ def read_cache_csv(spark: SparkSession | None, path: str, schema) -> Table:
     """S7: one dashboard cache, read into the driver: the inverse of
     ``write_cache_csv``.
 
-    ``path`` is a single CSV file, or a directory as ``write_cache_csv`` or
-    Spark's writer (``agg.write_cache``) lays it out. Columns are picked by
-    header name, not position, and each field is parsed with the builtin
-    for its type in ``schema`` (a Spark ``StructType``): ``int`` for
-    ``int`` and ``bigint``, ``float`` for ``double``. An empty field reads
-    as null and a blank line is skipped, as in Spark. Raises ``ValueError``
-    for a field that does not parse, and one naming the file when it is
-    empty, lacks a column (named too) or has a row whose field count differs
-    from its header's; ``FileNotFoundError`` for a directory with no part
-    file.
+    ``path`` is the cache's file, or the directory ``write_cache_csv``
+    publishes it in, of which only the file ``CACHE_FILE`` is read.
+    Columns are picked by header name, not position, and each field is
+    parsed with the builtin for its type in ``schema`` (a Spark
+    ``StructType``): ``int`` for ``int`` and ``bigint``, ``float`` for
+    ``double``. An empty field reads as null and a blank line is skipped,
+    as in Spark. Raises ``ValueError`` for a field that does not parse,
+    and one naming the file when it is empty, lacks a column (named too)
+    or has a row whose field count differs from its header's;
+    ``FileNotFoundError`` naming the file when there is none.
 
     No Spark session is used: ``spark`` is accepted, and ignored, only
     because the benchmark's serve workload passes one; pass ``None``.
     """
-    columns = {name: [] for name in schema.fieldNames()}
-    for file in _cache_files(path):
-        with open(file, newline="", encoding="utf-8") as f:
-            rows = [r for r in csv.reader(f) if r]
-        if not rows:
-            raise ValueError(f"cache file {file} is empty")
-        header = rows.pop(0)
-        missing = [n for n in columns if n not in header]
-        if missing:
-            raise ValueError(f"cache file {file} has no column {missing[0]!r} (header: {header})")
-        if any(len(r) != len(header) for r in rows):
-            raise ValueError(f"cache file {file} has a row whose field count differs from its header's")
-        for field in schema.fields:
-            parse, i = _PARSERS[field.dataType.simpleString()], header.index(field.name)
-            columns[field.name] += [None if v == "" else parse(v) for v in map(itemgetter(i), rows)]
+    file = path if os.path.isfile(path) else os.path.join(path, CACHE_FILE)
+    with open(file, newline="", encoding="utf-8") as f:
+        rows = [r for r in csv.reader(f) if r]
+    if not rows:
+        raise ValueError(f"cache file {file} is empty")
+    header = rows.pop(0)
+    missing = [n for n in schema.fieldNames() if n not in header]
+    if missing:
+        raise ValueError(f"cache file {file} has no column {missing[0]!r} (header: {header})")
+    if any(len(r) != len(header) for r in rows):
+        raise ValueError(f"cache file {file} has a row whose field count differs from its header's")
+    columns = {}
+    for field in schema.fields:
+        parse, i = _PARSERS[field.dataType.simpleString()], header.index(field.name)
+        columns[field.name] = [None if v == "" else parse(v) for v in map(itemgetter(i), rows)]
     return Table(columns)

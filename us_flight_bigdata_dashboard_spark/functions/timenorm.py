@@ -24,7 +24,7 @@ def hhmm_to_clock(c: Column | str, null_as_midnight: bool = False) -> Column:
     """
     col = F.col(c) if isinstance(c, str) else c
     base = F.coalesce(col, F.lit(0)) if null_as_midnight else col
-    padded = F.lpad(base.cast("int").cast("string"), 4, "0")
+    padded = F.lpad(F.floor(base).cast("int").cast("string"), 4, "0")
     rolled = F.when(padded == "2400", F.lit("0000")).otherwise(padded)
     clock = F.concat(F.substring(rolled, 1, 2), F.lit(":"), F.substring(rolled, 3, 2))
     return clock if null_as_midnight else F.when(col.isNull(), F.lit(None).cast("string")).otherwise(clock)
@@ -34,12 +34,13 @@ def sql_hhmm_to_clock(expr: str, null_as_midnight: bool = False) -> str:
     """``hhmm_to_clock`` as SQL text over the SQL expression ``expr``: one
     text that Spark SQL and DuckDB both parse (``INT`` and ``STRING``, not
     DuckDB's bare ``VARCHAR``, which Spark rejects), giving the same clock
-    string for any whole HHMM value; a fractional one differs, as Spark's
-    ``CAST(... AS INT)`` truncates and DuckDB's rounds.
+    string for any non-negative HHMM value. A fractional value is floored
+    before the ``INT`` cast, as the reference's ``astype(int)`` truncates
+    it, because Spark's cast truncates and DuckDB's rounds.
     ``flights/clean.clean_flights`` projects it in Spark, and the DuckDB
     oracle queries it."""
     base = f"COALESCE({expr}, 0)" if null_as_midnight else expr
-    padded = f"lpad(CAST(CAST({base} AS INT) AS STRING), 4, '0')"
+    padded = f"lpad(CAST(CAST(floor({base}) AS INT) AS STRING), 4, '0')"
     rolled = f"(CASE WHEN {padded} = '2400' THEN '0000' ELSE {padded} END)"
     clock = f"(substr({rolled}, 1, 2) || ':' || substr({rolled}, 3, 2))"
     if null_as_midnight:
