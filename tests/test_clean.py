@@ -3,9 +3,10 @@ normalization edge cases, P6 fallback branch, P8 weekend convention."""
 
 from __future__ import annotations
 
+import math
+
 from hypothesis import given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
 from us_flight_bigdata_dashboard_spark.flights.clean import clean_flights
 
@@ -47,6 +48,7 @@ def test_p4_time_normalization_edges(spark):
         _row(CRSDepTime=945, DepTime=None, Cancelled=1.0, DepDel15=None,
              DepDelay=None, DepDelayMinutes=None, ActualElapsedTime=None, AirTime=None),
         _row(CRSDepTime=2359, DepTime=131.0),
+        _row(DepTime=float("nan")),
     ]
     out = clean_flights(_mk_raw(spark, rows)).select("CRSDepTime", "DepTime").collect()
     assert [(r[0], r[1]) for r in out] == [
@@ -55,6 +57,7 @@ def test_p4_time_normalization_edges(spark):
         ("00:00", "00:00"),   # zero
         ("09:45", None),      # masked update: null DepTime stays null
         ("23:59", "01:31"),   # 3-digit actual time
+        ("09:45", None),      # a NaN DepTime is missing, as pandas reads it
     ]
 
 
@@ -75,10 +78,10 @@ def test_p5_p6_imputation_and_cancel_flag(spark):
 
 
 def test_p6_fallback_without_cancelled_column(spark):
-    rows = [_row(), _row(ActualElapsedTime=None)]
+    rows = [_row(), _row(ActualElapsedTime=None), _row(ActualElapsedTime=float("nan"))]
     raw = _mk_raw(spark, rows).drop("Cancelled")
     out = clean_flights(raw).select("Is_Cancelled").collect()
-    assert [r[0] for r in out] == [0, 1]
+    assert [r[0] for r in out] == [0, 1, 1]
 
 
 def test_p8_weekend_convention(spark):
@@ -102,11 +105,11 @@ def _reference_format_time(v) -> str | None:
 @given(st.lists(st.one_of(st.none(), st.integers(min_value=0, max_value=2400)), min_size=1, max_size=40))
 def test_p4_property_matches_reference_algorithm(spark, values):
     df = spark.createDataFrame([(v,) for v in values], "hhmm int")
-    from us_flight_bigdata_dashboard_spark.functions.timenorm import hhmm_to_clock
+    from us_flight_bigdata_dashboard_spark.functions.timenorm import sql_hhmm_to_clock
 
-    out = df.select(
-        hhmm_to_clock(F.col("hhmm"), null_as_midnight=True).alias("crs"),
-        hhmm_to_clock(F.col("hhmm"), null_as_midnight=False).alias("dep"),
+    out = df.selectExpr(
+        f"{sql_hhmm_to_clock('hhmm', null_as_midnight=True)} AS crs",
+        f"{sql_hhmm_to_clock('hhmm', null_as_midnight=False)} AS dep",
     ).collect()
     for v, r in zip(values, out):
         assert r["crs"] == _reference_format_time(v)
@@ -114,33 +117,37 @@ def test_p4_property_matches_reference_algorithm(spark, values):
 
 
 def test_p4_one_sql_text_for_spark_and_duckdb(spark):
-    """``sql_hhmm_to_clock``'s text, which ``clean_flights`` projects in
-    Spark and the DuckDB oracle queries, gives the same clock strings in
-    both engines, on integer and on double input (``CRSDepTime`` and
-    ``DepTime``'s raw types), and ``hhmm_to_clock`` agrees with them. A
+    """``sql_hhmm_to_clock``'s text, P4's one definition, which
+    ``clean_flights`` projects in Spark and the DuckDB oracle queries, gives
+    the same clock strings in both engines, on integer and on double input
+    (``CRSDepTime`` and ``DepTime``'s raw types), and the reference's. A
     fractional double is truncated, as the reference's ``astype(int)``
     does, in both engines (Spark's ``INT`` cast truncates, DuckDB's
-    rounds)."""
+    rounds), and a ``NaN`` is missing, as pandas reads it: ``00:00`` on the
+    scheduled path, null on the masked one."""
     import duckdb
 
-    from us_flight_bigdata_dashboard_spark.functions.timenorm import hhmm_to_clock, sql_hhmm_to_clock
+    from us_flight_bigdata_dashboard_spark.functions.timenorm import sql_hhmm_to_clock
 
     whole = [None, 0, 5, 59, 100, 959, 1200, 2359, 2400]
     con = duckdb.connect()
     for sql_type, spark_type, values in (
         ("INT", "int", whole),
-        ("DOUBLE", "double", [*whole, 0.4, 131.7, 959.5, 2399.6]),
+        ("DOUBLE", "double", [*whole, 0.4, 131.7, 959.5, 2399.6, math.nan]),
     ):
         doubles = [(i, None if v is None else float(v)) for i, v in enumerate(values)]
         df = spark.createDataFrame(doubles, "i int, v double")
         df = df.selectExpr("i", f"CAST(v AS {spark_type}) AS hhmm")
-        rows = ", ".join(f"({i}, CAST({'NULL' if v is None else v} AS {sql_type}))" for i, v in enumerate(values))
+        literals = ["NULL" if v is None else "'NaN'" if v != v else v for v in values]
+        rows = ", ".join(f"({i}, CAST({lit} AS {sql_type}))" for i, lit in enumerate(literals))
+        # pandas reads a NaN as missing
+        missing = [v is None or v != v for v in values]
         for midnight in (True, False):
             text = sql_hhmm_to_clock("hhmm", null_as_midnight=midnight)
             got = df.selectExpr("i", text, "hhmm").orderBy("i").collect()
             duck = con.execute(f"SELECT {text} FROM (VALUES {rows}) AS t(i, hhmm) ORDER BY i").fetchall()
-            column = df.select("i", hhmm_to_clock("hhmm", null_as_midnight=midnight)).orderBy("i").collect()
-            assert [r[1] for r in got] == [r[0] for r in duck] == [r[1] for r in column], (sql_type, midnight)
+            assert [r[1] for r in got] == [r[0] for r in duck], (sql_type, midnight)
             assert [r[1] for r in got] == [
-                None if v is None and not midnight else _reference_format_time(v) for v in values
+                None if gone and not midnight else _reference_format_time(None if gone else v)
+                for v, gone in zip(values, missing)
             ], (sql_type, midnight)

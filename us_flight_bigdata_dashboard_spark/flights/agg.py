@@ -89,14 +89,15 @@ def write_cache(df: DataFrame, path: str) -> None:
     df.coalesce(1).write.mode("overwrite").option("header", True).csv(path)
 
 
-# the columns of ``partial_aggregates()``
-_PARTIALS = (
-    "total_flights",
-    "DepDel15_count",
-    "DepDelayMinutes_count",
-    *(f"{c}_sum" for c in _DECIMAL_SUMS),
-    "Is_Cancelled_sum",
-)
+# the partials of the refresh's grouped pass, ``partial_aggregates()``:
+# column name → SQL text
+_PARTIALS = {
+    "total_flights": "count(1)",
+    "DepDel15_count": "count(DepDel15)",
+    "DepDelayMinutes_count": "count(DepDelayMinutes)",
+    **{f"{c}_sum": f"sum({c}_units)" for c in _DECIMAL_SUMS},
+    "Is_Cancelled_sum": "sum(Is_Cancelled)",
+}
 
 
 def unit_addends() -> list[str]:
@@ -122,13 +123,7 @@ def partial_aggregates() -> list[str]:
     units of 10⁻⁴ (of its ``unit_addends()`` column, a ``bigint``), and the
     sum of ``Is_Cancelled``. The driver adds the partials as Python
     ``int``s, exactly, and divides each total by 10⁴ once (``_divide``)."""
-    return [
-        "count(1) AS total_flights",
-        "count(DepDel15) AS DepDel15_count",
-        "count(DepDelayMinutes) AS DepDelayMinutes_count",
-        *(f"sum({c}_units) AS {c}_sum" for c in _DECIMAL_SUMS),
-        "sum(Is_Cancelled) AS Is_Cancelled_sum",
-    ]
+    return [f"{sql} AS {name}" for name, sql in _PARTIALS.items()]
 
 
 def _divide(s: int | float | None, n: int) -> float | None:
@@ -164,8 +159,8 @@ def cache_tables(origin: Table, dim_airports: Table) -> tuple[Table, Table]:
         "month": partials["Month"],
         "origin_city": [cities.get(code) for code in partials["Origin"]],
     } | {c: partials[c] for c in _PARTIALS})
-    by_city = rollup(keyed, ("airline_name", "month", "origin_city"), _PARTIALS)
-    by_month = rollup(by_city, ("airline_name", "month"), _PARTIALS).columns
+    by_city = rollup(keyed, ("airline_name", "month", "origin_city"), tuple(_PARTIALS))
+    by_month = rollup(by_city, ("airline_name", "month"), tuple(_PARTIALS)).columns
     hubs = {city: (lat, lon) for city, lat, lon in seeds.AIRPORT_COORDS}
     # the inner join on the hub coordinates: a null or non-hub city drops
     airport = by_city.take([i for i, city in enumerate(by_city.columns["origin_city"]) if city in hubs]).columns

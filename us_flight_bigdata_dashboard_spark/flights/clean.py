@@ -31,13 +31,13 @@ def clean_flights(raw: DataFrame) -> DataFrame:
     Each raw column keeps its place, cleaned where a step applies, and
     ``Is_Cancelled`` and ``Is_Weekend`` follow. Handles both raw variants:
     with a ``Cancelled`` column (flag cast to int, then dropped) or without
-    (fallback: ``ActualElapsedTime IS NULL`` — src/data_cleaning.py:61-64).
+    (fallback: ``ActualElapsedTime`` null or NaN — src/data_cleaning.py:61-64).
     """
     exprs = {
         # P3: FlightDate → DateType (src/data_cleaning.py:28)
         "FlightDate": "to_date(`FlightDate`)",
-        # P4: HHMM → 'HH:MM' — scheduled always (null→'00:00'), actual
-        # masked (src/data_cleaning.py:37-53)
+        # P4: HHMM → 'HH:MM' — scheduled always (null or NaN→'00:00'),
+        # actual masked (src/data_cleaning.py:37-53)
         "CRSDepTime": sql_hhmm_to_clock("`CRSDepTime`", null_as_midnight=True),
         "DepTime": sql_hhmm_to_clock("`DepTime`", null_as_midnight=False),
     } | {
@@ -46,8 +46,9 @@ def clean_flights(raw: DataFrame) -> DataFrame:
         c: f"coalesce(nanvl(`{c}`, NULL), CAST(0 AS DOUBLE))" for c in FILL_ZERO_COLS
     }
     columns = raw.columns
-    # P6: cancellation indicator, with fallback branch (src/data_cleaning.py:61-64)
-    cancelled = "coalesce(`Cancelled`, 0)" if "Cancelled" in columns else "`ActualElapsedTime` IS NULL"
+    # P6: cancellation indicator, with fallback branch (src/data_cleaning.py:61-64);
+    # the fallback counts a NaN as missing, as pandas' ``isna()`` does
+    cancelled = "coalesce(`Cancelled`, 0)" if "Cancelled" in columns else "nanvl(`ActualElapsedTime`, NULL) IS NULL"
     return raw.selectExpr(
         # P7: the raw flag is dropped (src/data_cleaning.py:66)
         *(f"{exprs.get(c, f'`{c}`')} AS `{c}`" for c in columns if c != "Cancelled"),

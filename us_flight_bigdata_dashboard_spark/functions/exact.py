@@ -30,25 +30,17 @@ def dsum(c: Column | str, scale: int = 4, precision: int = 28) -> Column:
     scale fine enough that quantization is below the semantic tolerance of
     the metric (4 is plenty for money/minutes metrics).
 
-    Overflow bound (know it at 100 TB): under Spark's default non-ANSI
-    mode an ADDEND whose magnitude exceeds 10^(precision-scale) casts to
-    NULL and is silently dropped from the sum — a data problem would yield
-    a quietly wrong result, not an error. Defaults give |addend| <
-    10^24 and exact final-double conversion while |sum|·10^scale < 2^53
-    (|sum| ≲ 9·10^11 at scale 4). For magnitudes anywhere near these,
-    raise ``precision``/lower ``scale``, and run with
-    ``spark.sql.ansi.enabled=true`` so overflow fails loudly instead.
+    Overflow bound (know it at 100 TB): the defaults give |addend| <
+    10^24 and an exact final-double conversion while |sum|·10^scale < 2^53
+    (|sum| ≲ 9·10^11 at scale 4). An addend whose magnitude exceeds
+    10^(precision-scale) fails its decimal cast: with ANSI mode on, Spark
+    4's default, which ``session.get_spark`` leaves, the query raises; with
+    ANSI off the cast gives NULL and the addend is silently dropped from
+    the sum. For magnitudes anywhere near these, raise ``precision`` or
+    lower ``scale``.
     """
-    return decimal_sum(c, scale, precision).cast("double")
-
-
-def decimal_sum(c: Column | str, scale: int = 4, precision: int = 28) -> Column:
-    """``dsum`` before its cast to double: the exact sum of the quantized
-    addends, typed ``decimal(min(precision + 10, 38), scale)`` as Spark
-    types a decimal sum. Such sums add exactly, so partial sums can be
-    merged later, in any order, before the one cast."""
     col = F.col(c) if isinstance(c, str) else c
-    return F.sum(col.cast(f"decimal({precision},{scale})"))
+    return F.sum(col.cast(f"decimal({precision},{scale})")).cast("double")
 
 
 def davg(c: Column | str, scale: int = 4, precision: int = 28) -> Column:

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from us_flight_bigdata_dashboard_spark.functions.exact import dsum, davg, sql_dsum, sql_davg
-from us_flight_bigdata_dashboard_spark.functions.timenorm import hhmm_to_clock, sql_hhmm_to_clock
+from us_flight_bigdata_dashboard_spark.functions.timenorm import sql_hhmm_to_clock
 from us_flight_bigdata_dashboard_spark.sources.catalog import load_table
 
 
@@ -759,33 +759,28 @@ GROUP BY 1, 2
 # P4: HHMM → 'HH:MM' time normalization
 # ---------------------------------------------------------------------------
 
+# a synthetic HHMM (covering 0..2400 incl. the rollover) from integer keys,
+# null on one branch to exercise the masked-update semantics
+_HHMM = "((l_orderkey * 37 + l_linenumber * 997) % 2401)"
+_DEP_HHMM = f"(CASE WHEN l_linenumber = 3 THEN NULL ELSE {_HHMM} END)"
+_TIME_NORMALIZATION = (
+    "l_orderkey",
+    "l_linenumber",
+    f"{_HHMM} AS crs_hhmm",
+    f"{sql_hhmm_to_clock(_HHMM, null_as_midnight=True)} AS crs_dep_clock",
+    f"{_DEP_HHMM} AS dep_hhmm",
+    f"{sql_hhmm_to_clock(_DEP_HHMM, null_as_midnight=False)} AS dep_clock",
+)
+
+
 def q_time_normalization(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's hardest scalar chain (P4, src/data_cleaning.py:37-53):
-    zero-pad, 2400-rollover, slice+concat — as a pure column expression.
-    A synthetic HHMM (covering 0..2400 incl. the rollover) is derived from
-    integer keys; nulls on one branch exercise the masked-update semantics."""
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    hhmm = (F.col("l_orderkey") * F.lit(37) + F.col("l_linenumber") * F.lit(997)) % F.lit(2401)
-    dep = F.when(F.col("l_linenumber") == 3, F.lit(None).cast("bigint")).otherwise(hhmm)
-    return lineitem.select(
-        "l_orderkey",
-        "l_linenumber",
-        hhmm.alias("crs_hhmm"),
-        hhmm_to_clock(hhmm, null_as_midnight=True).alias("crs_dep_clock"),
-        dep.alias("dep_hhmm"),
-        hhmm_to_clock(dep, null_as_midnight=False).alias("dep_clock"),
-    )
+    zero-pad, 2400-rollover, slice+concat — ``sql_hhmm_to_clock``'s pure
+    SQL expression, the text its DuckDB oracle runs too."""
+    return load_table(spark, sf_dir, "lineitem").selectExpr(*_TIME_NORMALIZATION)
 
 
-_ORACLE_TIME_NORMALIZATION = f"""
-SELECT l_orderkey,
-       l_linenumber,
-       (l_orderkey * 37 + l_linenumber * 997) % 2401 AS crs_hhmm,
-       {sql_hhmm_to_clock("((l_orderkey * 37 + l_linenumber * 997) % 2401)", null_as_midnight=True)} AS crs_dep_clock,
-       (CASE WHEN l_linenumber = 3 THEN NULL ELSE (l_orderkey * 37 + l_linenumber * 997) % 2401 END) AS dep_hhmm,
-       {sql_hhmm_to_clock("(CASE WHEN l_linenumber = 3 THEN NULL ELSE (l_orderkey * 37 + l_linenumber * 997) % 2401 END)", null_as_midnight=False)} AS dep_clock
-FROM lineitem
-"""
+_ORACLE_TIME_NORMALIZATION = f"SELECT {', '.join(_TIME_NORMALIZATION)} FROM lineitem"
 
 
 # ---------------------------------------------------------------------------
