@@ -1,9 +1,10 @@
 """The ``pipeline`` command end to end over the seeded raw CSVs.
 
 Run with and without ``--write-star``, it publishes the same cache rows, and
-its summary counts agree with the lazy ``run_pipeline`` outputs. The star it
-writes has a month-partitioned fact, and a one-month filter on the wide view
-over that star reads one month's fact files only.
+its summary counts agree with the lazy ``run_pipeline`` outputs. The
+``serve`` command reads the caches it publishes. The star it writes has a
+month-partitioned fact, and a one-month filter on the wide view over that
+star reads one month's fact files only.
 
 The raw reader picks columns by header name: the same rows in BTS column
 order, with extra columns, a quoted header and a trailing empty column,
@@ -46,11 +47,9 @@ from us_flight_bigdata_dashboard_spark.flights.agg import write_cache
 from us_flight_bigdata_dashboard_spark.flights.clean import DELAY_CAUSE_COLS
 from us_flight_bigdata_dashboard_spark.flights.io import read_cache_csv
 from us_flight_bigdata_dashboard_spark.flights.pipeline import refresh, run_pipeline
-from us_flight_bigdata_dashboard_spark.flights.schemas import AIRLINE_MONTHLY_SCHEMA, AIRPORT_PERFORMANCE_SCHEMA
+from us_flight_bigdata_dashboard_spark.flights.schemas import CACHES
 from us_flight_bigdata_dashboard_spark.flights.star import write_star
 from us_flight_bigdata_dashboard_spark.flights.views import wide_view
-
-CACHES = {"airline_monthly_performance": AIRLINE_MONTHLY_SCHEMA, "airport_performance": AIRPORT_PERFORMANCE_SCHEMA}
 
 
 def run_cli(raw: str, out: str, *flags: str) -> dict:
@@ -90,6 +89,25 @@ def test_both_runs_publish_identical_cache_rows(runs):
         plain, star = (_cache_rows(runs[k][0], name) for k in ("plain", "star"))
         assert len(plain) > 0
         assert plain == star
+
+
+def test_serve_reads_what_the_refresh_publishes(runs):
+    """``serve`` over the directory a ``--write-star`` refresh published,
+    star and all: the dashboard counts every cleaned flight, and names only
+    the seeds' airlines and hub cities."""
+    out, summary = runs["star"]
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        assert main(["serve", "--cache-dir", out]) == 0
+    served = json.loads(buf.getvalue())
+    total = served["kpis"]["total_flights"]
+    assert total == summary["rows_cleaned"] == 6000 and isinstance(total, int)
+    assert [r["month"] for r in served["monthly_trend"]] == [1, 2, 3]
+    names = {name for _, name in seeds.AIRLINE_NAMES}
+    assert all(r["airline_name"] in names for r in served["airline_rank"] if r["airline_name"] is not None)
+    hubs = {city for city, _, _ in seeds.AIRPORT_COORDS}
+    assert len(hubs) == 12
+    assert all(r["origin_city"] in hubs for r in served["geo_rollup"])
 
 
 def test_star_layout(runs):
@@ -214,7 +232,7 @@ def test_no_cancelled_column_takes_the_fallback(tmp_path):
     run_cli(str(tmp_path / "2025_01.csv"), str(tmp_path / "out"))
     cancelled = sum(r["ActualElapsedTime"] is None for r in rows)
     assert cancelled > 0
-    airline = read_cache_csv(None, f"{tmp_path}/out/airline_monthly_performance", AIRLINE_MONTHLY_SCHEMA)
+    airline = read_cache_csv(None, f"{tmp_path}/out/airline_monthly_performance", CACHES["airline_monthly_performance"])
     assert sum(r["Is_Cancelled_sum"] for r in airline.collect()) == cancelled
 
 

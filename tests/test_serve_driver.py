@@ -33,6 +33,7 @@ from us_flight_bigdata_dashboard_spark.flights.io import Table, read_cache_csv, 
 from us_flight_bigdata_dashboard_spark.flights.schemas import (
     AIRLINE_MONTHLY_SCHEMA,
     AIRPORT_PERFORMANCE_SCHEMA,
+    CACHES,
 )
 from us_flight_bigdata_dashboard_spark.flights.serve import (
     CAUSES,
@@ -68,7 +69,7 @@ def _fixture_rows():
 
 
 def test_cli_serve_runs_without_a_jvm(tmp_path, monkeypatch, capsys):
-    for name in ("airline_monthly_performance", "airport_performance"):
+    for name in CACHES:
         os.makedirs(tmp_path / name)
         shutil.copy(os.path.join(FIXTURES_DIR, f"{name}.csv"), tmp_path / name / "part-00000.csv")
         (tmp_path / name / "_SUCCESS").touch()
@@ -93,7 +94,7 @@ def test_cli_serve_runs_without_a_jvm(tmp_path, monkeypatch, capsys):
 
 
 def test_cli_serve_imports_no_pandas(tmp_path):
-    for name in ("airline_monthly_performance", "airport_performance"):
+    for name in CACHES:
         os.makedirs(tmp_path / name)
         shutil.copy(os.path.join(FIXTURES_DIR, f"{name}.csv"), tmp_path / name / "part-00000.csv")
     code = (

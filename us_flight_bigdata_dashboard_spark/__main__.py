@@ -30,13 +30,10 @@ def _cmd_pipeline(args) -> int:
 def _cmd_serve(args) -> int:
     from us_flight_bigdata_dashboard_spark.flights import serve
     from us_flight_bigdata_dashboard_spark.flights.io import read_cache_csv
-    from us_flight_bigdata_dashboard_spark.flights.schemas import (
-        AIRLINE_MONTHLY_SCHEMA,
-        AIRPORT_PERFORMANCE_SCHEMA,
-    )
+    from us_flight_bigdata_dashboard_spark.flights.schemas import CACHES
 
-    airline = read_cache_csv(None, f"{args.cache_dir}/airline_monthly_performance", AIRLINE_MONTHLY_SCHEMA)
-    airport = read_cache_csv(None, f"{args.cache_dir}/airport_performance", AIRPORT_PERFORMANCE_SCHEMA)
+    # the caches in ``CACHES`` order: the airline cache, then the airport cache
+    airline, airport = (read_cache_csv(None, f"{args.cache_dir}/{name}", schema) for name, schema in CACHES.items())
     fa, fp = serve.apply_shared_filter(airline, airport, months=args.months, airlines=args.airlines)
     result = {
         "kpis": serve.kpis(fa),

@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 
 from us_flight_bigdata_dashboard_spark.flights import seeds
 from us_flight_bigdata_dashboard_spark.flights.io import Table, rollup
-from us_flight_bigdata_dashboard_spark.flights.schemas import AIRLINE_MONTHLY_SCHEMA, AIRPORT_PERFORMANCE_SCHEMA
+from us_flight_bigdata_dashboard_spark.flights.schemas import CACHES
 from us_flight_bigdata_dashboard_spark.functions.exact import davg, dsum
 
 # the columns the caches take a dsum or davg of
@@ -135,10 +135,10 @@ def _divide(s: int | float | None, n: int) -> float | None:
     return None if s is None else s / n
 
 
-def cache_tables(origin: Table, dim_airports: Table) -> tuple[Table, Table]:
-    """Both caches in the driver, ``(airline_monthly_performance,
-    airport_performance)``, with the columns of ``AIRLINE_MONTHLY_SCHEMA``
-    and ``AIRPORT_PERFORMANCE_SCHEMA``, in their order and of their types.
+def cache_tables(origin: Table, dim_airports: Table) -> dict[str, Table]:
+    """Both caches in the driver, keyed and ordered as ``schemas.CACHES``:
+    each cache's name → a ``Table`` with the columns of its schema, in
+    their order and of their types.
 
     ``origin``, an ``io.Table`` as ``pipeline.grouped_pass`` gives it,
     holds ``partial_aggregates()`` per (``Reporting_Airline``, ``Month``,
@@ -171,7 +171,7 @@ def cache_tables(origin: Table, dim_airports: Table) -> tuple[Table, Table]:
     mean = map(_divide, airline["DepDelayMinutes_sum"], airline["DepDelayMinutes_count"])
     late = map(_divide, airline["DepDel15_sum"], airline["DepDel15_count"])
     airline |= {"DepDelayMinutes_mean": list(mean), "on_time_rate": [None if r is None else 1.0 - r for r in late]}
-    return tuple(
-        Table({name: columns[name] for name in schema.fieldNames()})
-        for columns, schema in ((airline, AIRLINE_MONTHLY_SCHEMA), (airport, AIRPORT_PERFORMANCE_SCHEMA))
-    )
+    return {
+        name: Table({c: columns[c] for c in schema.fieldNames()})
+        for (name, schema), columns in zip(CACHES.items(), (airline, airport), strict=True)
+    }

@@ -23,7 +23,9 @@ refresh does not call it.
 ``write_cache_csv`` publishes, with the ``csv`` module, the codec that
 writes it, as a ``Table`` of Python columns, and the serving layer answers
 every request there, without a JVM — the place ``st.cache_data`` holds
-them in the reference (src/app.py:29-46).
+them in the reference (src/app.py:29-46). Which caches there are, and each
+one's directory name and schema, is ``schemas.CACHES``: the refresh writes,
+and the ``serve`` command reads, each cache it names.
 
 Spark's grouping rules, which the refresh and the serving layer both follow
 in the driver, live here once: ``nulls_first`` orders keys, ``spark_sum``

@@ -116,21 +116,22 @@ def grouped_pass(clean: DataFrame) -> dict[str, Table]:
 
 
 def refresh(spark: SparkSession, raw_csv: str, out: str, with_star: bool = False) -> dict:
-    """One full refresh into ``out``: both caches, and with ``with_star``
-    the star parquet under ``out/star``. Returns the summary counts."""
+    """One full refresh into ``out``: each cache of ``schemas.CACHES`` as
+    ``out/<name>``, and with ``with_star`` the star parquet under
+    ``out/star``. Returns the summary counts."""
     clean = clean_flights(read_raw_flights(spark, raw_csv))
     if with_star:
         write_star({"fact_flights": build_fact_flights(clean)}, f"{out}/star")
     groups = grouped_pass(clean)
     dims = dim_tables(groups["origin"], groups["dest"], groups["calendar"])
-    airline_monthly, airport_perf = cache_tables(groups["origin"], dims["dim_airports"])
+    caches = cache_tables(groups["origin"], dims["dim_airports"])
     if with_star:
         for name, schema in dim_schemas(clean.schema).items():
             write_parquet_file(dims[name], f"{out}/star/{name}", schema)
-    write_cache_csv(airline_monthly, f"{out}/airline_monthly_performance")
-    write_cache_csv(airport_perf, f"{out}/airport_performance")
+    for name, table in caches.items():
+        write_cache_csv(table, f"{out}/{name}")
     return {
         "rows_cleaned": sum(groups["origin"].columns["total_flights"]),
-        "airline_monthly_rows": airline_monthly.count(),
-        "airport_perf_rows": airport_perf.count(),
+        "airline_monthly_rows": caches["airline_monthly_performance"].count(),
+        "airport_perf_rows": caches["airport_performance"].count(),
     }

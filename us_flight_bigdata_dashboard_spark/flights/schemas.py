@@ -5,6 +5,12 @@ src/data_cleaning.py:15-25, and fixes types via CTAS CAST,
 sql/data_modeling.sql:9-11,25,55-58 — here both are one explicit StructType).
 0/1 indicator columns stay IntegerType (they are SUMmed downstream,
 src/aggregate_flight_data.py:57 — SURVEY.md §1.2).
+
+``CACHES`` is the dashboard's cache contract: the name and schema of each
+cache, in one ordered map. The refresh publishes exactly these
+(``agg.cache_tables``, ``pipeline.refresh``) and the ``serve`` command reads
+exactly these, as the reference's dashboard reads the two files its
+aggregation script writes (src/aggregate_flight_data.py → src/app.py:29-46).
 """
 
 from __future__ import annotations
@@ -77,3 +83,10 @@ AIRPORT_PERFORMANCE_SCHEMA = T.StructType(
         T.StructField("lon", T.DoubleType()),
     ]
 )
+
+# The dashboard's caches, in publish order: each one's directory name under
+# the refresh's output directory → its schema.
+CACHES = {
+    "airline_monthly_performance": AIRLINE_MONTHLY_SCHEMA,
+    "airport_performance": AIRPORT_PERFORMANCE_SCHEMA,
+}
