@@ -272,7 +272,7 @@ ALL_AIRPORTS = {**HUB_AIRPORTS, **OTHER_AIRPORTS}
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tests", shuffle_partitions=8)
+    s = get_spark()
     yield s
 
 

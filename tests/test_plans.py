@@ -573,6 +573,41 @@ def test_refresh_is_one_fact_write_and_one_grouped_aggregation(spark, flights_cs
     assert "Expand" in agg_names, agg_names
 
 
+def test_refresh_records_three_sql_executions(spark, flights_csv_dir, tmp_path):
+    """A ``--write-star`` refresh records exactly three SQL executions in
+    Spark's status store, in this order: the fact write, the temporary view
+    that ``spark.sql(..., clean=clean)`` creates for ``{clean}``, and the
+    grouped aggregation. A stray action (a summary ``count()``, a
+    schema-inferring read) would record a fourth."""
+    from us_flight_bigdata_dashboard_spark.__main__ import main
+
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def latest(n: int) -> list:
+        """The last ``n`` executions the store retains, oldest first. The
+        store keeps only the newest ``spark.sql.ui.retainedExecutions``, so
+        its count stops growing in a long session; select by id instead."""
+        count = int(store.executionsCount())
+        execs = store.executionsList(max(count - n, 0), max(min(count, n), 1))
+        return [execs.apply(i) for i in range(execs.size())]
+
+    before = max((e.executionId() for e in latest(1)), default=-1)
+    out = str(tmp_path / "out")
+    assert main(["pipeline", "--raw", f"{flights_csv_dir}/2025_0[1-3].csv", "--out", out, "--write-star"]) == 0
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    execs = [e for e in latest(10) if e.executionId() > before]
+    graphs = []
+    for ex in execs:
+        nodes = store.planGraph(ex.executionId()).allNodes()
+        graphs.append([nodes.apply(j).name() for j in range(nodes.size())])
+    assert len(graphs) == 3, graphs
+    write, view, aggregation = graphs
+    assert write[0] == "Execute InsertIntoHadoopFsRelationCommand", write
+    assert f"{out}/star/fact_flights" in execs[0].physicalPlanDescription()
+    assert view == ["Execute CreateViewCommand"], view
+    assert "Expand" in aggregation and not any(n.startswith("Execute") for n in aggregation), aggregation
+
+
 def test_grouped_pass_sums_bigints_not_wide_decimals(spark, flights_csv_dir, monkeypatch):
     """The grouped pass's exact sums are ``bigint`` counts of 10⁻⁴: no
     ``HashAggregate`` node of its physical plan carries a ``decimal`` wider

@@ -68,7 +68,7 @@ def main() -> int:
             .getOrCreate()
         )
     else:
-        spark = get_spark("oracle-check")
+        spark = get_spark()
 
     con = duckdb.connect()
     for t in TABLES:

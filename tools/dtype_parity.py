@@ -99,7 +99,7 @@ _COMPAT = {(_DATE, _TS), (_TS, _DATE)}
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
-    spark = get_spark("dtype-parity")
+    spark = get_spark()
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")

@@ -21,7 +21,7 @@ def _cmd_pipeline(args) -> int:
     from us_flight_bigdata_dashboard_spark.flights.pipeline import refresh
     from us_flight_bigdata_dashboard_spark.session import get_spark
 
-    summary = refresh(get_spark("flights-pipeline"), args.raw, args.out, with_star=args.write_star)
+    summary = refresh(get_spark(), args.raw, args.out, with_star=args.write_star)
     summary["out"] = args.out
     print(json.dumps(summary))
     return 0
@@ -61,7 +61,7 @@ def _cmd_query(args) -> int:
     if args.name not in qs:
         print(f"unknown query {args.name!r}; see --list", file=sys.stderr)
         return 2
-    spark = get_spark(f"query-{args.name}")
+    spark = get_spark()
     df = qs[args.name](spark, args.sf_dir)
     if args.explain:
         df.explain("formatted")
@@ -92,7 +92,7 @@ def _cmd_curate(args) -> int:
     from us_flight_bigdata_dashboard_spark.session import get_spark
     from us_flight_bigdata_dashboard_spark.sources.catalog import load_table
 
-    spark = get_spark("curate")
+    spark = get_spark()
     docs = load_table(spark, args.sf_dir, "documents")
     flags = q_quality_filter_rules(spark, args.sf_dir).select(
         "doc_id", "fail_reason", "keep"

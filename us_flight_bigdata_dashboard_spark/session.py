@@ -1,17 +1,17 @@
-"""SparkSession factory.
+"""SparkSession factory: one Spark configuration for every caller.
 
-Tuned defaults for the test harness (single-JVM local[N]) that remain correct
-on a real cluster: AQE on (runtime re-plan, skew-join splitting, partition
-coalescing), explicit shuffle-partition count, Arrow enabled for the few
-Pandas-UDF paths, UTC session timezone for deterministic date math. AQE,
-its coalescing and skew-join splitting, and 128 MB scan splits
-(``spark.sql.files.maxPartitionBytes``) are Spark 4.1's own defaults, so
-they are not set here; ``tests/test_session.py`` checks the session
-reports them.
-
-At 100 TB scale the same config holds — shuffle.partitions is overridden per
-deployment (rule of thumb: 2-3× total executor cores, or let AQE coalesce
-from a high initial value), and maxPartitionBytes keeps scan tasks ~128 MB.
+The CLI's commands, the tests, the benchmark and the oracle tools all build
+their session with ``get_spark()``, which takes no options, so each runs the
+configuration users run. Local parallelism comes from ``SPARK_GRAFT_CPUS``
+(``local[*]`` when unset), and the shuffle-partition count from it alone:
+32 for ``*``, else ``max(cpus, 4)``. The rest is fixed: UTC session
+timezone for deterministic date math, Arrow enabled for the few Pandas-UDF
+paths, a 32 MB broadcast-join threshold, and ``TIMESTAMP(NANOS)`` parquet
+columns read as ``bigint``. AQE, its coalescing and skew-join splitting,
+and 128 MB scan splits (``spark.sql.files.maxPartitionBytes``) are Spark
+4.1's own defaults, so they are not set here; ``tests/test_session.py``
+checks the session reports them and that a second ``get_spark()`` call
+leaves every value this module sets unchanged.
 """
 
 from __future__ import annotations
@@ -20,6 +20,8 @@ import os
 import re
 
 from pyspark.sql import SparkSession
+
+APP_NAME = "us_flight_bigdata_dashboard_spark"
 
 
 def default_driver_memory(meminfo: str) -> str:
@@ -38,18 +40,16 @@ def _host_meminfo() -> str:
         return ""
 
 
-def get_spark(
-    app_name: str = "us_flight_bigdata_dashboard_spark",
-    shuffle_partitions: int | None = None,
-) -> SparkSession:
-    """Build (or reuse) a SparkSession with engine defaults.
+def get_spark() -> SparkSession:
+    """Build (or reuse) the one SparkSession, named ``APP_NAME``.
 
-    ``SPARK_GRAFT_CPUS`` (driver contract) sets local parallelism; defaults
-    to local[*].
+    ``SPARK_GRAFT_CPUS`` (driver contract) sets local parallelism, default
+    ``local[*]``, and the shuffle-partition count: 32 for ``*``, else
+    ``max(cpus, 4)``. Reusing a session re-applies the same values, so a
+    second call changes nothing.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    if shuffle_partitions is None:
-        shuffle_partitions = 32 if cpus == "*" else max(int(cpus), 4)
+    shuffle_partitions = 32 if cpus == "*" else max(int(cpus), 4)
 
     # State-API-v2 support: transformWithStateInPandas spawns a DRIVER-side
     # Python worker that only sees the JVM's PYTHONPATH (addPyFile cannot
@@ -63,7 +63,7 @@ def get_spark(
 
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
-        .appName(app_name)
+        .appName(APP_NAME)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
