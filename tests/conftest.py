@@ -371,15 +371,15 @@ def flights_csv_dir(tmp_path_factory):
 
 @pytest.fixture(scope="session")
 def golden_airline_cache():
-    from us_flight_bigdata_dashboard_spark.flights.io import read_cache_csv
-    from us_flight_bigdata_dashboard_spark.flights.schemas import AIRLINE_MONTHLY_SCHEMA
+    from us_flight_bigdata_dashboard_spark.flights.io import CACHES, read_cache_csv
 
-    return read_cache_csv(None, os.path.join(FIXTURES_DIR, "airline_monthly_performance.csv"), AIRLINE_MONTHLY_SCHEMA)
+    name = "airline_monthly_performance"
+    return read_cache_csv(None, os.path.join(FIXTURES_DIR, f"{name}.csv"), CACHES[name])
 
 
 @pytest.fixture(scope="session")
 def golden_airport_cache():
-    from us_flight_bigdata_dashboard_spark.flights.io import read_cache_csv
-    from us_flight_bigdata_dashboard_spark.flights.schemas import AIRPORT_PERFORMANCE_SCHEMA
+    from us_flight_bigdata_dashboard_spark.flights.io import CACHES, read_cache_csv
 
-    return read_cache_csv(None, os.path.join(FIXTURES_DIR, "airport_performance.csv"), AIRPORT_PERFORMANCE_SCHEMA)
+    name = "airport_performance"
+    return read_cache_csv(None, os.path.join(FIXTURES_DIR, f"{name}.csv"), CACHES[name])

@@ -34,6 +34,7 @@ import os
 import re
 import shutil
 import threading
+from pathlib import Path
 
 import numpy as np
 import pytest
@@ -45,9 +46,8 @@ from us_flight_bigdata_dashboard_spark.__main__ import main
 from us_flight_bigdata_dashboard_spark.flights import seeds
 from us_flight_bigdata_dashboard_spark.flights.agg import write_cache
 from us_flight_bigdata_dashboard_spark.flights.clean import DELAY_CAUSE_COLS
-from us_flight_bigdata_dashboard_spark.flights.io import read_cache_csv
+from us_flight_bigdata_dashboard_spark.flights.io import CACHES, column_types, read_cache_csv
 from us_flight_bigdata_dashboard_spark.flights.pipeline import refresh, run_pipeline
-from us_flight_bigdata_dashboard_spark.flights.schemas import CACHES
 from us_flight_bigdata_dashboard_spark.flights.star import write_star
 from us_flight_bigdata_dashboard_spark.flights.views import wide_view
 
@@ -268,12 +268,11 @@ def test_mixed_header_orders_fail_rather_than_misread(flights_csv_dir, bts_csv_d
 BOUNDARY = [0.00005, 2.00015, 12.34565, 99.99995]
 
 
-@pytest.fixture(scope="module")
-def fine_csv_dir(tmp_path_factory):
-    """Two months whose delays and causes carry 1-4 decimals, one in ten on
-    a quantization boundary, and whose carrier ``ZZ`` (about one flight in
-    twenty) has no name in ``seeds.AIRLINE_NAMES``."""
-    root = tmp_path_factory.mktemp("flights_fine")
+def write_fine_csvs(root: Path) -> None:
+    """Into the directory ``root``, two months whose delays and causes
+    carry 1-4 decimals, one in ten on a quantization boundary, and whose
+    carrier ``ZZ`` (about one flight in twenty) has no name in
+    ``seeds.AIRLINE_NAMES``."""
     rng = np.random.default_rng(11)
 
     def fine() -> float:
@@ -290,6 +289,12 @@ def fine_csv_dir(tmp_path_factory):
                 r["DepDelayMinutes"] = fine()
                 r.update({c: fine() for c in DELAY_CAUSE_COLS})
         write_flights_csv(root / f"2025_{month:02d}.csv", rows)
+
+
+@pytest.fixture(scope="module")
+def fine_csv_dir(tmp_path_factory):
+    root = tmp_path_factory.mktemp("flights_fine")
+    write_fine_csvs(root)
     return str(root)
 
 
@@ -304,7 +309,7 @@ def test_caches_equal_the_spark_aggregates_bit_for_bit(spark, fine_csv_dir, tmp_
     lazy = run_pipeline(spark, raw)
     got = {name: read_cache_csv(None, f"{tmp_path}/{name}", schema) for name, schema in CACHES.items()}
     for name, df in (("airline_monthly_performance", lazy.airline_monthly), ("airport_performance", lazy.airport_perf)):
-        assert list(got[name].collect()[0].asDict()) == CACHES[name].fieldNames()
+        assert list(got[name].collect()[0].asDict()) == list(column_types(CACHES[name]))
         # ``==`` on every double: no tolerance
         assert _sorted_rows(got[name].collect()) == _sorted_rows(df.collect()), name
     # ZZ, one group a month
@@ -412,17 +417,16 @@ def test_a_reader_during_refreshes_sees_the_old_or_the_new_cache(spark, flights_
 DIMS = ("dim_airports", "dim_airlines", "dim_calendar")
 
 
-@pytest.fixture(scope="module")
-def quirky_csv_dir(tmp_path_factory):
-    """Two months with the input the dims must group as Spark does: ``DFW``
-    spelled two ways (the smaller, non-hub one wins), ``ORD`` with a null
-    dest city (null sorts first, so ``ORD`` flights get a null city),
-    ``SEA`` with a null state, ``TPA`` also spelled ``Ãampa, FL`` (which
-    sorts after ``Tampa, FL`` by code point, not before it as in a locale
-    collation), ``MSY`` only under a non-ASCII name, some null ``Origin``
-    codes, carriers ``ZZ`` (no name) and null, and ``2025-01-15`` (a
-    Wednesday) also given ``DayOfWeek`` 7 (the smaller tuple wins)."""
-    root = tmp_path_factory.mktemp("flights_quirky")
+def write_quirky_csvs(root: Path) -> None:
+    """Into the directory ``root``, two months with the input the dims must
+    group as Spark does: ``DFW`` spelled two ways (the smaller, non-hub one
+    wins), ``ORD`` with a null dest city (null sorts first, so ``ORD``
+    flights get a null city), ``SEA`` with a null state, ``TPA`` also
+    spelled ``Ãampa, FL`` (which sorts after ``Tampa, FL`` by code point,
+    not before it as in a locale collation), ``MSY`` only under a non-ASCII
+    name, some null ``Origin`` codes, carriers ``ZZ`` (no name) and null,
+    and ``2025-01-15`` (a Wednesday) also given ``DayOfWeek`` 7 (the smaller
+    tuple wins)."""
     rng = np.random.default_rng(13)
     for month in (1, 2):
         rows = gen_flights_month(rng, month, 800)
@@ -446,6 +450,12 @@ def quirky_csv_dir(tmp_path_factory):
             if r["FlightDate"] == "2025-01-15" and i % 2 == 0:
                 r["DayOfWeek"] = 7
         write_flights_csv(root / f"2025_{month:02d}.csv", rows)
+
+
+@pytest.fixture(scope="module")
+def quirky_csv_dir(tmp_path_factory):
+    root = tmp_path_factory.mktemp("flights_quirky")
+    write_quirky_csvs(root)
     return str(root)
 
 

@@ -535,6 +535,15 @@ def test_qoi_decode_no_shuffle_between_stages(spark):
     assert count_exchanges(df) <= 1, p
 
 
+def _latest(store, n: int) -> list:
+    """The last ``n`` executions Spark's SQL status ``store`` retains, oldest
+    first. The store keeps only the newest ``spark.sql.ui.retainedExecutions``,
+    so its count stops growing in a long session; select by id instead."""
+    count = int(store.executionsCount())
+    execs = store.executionsList(max(count - n, 0), max(min(count, n), 1))
+    return [execs.apply(i) for i in range(execs.size())]
+
+
 def test_refresh_is_one_fact_write_and_one_grouped_aggregation(spark, flights_csv_dir, tmp_path):
     """A ``--write-star`` refresh reads the raw CSV in two SQL executions,
     each with one ``Scan csv`` node: the fact write, and one grouping-sets
@@ -545,19 +554,18 @@ def test_refresh_is_one_fact_write_and_one_grouped_aggregation(spark, flights_cs
     from us_flight_bigdata_dashboard_spark.__main__ import main
 
     store = spark._jsparkSession.sharedState().statusStore()
-    first = int(store.executionsCount())
+    before = max((e.executionId() for e in _latest(store, 1)), default=-1)
     out = str(tmp_path / "out")
     assert main(["pipeline", "--raw", f"{flights_csv_dir}/2025_0[1-3].csv", "--out", out, "--write-star"]) == 0
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-    execs = store.executionsList(first, int(store.executionsCount()) - first)
+    execs = [e for e in _latest(store, 10) if e.executionId() > before]
     driver_written = [
         f"{out}/{name}"
         for name in ("airline_monthly_performance", "airport_performance", "star/dim_airports",
                      "star/dim_airlines", "star/dim_calendar")
     ]
     scanning = []
-    for i in range(execs.size()):
-        ex = execs.apply(i)
+    for ex in execs:
         plan = ex.physicalPlanDescription()
         assert "InsertIntoHadoopFsRelationCommand" not in plan or not any(d in plan for d in driver_written), plan
         nodes = store.planGraph(ex.executionId()).allNodes()
@@ -582,20 +590,11 @@ def test_refresh_records_three_sql_executions(spark, flights_csv_dir, tmp_path):
     from us_flight_bigdata_dashboard_spark.__main__ import main
 
     store = spark._jsparkSession.sharedState().statusStore()
-
-    def latest(n: int) -> list:
-        """The last ``n`` executions the store retains, oldest first. The
-        store keeps only the newest ``spark.sql.ui.retainedExecutions``, so
-        its count stops growing in a long session; select by id instead."""
-        count = int(store.executionsCount())
-        execs = store.executionsList(max(count - n, 0), max(min(count, n), 1))
-        return [execs.apply(i) for i in range(execs.size())]
-
-    before = max((e.executionId() for e in latest(1)), default=-1)
+    before = max((e.executionId() for e in _latest(store, 1)), default=-1)
     out = str(tmp_path / "out")
     assert main(["pipeline", "--raw", f"{flights_csv_dir}/2025_0[1-3].csv", "--out", out, "--write-star"]) == 0
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-    execs = [e for e in latest(10) if e.executionId() > before]
+    execs = [e for e in _latest(store, 10) if e.executionId() > before]
     graphs = []
     for ex in execs:
         nodes = store.planGraph(ex.executionId()).allNodes()

@@ -2,7 +2,7 @@
 reader, the reader's rejection of malformed rows, the one file it reads of
 a cache directory, the cache writer's round trip, ``io.rollup`` against
 Spark SQL's ``groupBy().agg(sum)``, the ``serve`` command without a JVM,
-pandas or pyarrow, Spark's null, rounding, ``avg`` and ``sum`` semantics,
+Spark, numpy, pandas or pyarrow, Spark's null, rounding, ``avg`` and ``sum`` semantics,
 columnar charts that look no ``Row`` field up by name, an empty cache, and
 a long run of distinct filters that submits no Spark job and keeps no
 per-filter state."""
@@ -24,16 +24,17 @@ import tracemalloc
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from us_flight_bigdata_dashboard_spark import session
 from us_flight_bigdata_dashboard_spark.__main__ import main
 from us_flight_bigdata_dashboard_spark.flights.agg import write_cache
-from us_flight_bigdata_dashboard_spark.flights.io import Table, read_cache_csv, rollup, write_cache_csv
-from us_flight_bigdata_dashboard_spark.flights.schemas import (
-    AIRLINE_MONTHLY_SCHEMA,
-    AIRPORT_PERFORMANCE_SCHEMA,
+from us_flight_bigdata_dashboard_spark.flights.io import (
     CACHES,
+    Table,
+    column_types,
+    read_cache_csv,
+    rollup,
+    write_cache_csv,
 )
 from us_flight_bigdata_dashboard_spark.flights.serve import (
     CAUSES,
@@ -52,6 +53,8 @@ from conftest import FIXTURES_DIR
 DEFAULT_AIRLINES = ["Alaska Airlines", "Allegiant Air", "American Airlines"]
 AIRLINE_FIXTURE = os.path.join(FIXTURES_DIR, "airline_monthly_performance.csv")
 AIRPORT_FIXTURE = os.path.join(FIXTURES_DIR, "airport_performance.csv")
+# each cache's columns, as Spark DDL text
+AIRLINE_MONTHLY_SCHEMA, AIRPORT_PERFORMANCE_SCHEMA = CACHES.values()
 
 
 def _write_csv(path, header, rows) -> str:
@@ -101,7 +104,7 @@ def test_cli_serve_imports_no_pandas(tmp_path):
         "import sys\n"
         "from us_flight_bigdata_dashboard_spark.__main__ import main\n"
         f"assert main(['serve', '--cache-dir', {str(tmp_path)!r}]) == 0\n"
-        "print(sorted({'pandas', 'pyarrow'} & set(sys.modules)), file=sys.stderr)\n"
+        "print(sorted({'pandas', 'pyarrow', 'pyspark', 'py4j', 'numpy'} & set(sys.modules)), file=sys.stderr)\n"
     )
     root = os.path.dirname(os.path.dirname(FIXTURES_DIR))
     done = subprocess.run([sys.executable, "-c", code], cwd=root, capture_output=True, text=True, check=True)
@@ -220,15 +223,15 @@ def test_a_header_only_cache_serves_empty_charts(tmp_path):
             header = next(csv.reader(f))
         cache = read_cache_csv(None, _write_csv(tmp_path / os.path.basename(fixture), header, []), schema)
         assert cache.count() == 0 and cache.collect() == []
-        assert list(cache.columns) == schema.fieldNames()
+        assert list(cache.columns) == list(column_types(schema))
         caches[fixture] = cache
     airline, airport = caches[AIRLINE_FIXTURE], caches[AIRPORT_FIXTURE]
 
     assert filter_options(airline) == ([], [])
     for months, airlines in ((None, None), ([1], ["Alaska Airlines"])):
         fa, fp = apply_shared_filter(airline, airport, months=months, airlines=airlines)
-        assert list(fa.columns) == AIRLINE_MONTHLY_SCHEMA.fieldNames()
-        assert list(fp.columns) == AIRPORT_PERFORMANCE_SCHEMA.fieldNames()
+        assert list(fa.columns) == list(column_types(AIRLINE_MONTHLY_SCHEMA))
+        assert list(fp.columns) == list(column_types(AIRPORT_PERFORMANCE_SCHEMA))
         assert kpis(fa) == {"total_flights": 0, "on_time_pct": 0.0, "delayed_flights": 0.0, "cancelled_flights": 0}
         assert [tuple(r) for r in delay_attribution(fa).collect()] == [(cause, None) for cause, _ in CAUSES]
         for chart in (airline_rank(fa), monthly_trend(fa), geo_rollup(fp)):
@@ -284,7 +287,7 @@ def test_a_spark_writer_layout_is_not_served_until_republished(spark, tmp_path):
     with pytest.raises(FileNotFoundError, match="part-00000.csv"):
         read_cache_csv(None, out, AIRPORT_PERFORMANCE_SCHEMA)
 
-    table = Table(dict(zip(AIRPORT_PERFORMANCE_SCHEMA.fieldNames(), map(list, zip(*SPARK_WRITTEN_ROWS)))))
+    table = Table(dict(zip(column_types(AIRPORT_PERFORMANCE_SCHEMA), map(list, zip(*SPARK_WRITTEN_ROWS)))))
     write_cache_csv(table, out)
     assert os.listdir(out) == ["part-00000.csv"]
     got = read_cache_csv(None, out, AIRPORT_PERFORMANCE_SCHEMA).columns
@@ -297,7 +300,7 @@ def test_cache_writer_round_trips_through_both_readers(spark, tmp_path):
     to the same rows: nulls, a quoted city with a comma, doubles that need
     all 17 digits or E notation, a bigint past 2**53, and a header-only
     table."""
-    names = AIRPORT_PERFORMANCE_SCHEMA.fieldNames()
+    names = list(column_types(AIRPORT_PERFORMANCE_SCHEMA))
     full = Table(dict(zip(names, map(list, zip(
         ("Alaska Airlines", 1, "Dallas/Fort Worth, TX", 2**62 + 1, 12345678.5, 32.8998, -97.0403),
         (None, 2, "Boise, ID", None, 0.1 + 0.2, 43.5644, None),
@@ -318,7 +321,7 @@ def test_concurrent_publishes_are_atomic(tmp_path):
     """Two threads publish two different airport caches into one directory,
     300 times each, while a third reads it: no publish raises, every read
     equals one of the two tables, and no temporary file is left behind."""
-    names = AIRPORT_PERFORMANCE_SCHEMA.fieldNames()
+    names = list(column_types(AIRPORT_PERFORMANCE_SCHEMA))
     rng = random.Random(3)
 
     def table(n: int) -> Table:
@@ -379,7 +382,7 @@ def test_a_failed_publish_keeps_the_old_file_and_leaves_no_temporary(tmp_path):
         def __str__(self) -> str:
             raise RuntimeError("unwritable value")
 
-    schema = T.StructType([T.StructField("flights", T.LongType())])
+    schema = "flights bigint"
     out = str(tmp_path / "cache")
     write_cache_csv(Table({"flights": [1, 2]}), out)
     with pytest.raises(RuntimeError, match="unwritable value"):
@@ -397,13 +400,7 @@ def test_rollup_equals_spark_sql_group_by_sum(spark, tmp_path):
     doubles, whose sums depend on the order of addition, are equal. A
     table with no row rolls up to an empty table that keeps its column
     names."""
-    schema = T.StructType([
-        T.StructField("city", T.StringType()),
-        T.StructField("month", T.IntegerType()),
-        T.StructField("flights", T.LongType()),
-        T.StructField("minutes", T.DoubleType()),
-        T.StructField("rare", T.DoubleType()),
-    ])
+    schema = "city string, month int, flights bigint, minutes double, rare double"
     rng = random.Random(7)
     rows = []
     for _ in range(600):
@@ -411,7 +408,7 @@ def test_rollup_equals_spark_sql_group_by_sum(spark, tmp_path):
         rare = "" if city != "Atlanta, GA" else repr(rng.random())
         minutes = "" if rng.random() < 0.1 else repr(rng.random() * rng.choice([1, 1e3, 1e6]))
         rows.append([city, month, rng.randint(0, 2**40), minutes, rare])
-    path = _write_csv(tmp_path / "partials.csv", schema.fieldNames(), rows)
+    path = _write_csv(tmp_path / "partials.csv", list(column_types(schema)), rows)
     df = spark.read.option("header", True).schema(schema).csv(path)
     assert df.rdd.getNumPartitions() == 1
     table = read_cache_csv(None, path, schema)
@@ -427,7 +424,7 @@ def test_rollup_equals_spark_sql_group_by_sum(spark, tmp_path):
     assert [r["rare"] is None for r in by_city] == [True, False, True]  # null, "Atlanta, GA", "Boise, ID"
     assert rollup(table, ("month",)).columns == {"month": [None, 1, 2]}
 
-    empty = rollup(Table({name: [] for name in schema.fieldNames()}), ("city", "month"), values)
+    empty = rollup(Table({name: [] for name in column_types(schema)}), ("city", "month"), values)
     assert empty.count() == 0 and empty.columns == {"city": [], "month": [], "flights": [], "minutes": [], "rare": []}
 
 

@@ -29,18 +29,20 @@ def _cmd_pipeline(args) -> int:
 
 def _cmd_serve(args) -> int:
     from us_flight_bigdata_dashboard_spark.flights import serve
-    from us_flight_bigdata_dashboard_spark.flights.io import read_cache_csv
-    from us_flight_bigdata_dashboard_spark.flights.schemas import CACHES
+    from us_flight_bigdata_dashboard_spark.flights.io import CACHES, read_cache_csv
 
     # the caches in ``CACHES`` order: the airline cache, then the airport cache
-    airline, airport = (read_cache_csv(None, f"{args.cache_dir}/{name}", schema) for name, schema in CACHES.items())
+    airline, airport = (read_cache_csv(None, f"{args.cache_dir}/{name}", ddl) for name, ddl in CACHES.items())
     fa, fp = serve.apply_shared_filter(airline, airport, months=args.months, airlines=args.airlines)
-    result = {
-        "kpis": serve.kpis(fa),
-        "airline_rank": [r.asDict() for r in serve.airline_rank(fa).collect()],
-        "monthly_trend": [r.asDict() for r in serve.monthly_trend(fa).collect()],
-        "delay_attribution": [r.asDict() for r in serve.delay_attribution(fa).collect()],
-        "geo_rollup": [r.asDict() for r in serve.geo_rollup(fp).collect()],
+    charts = {
+        "airline_rank": serve.airline_rank(fa),
+        "monthly_trend": serve.monthly_trend(fa),
+        "delay_attribution": serve.delay_attribution(fa),
+        "geo_rollup": serve.geo_rollup(fp),
+    }
+    # each chart's rows as objects, read off its columns
+    result = {"kpis": serve.kpis(fa)} | {
+        name: [dict(zip(table.columns, row)) for row in zip(*table.columns.values())] for name, table in charts.items()
     }
     print(json.dumps(result, ensure_ascii=False))
     return 0
@@ -152,7 +154,7 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--write-star", action="store_true", help="also materialize the star schema as parquet under OUT/star")
     p.set_defaults(fn=_cmd_pipeline)
 
-    s = sub.add_parser("serve", help="dashboard queries over the caches → JSON (no JVM)")
+    s = sub.add_parser("serve", help="dashboard queries over the caches → JSON (loads no Spark, JVM, numpy or pandas)")
     s.add_argument("--cache-dir", required=True)
     s.add_argument("--months", nargs="*", type=int, default=None)
     s.add_argument("--airlines", nargs="*", default=None)

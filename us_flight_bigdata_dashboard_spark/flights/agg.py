@@ -16,7 +16,8 @@ city), and ``io.rollup`` adds the integers per (airline, month, city) for
 the airport cache, then per (airline, month) for the airline cache: the same
 additive rollup that builds the dims and that the serving layer
 re-aggregates the caches with. The caches stay ``io.Table`` columns until
-``io.write_cache_csv`` writes them. Each sum is converted to double once,
+``io.write_cache_csv`` writes them, each with the columns its DDL text in
+``io.CACHES`` names, in that order. Each sum is converted to double once,
 correctly rounded, so every value is bit-equal to the
 one-aggregation-per-cache definitions over the view below, and
 ``DepDelayMinutes_mean`` is the TRUE mean (documented divergence from the
@@ -40,8 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from us_flight_bigdata_dashboard_spark.flights import seeds
-from us_flight_bigdata_dashboard_spark.flights.io import Table, rollup
-from us_flight_bigdata_dashboard_spark.flights.schemas import CACHES
+from us_flight_bigdata_dashboard_spark.flights.io import CACHES, Table, column_types, rollup
 from us_flight_bigdata_dashboard_spark.functions.exact import davg, dsum
 
 # the columns the caches take a dsum or davg of
@@ -136,8 +136,8 @@ def _divide(s: int | float | None, n: int) -> float | None:
 
 
 def cache_tables(origin: Table, dim_airports: Table) -> dict[str, Table]:
-    """Both caches in the driver, keyed and ordered as ``schemas.CACHES``:
-    each cache's name → a ``Table`` with the columns of its schema, in
+    """Both caches in the driver, keyed and ordered as ``io.CACHES``: each
+    cache's name → a ``Table`` with the columns its DDL text names, in
     their order and of their types.
 
     ``origin``, an ``io.Table`` as ``pipeline.grouped_pass`` gives it,
@@ -172,6 +172,6 @@ def cache_tables(origin: Table, dim_airports: Table) -> dict[str, Table]:
     late = map(_divide, airline["DepDel15_sum"], airline["DepDel15_count"])
     airline |= {"DepDelayMinutes_mean": list(mean), "on_time_rate": [None if r is None else 1.0 - r for r in late]}
     return {
-        name: Table({c: columns[c] for c in schema.fieldNames()})
-        for (name, schema), columns in zip(CACHES.items(), (airline, airport), strict=True)
+        name: Table({c: columns[c] for c in column_types(ddl)})
+        for (name, ddl), columns in zip(CACHES.items(), (airline, airport), strict=True)
     }

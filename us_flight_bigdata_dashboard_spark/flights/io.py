@@ -24,8 +24,14 @@ refresh does not call it.
 writes it, as a ``Table`` of Python columns, and the serving layer answers
 every request there, without a JVM — the place ``st.cache_data`` holds
 them in the reference (src/app.py:29-46). Which caches there are, and each
-one's directory name and schema, is ``schemas.CACHES``: the refresh writes,
-and the ``serve`` command reads, each cache it names.
+one's directory name and columns, is ``CACHES``, as Spark DDL text: the
+refresh writes, and the ``serve`` command reads, each cache it names, and
+``column_types`` is the one parse of that text.
+
+Spark is imported only where it is used: by ``read_raw_flights``, by
+``write_parquet_file`` and by ``Table.collect``, which hands ``Row``s to the
+tests and the benchmark. The ``serve`` command calls none of them, so it
+loads no pyspark, py4j or numpy.
 
 Spark's grouping rules, which the refresh and the serving layer both follow
 in the driver, live here once: ``nulls_first`` orders keys, ``spark_sum``
@@ -44,11 +50,11 @@ import os
 from collections.abc import Callable, Iterable
 from operator import itemgetter
 from pathlib import Path
+from typing import TYPE_CHECKING
 
-from pyspark.sql import DataFrame, Row, SparkSession
-from pyspark.sql import types as T
-
-from us_flight_bigdata_dashboard_spark.flights.schemas import RAW_FLIGHTS_SCHEMA
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame, Row, SparkSession
+    from pyspark.sql import types as T
 
 
 def read_raw_flights(spark: SparkSession, path_or_glob: str) -> DataFrame:
@@ -63,6 +69,10 @@ def read_raw_flights(spark: SparkSession, path_or_glob: str) -> DataFrame:
     then falls back, P6). Raises ``ValueError`` naming any other column
     the header lacks, and ``FileNotFoundError`` when no file matches.
     """
+    from pyspark.sql import types as T
+
+    from us_flight_bigdata_dashboard_spark.flights.schemas import RAW_FLIGHTS_SCHEMA
+
     files = sorted(f for f in glob.glob(path_or_glob) if os.path.isfile(f))
     if not files:
         raise FileNotFoundError(f"no raw CSV file matches {path_or_glob!r}")
@@ -95,6 +105,11 @@ class Table:
         return len(next(iter(self.columns.values()), ()))
 
     def collect(self) -> list[Row]:
+        """The rows as Spark ``Row``s, which the tests and the benchmark
+        read by position and by name. It imports pyspark when called;
+        the ``serve`` command reads a chart's ``columns`` instead."""
+        from pyspark.sql import Row
+
         row = Row(*self.columns)
         return [row(*values) for values in zip(*self.columns.values())]
 
@@ -163,6 +178,29 @@ def _publish_file(path: str, name: str, write: Callable[[str], None]) -> None:
 # it and ``read_cache_csv`` reads it
 CACHE_FILE = "part-00000.csv"
 
+# The dashboard's caches, in publish order: each one's directory name under
+# the refresh's output directory → its columns, as Spark DDL text, which
+# ``spark.read.schema`` and ``createDataFrame`` take as it is. The golden
+# CSV headers (src/aggregate_flight_data.py:38-40, 51-79).
+CACHES = {
+    "airline_monthly_performance": (
+        "airline_name string, month int, DepDel15_count bigint, DepDel15_sum double, DepDelayMinutes_mean double, "
+        "Is_Cancelled_sum bigint, CarrierDelay_sum double, WeatherDelay_sum double, NASDelay_sum double, "
+        "LateAircraftDelay_sum double, on_time_rate double"
+    ),
+    "airport_performance": (
+        "airline_name string, month int, origin_city string, total_flights bigint, delayed_flights double, "
+        "lat double, lon double"
+    ),
+}
+
+
+def column_types(ddl: str) -> dict[str, str]:
+    """The columns of ``ddl``, Spark DDL text of ``name type`` pairs
+    separated by commas, as a map from each name, in column order, to its
+    type's name."""
+    return dict(column.split() for column in ddl.split(","))
+
 
 def write_cache_csv(table: Table, path: str) -> None:
     """S6: ``table`` published (``_publish_file``) as the directory
@@ -185,7 +223,7 @@ def write_parquet_file(table: Table, path: str, schema: T.StructType) -> None:
     the Arrow types Spark's own collect uses), which
     ``spark.read.parquet(path)`` reads back."""
     # imported here, so that serving, which writes no parquet, loads no
-    # pyarrow; ``import pyarrow.parquet`` binds ``pyarrow`` too
+    # pyarrow or Spark; ``import pyarrow.parquet`` binds ``pyarrow`` too
     import pyarrow.parquet
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -197,15 +235,15 @@ def write_parquet_file(table: Table, path: str, schema: T.StructType) -> None:
 _PARSERS = {"int": int, "bigint": int, "double": float, "string": str}
 
 
-def read_cache_csv(spark: SparkSession | None, path: str, schema) -> Table:
+def read_cache_csv(spark: SparkSession | None, path: str, schema: str) -> Table:
     """S7: one dashboard cache, read into the driver: the inverse of
     ``write_cache_csv``.
 
     ``path`` is the cache's file, or the directory ``write_cache_csv``
     publishes it in, of which only the file ``CACHE_FILE`` is read.
     Columns are picked by header name, not position, and each field is
-    parsed with the builtin for its type in ``schema`` (a Spark
-    ``StructType``): ``int`` for ``int`` and ``bigint``, ``float`` for
+    parsed with the builtin for its type in ``schema`` (Spark DDL text, as
+    ``CACHES`` holds it): ``int`` for ``int`` and ``bigint``, ``float`` for
     ``double``. An empty field reads as null and a blank line is skipped,
     as in Spark. Raises ``ValueError`` for a field that does not parse,
     and one naming the file when it is empty, lacks a column (named too)
@@ -220,14 +258,14 @@ def read_cache_csv(spark: SparkSession | None, path: str, schema) -> Table:
         rows = [r for r in csv.reader(f) if r]
     if not rows:
         raise ValueError(f"cache file {file} is empty")
-    header = rows.pop(0)
-    missing = [n for n in schema.fieldNames() if n not in header]
+    header, types = rows.pop(0), column_types(schema)
+    missing = [n for n in types if n not in header]
     if missing:
         raise ValueError(f"cache file {file} has no column {missing[0]!r} (header: {header})")
     if any(len(r) != len(header) for r in rows):
         raise ValueError(f"cache file {file} has a row whose field count differs from its header's")
     columns = {}
-    for field in schema.fields:
-        parse, i = _PARSERS[field.dataType.simpleString()], header.index(field.name)
-        columns[field.name] = [None if v == "" else parse(v) for v in map(itemgetter(i), rows)]
+    for name, type_name in types.items():
+        parse, i = _PARSERS[type_name], header.index(name)
+        columns[name] = [None if v == "" else parse(v) for v in map(itemgetter(i), rows)]
     return Table(columns)

@@ -116,7 +116,7 @@ def grouped_pass(clean: DataFrame) -> dict[str, Table]:
 
 
 def refresh(spark: SparkSession, raw_csv: str, out: str, with_star: bool = False) -> dict:
-    """One full refresh into ``out``: each cache of ``schemas.CACHES`` as
+    """One full refresh into ``out``: each cache of ``io.CACHES`` as
     ``out/<name>``, and with ``with_star`` the star parquet under
     ``out/star``. Returns the summary counts."""
     clean = clean_flights(read_raw_flights(spark, raw_csv))

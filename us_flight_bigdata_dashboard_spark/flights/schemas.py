@@ -1,21 +1,22 @@
-"""Explicit schemas for the flight pipeline.
+"""Explicit schema of the raw flight CSVs.
 
 The engine never relies on inference (reference whitelists columns at ingest,
 src/data_cleaning.py:15-25, and fixes types via CTAS CAST,
-sql/data_modeling.sql:9-11,25,55-58 — here both are one explicit StructType).
+sql/data_modeling.sql:9-11,25,55-58 — here both are one explicit StructType,
+which ``io.read_raw_flights`` applies by header name).
 0/1 indicator columns stay IntegerType (they are SUMmed downstream,
 src/aggregate_flight_data.py:57 — SURVEY.md §1.2).
 
-``CACHES`` is the dashboard's cache contract: the name and schema of each
-cache, in one ordered map. The refresh publishes exactly these
-(``agg.cache_tables``, ``pipeline.refresh``) and the ``serve`` command reads
-exactly these, as the reference's dashboard reads the two files its
-aggregation script writes (src/aggregate_flight_data.py → src/app.py:29-46).
+The dashboard caches' columns are not here: ``io.CACHES`` spells each one
+once, as Spark DDL text, so that the serving tier, which reads them, imports
+no Spark.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import types as T
+
+from us_flight_bigdata_dashboard_spark.flights.io import CACHES
 
 # The 28-column ingest keep-list (src/data_cleaning.py:15-22) + `Cancelled`.
 RAW_FLIGHTS_SCHEMA = T.StructType(
@@ -53,40 +54,6 @@ RAW_FLIGHTS_SCHEMA = T.StructType(
     ]
 )
 
-# Output contract of the airline-monthly aggregation (golden CSV header,
-# src/aggregate_flight_data.py:38-40).
-AIRLINE_MONTHLY_SCHEMA = T.StructType(
-    [
-        T.StructField("airline_name", T.StringType()),
-        T.StructField("month", T.IntegerType()),
-        T.StructField("DepDel15_count", T.LongType()),
-        T.StructField("DepDel15_sum", T.DoubleType()),
-        T.StructField("DepDelayMinutes_mean", T.DoubleType()),
-        T.StructField("Is_Cancelled_sum", T.LongType()),
-        T.StructField("CarrierDelay_sum", T.DoubleType()),
-        T.StructField("WeatherDelay_sum", T.DoubleType()),
-        T.StructField("NASDelay_sum", T.DoubleType()),
-        T.StructField("LateAircraftDelay_sum", T.DoubleType()),
-        T.StructField("on_time_rate", T.DoubleType()),
-    ]
-)
-
-# Output contract of the geo aggregation (src/aggregate_flight_data.py:51-79).
-AIRPORT_PERFORMANCE_SCHEMA = T.StructType(
-    [
-        T.StructField("airline_name", T.StringType()),
-        T.StructField("month", T.IntegerType()),
-        T.StructField("origin_city", T.StringType()),
-        T.StructField("total_flights", T.LongType()),
-        T.StructField("delayed_flights", T.DoubleType()),
-        T.StructField("lat", T.DoubleType()),
-        T.StructField("lon", T.DoubleType()),
-    ]
-)
-
-# The dashboard's caches, in publish order: each one's directory name under
-# the refresh's output directory → its schema.
-CACHES = {
-    "airline_monthly_performance": AIRLINE_MONTHLY_SCHEMA,
-    "airport_performance": AIRPORT_PERFORMANCE_SCHEMA,
-}
+# The caches' columns are ``io.CACHES``' DDL text; these two names are the
+# same strings, kept because the benchmark's serve workload imports them.
+AIRLINE_MONTHLY_SCHEMA, AIRPORT_PERFORMANCE_SCHEMA = CACHES.values()
